@@ -602,20 +602,9 @@ class MiniConsumer:
                             continue
                         if err != P.ERR_NONE:
                             raise OSError(f"fetch {topic}/{pid}: error {err}")
-                        for r in P.decode_message_set(mset or b""):
-                            if r.offset < self._positions[(topic, pid)]:
-                                continue  # duplicate below our position — drop
-                            if budget is not None and budget <= 0:
-                                break
-                            out.append(
-                                ConsumerRecord(
-                                    topic, pid, r.offset, r.timestamp,
-                                    r.key, r.value,
-                                )
-                            )
-                            self._positions[(topic, pid)] = r.offset + 1
-                            if budget is not None:
-                                budget -= 1
+                        budget = self._take_records(
+                            out, topic, pid, mset or b"", budget
+                        )
             if not moved:
                 break
             if attempt == 1:
@@ -623,6 +612,49 @@ class MiniConsumer:
             self._router.refresh(sorted({t for t, _p in moved}))
             pending = moved
         return out
+
+    def _take_records(
+        self, out: list, topic: str, pid: int, mset: bytes,
+        budget: int | None,
+    ) -> int | None:
+        """Append one partition's message set to ``out`` and advance its
+        position; returns the remaining record budget.  The set is
+        parsed columnar (``decode_message_set_columns``, the Spark
+        source's path).  A record is kept when its offset is past both
+        the position and every record kept before it — the rule a
+        record-at-a-time walk applies when it drops duplicates below
+        its advancing position (a gzip wrapper fetched from mid-set
+        re-delivers its earlier inner records)."""
+        import numpy as np
+        import pyarrow as pa
+
+        offs, tss, keys, vals = P.decode_message_set_columns(mset)
+        if not len(offs):
+            return budget
+        floor = np.empty(len(offs), np.int64)
+        floor[0] = self._positions[(topic, pid)] - 1
+        np.maximum.accumulate(offs[:-1], out=floor[1:])
+        np.maximum(floor, floor[0], out=floor)
+        keep = np.flatnonzero(offs > floor)
+        if budget is not None:
+            keep = keep[:max(budget, 0)]
+            budget -= len(keep)
+        if not len(keep):
+            return budget
+        if len(keep) < len(offs):
+            idx = pa.array(keep)
+            keys, vals = keys.take(idx), vals.take(idx)
+            offs, tss = offs[keep], tss[keep]
+        out.extend(
+            map(
+                ConsumerRecord,
+                itertools.repeat(topic), itertools.repeat(pid),
+                offs.tolist(), tss.tolist(),
+                keys.to_pylist(), vals.to_pylist(),
+            )
+        )
+        self._positions[(topic, pid)] = int(offs[-1]) + 1
+        return budget
 
     def close(self) -> None:
         self._router.close()

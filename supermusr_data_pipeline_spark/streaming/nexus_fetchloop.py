@@ -27,18 +27,36 @@ What stays identical to the direct door (streaming/nexus_direct.py):
   run_engine/run/run_parameters.rs:156-175) with per-run continuation
   totals;
 * the sink LAYOUT — ``run_name=<escaped>`` partition directories of
-  snappy Parquet with the NEXUS event schema, byte-compatible with
+  snappy Parquet with the NEXUS event schema, schema-compatible with
   what ``partitionBy("run_name")`` produces, so every downstream
-  Spark/DuckDB query reads this door's output unchanged;
+  Spark/DuckDB query reads this door's output unchanged.  Part files
+  are written without dictionary pages and with DELTA_BINARY_PACKED
+  int64 columns (the event columns are high-cardinality, so a
+  dictionary only costs write time); Spark, DuckDB and pyarrow read
+  them like any other Parquet;
 * crash safety by WRITE-AHEAD INTENT + state sidecar (tmp+rename, one
   small file each — S3-PUT-portable, as nexus_direct documents).
 
 What changes: decode (``dev2_arrow_batch``, the same vectorized
 whole-column walker the wire source fuses), assembly bookkeeping, and
-the Parquet append all run in the loop thread on Arrow tables — no
-Spark job in the hot path, so commit latency is poll cadence + decode
-+ append (~tens of ms at the 32x500 shape) instead of the micro-batch
-cycle.  The INTENT here is strictly STRONGER than the direct door's:
+the Parquet append all run in-process on Arrow tables — no Spark job
+in the hot path, so commit latency is poll cadence + decode + append
+(~tens of ms at the 32x500 shape) instead of the micro-batch cycle.
+The consumer parses each fetch column-wise; admission groups a poll's
+rows by frame key with one sort and keeps row indices, and the per-run
+tables are built with one gather or repeat per column.
+
+Two threads share the work.  The loop thread polls, decodes, runs the
+FSM, picks each dispatch and builds its run tables; the commit TAIL of
+a dispatch (stage -> intent -> publish -> state -> ``on_commit``) runs
+on one committer thread while the loop thread makes its next poll and
+decodes it.  Only ONE tail is ever in flight: the loop waits for it
+before touching the FSM, cursor or totals, so the intent and state
+files hold exactly what a single thread would have written and every
+crash point below is unchanged.  ``poll_once()`` (tests, crash
+fixtures) runs the tail inline and returns after it.
+
+The INTENT here is strictly STRONGER than the direct door's:
 it carries the tmp->final RENAME LIST of part files already staged on
 disk, so recovery can FINISH a half-landed multi-run append
 idempotently per-run (atomic renames) instead of only deciding
@@ -109,6 +127,8 @@ import json
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -132,11 +152,50 @@ _EVENT_SCHEMA = pa.schema(
     ]
 )
 
+# event columns of the sink <- list columns of the decoded batch
+_EVENT_LISTS = (
+    ("event_time_offset", "event_time"),
+    ("event_id", "channel"),
+    ("pulse_height", "event_voltage"),
+)
+
+# part files: no dictionary pages (the event columns are high-cardinality,
+# so a dictionary is built and then abandoned) and delta-encoded int64s
+_PART_WRITE_OPTIONS = dict(
+    compression="snappy",
+    use_dictionary=False,
+    column_encoding={
+        f.name: "DELTA_BINARY_PACKED"
+        for f in _EVENT_SCHEMA
+        if f.type == pa.int64()
+    },
+)
+
+
+def _flat_lists(batches: list[pa.RecordBatch], name: str):
+    """One list column over several decoded batches, flattened into a
+    global row space: (row start, row length, values), so any set of
+    rows gathers with one numpy index."""
+    starts, lens, values = [], [], []
+    base = 0
+    for rb in batches:
+        col = rb.column(name)
+        offs = col.offsets.to_numpy().astype(np.int64)
+        starts.append(offs[:-1] + base)
+        lens.append(np.diff(offs))
+        values.append(col.values.to_numpy(zero_copy_only=False))
+        base += len(col.values)
+    if len(batches) == 1:
+        return starts[0], lens[0], values[0]
+    return (
+        np.concatenate(starts), np.concatenate(lens),
+        np.concatenate(values),
+    )
 
 
 class _FrameState:
     __slots__ = (
-        "dids", "veto", "first_ms", "n_events", "batches", "floor",
+        "dids", "veto", "first_ms", "n_events", "parts", "floor",
         "complete",
     )
 
@@ -148,9 +207,9 @@ class _FrameState:
         # aev2 input: the message CARRIES the completeness verdict (the
         # aggregator already judged it); None = derive from dids
         self.complete: bool | None = None
-        # per-arrival single-frame Arrow slices (decoded rows belonging
-        # to this frame), concatenated at dispatch
-        self.batches: list[pa.RecordBatch] = []
+        # per-arrival (decoded batch, row indices of this frame in it);
+        # the rows are gathered per run at dispatch, never copied before
+        self.parts: list[tuple[pa.RecordBatch, np.ndarray]] = []
         # the fetch cursor as of this frame's FIRST arrival: the
         # persisted cursor never advances past the oldest pending floor,
         # so a crash replays every record this frame had admitted
@@ -271,6 +330,9 @@ class FetchLoopNexusWriter:
         self._loaded = False
         self._consumer = None
         self._thread: threading.Thread | None = None
+        # the loop's commit tails run here, one at a time (start())
+        self._committer: ThreadPoolExecutor | None = None
+        self._tail = None  # Future of the in-flight tail
         self._stop = threading.Event()
         self._lock = threading.Lock()
         self.loop_error: BaseException | None = None
@@ -463,29 +525,39 @@ class FetchLoopNexusWriter:
         if self._thread is not None:
             raise RuntimeError("already started")
         self._stop.clear()
+        self._committer = ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix="nexus-fetchloop-commit"
+        )
 
         def _loop():
             try:
-                with self._lock:
-                    self._load_state()
-                # the consumer dials lazily inside poll_once, so a
-                # TRANSIENT startup failure (broker mid-bounce, group
-                # coordination race) lands in the same retry path as a
-                # mid-stream disconnect instead of killing the loop;
-                # _load_state failures above still fail loudly
-                while not self._stop.is_set():
+                try:
+                    with self._lock:
+                        self._load_state()
+                    # the consumer dials lazily inside the cycle, so a
+                    # TRANSIENT startup failure (broker mid-bounce, group
+                    # coordination race) lands in the same retry path as
+                    # a mid-stream disconnect instead of killing the
+                    # loop; _load_state failures above still fail loudly
+                    while not self._stop.is_set():
+                        try:
+                            self._cycle(None, overlap=True)
+                        except (OSError, ConnectionError):
+                            # broker bounce / leadership move the router
+                            # retry did not absorb: re-dial and continue
+                            # from the in-memory cursor (the reference's
+                            # reconnect posture, common/src/lib.rs:72-94)
+                            with self._lock:
+                                if self._consumer is not None:
+                                    self._consumer.close()
+                                    self._consumer = None
+                            self._stop.wait(0.1)
+                finally:
+                    # the last dispatch lands before the loop ends
                     try:
-                        self.poll_once()
-                    except (OSError, ConnectionError):
-                        # broker bounce / leadership move the router
-                        # retry did not absorb: re-dial and continue
-                        # from the in-memory cursor (the reference's
-                        # reconnect posture, common/src/lib.rs:72-94)
-                        with self._lock:
-                            if self._consumer is not None:
-                                self._consumer.close()
-                                self._consumer = None
-                        self._stop.wait(0.1)
+                        self._join_tail()
+                    finally:
+                        self._committer.shutdown()
             except BaseException as e:  # surfaced via check_error()
                 self.loop_error = e
 
@@ -512,7 +584,19 @@ class FetchLoopNexusWriter:
     def poll_once(self, records=None) -> list[int]:
         """One iteration: poll (unless ``records`` is injected by a
         test), admit, dispatch, append, persist.  Returns the committed
-        frame numbers."""
+        frame numbers; the commit has landed when it returns."""
+        return self._cycle(records, overlap=False)
+
+    def _join_tail(self) -> None:
+        """Wait for the in-flight commit tail, re-raising its error."""
+        tail, self._tail = self._tail, None
+        if tail is not None:
+            tail.result()
+
+    def _cycle(self, records, overlap: bool) -> list[int]:
+        """``overlap``: leave this cycle's commit tail running on the
+        committer thread; the next cycle's poll and decode run
+        alongside it."""
         with self._lock:
             self._load_state()
             t0 = time.perf_counter()
@@ -521,15 +605,30 @@ class FetchLoopNexusWriter:
                     self._consumer = self._make_consumer()
                 records = self._consumer.poll(max_wait_ms=self.poll_ms)
             t_poll = time.perf_counter()
-            out = self._process(records)
+            rb = self._decode(records)
+            t_decoded = time.perf_counter()
+            # the FSM, cursor and totals belong to the tail until it ends
+            self._join_tail()
+            t_wait = time.perf_counter()
+            out, tail = self._process(records, rb, t_poll, t_decoded - t_poll)
+            if tail is not None:
+                if overlap:
+                    self._tail = self._committer.submit(tail)
+                else:
+                    tail()
             # per-cycle decomposition (poll wait vs processing, record
             # count) — the loop-throughput attribution the commit_log's
             # per-DISPATCH split cannot give (cycles with no dispatch
-            # never reach it).  Same bounded-ring discipline.
+            # never reach it).  Same bounded-ring discipline.  An
+            # overlapped tail is in neither term: the loop thread only
+            # waits for it (``tail_wait_s``) before touching state.
             self.poll_log.append(
                 {
                     "poll_s": round(t_poll - t0, 5),
-                    "process_s": round(time.perf_counter() - t_poll, 5),
+                    "process_s": round(
+                        t_decoded - t_poll + time.perf_counter() - t_wait, 5
+                    ),
+                    "tail_wait_s": round(t_wait - t_decoded, 5),
                     "n_records": len(records),
                     "n_committed": len(out),
                 }
@@ -538,18 +637,35 @@ class FetchLoopNexusWriter:
                 del self.poll_log[:25_000]
             return out
 
-    def _process(self, records) -> list[int]:
+    def _decode(self, records) -> pa.RecordBatch | None:
+        """The records' values as one decoded Arrow batch (None when no
+        row decodes).  Touches no FSM state, so it runs while a commit
+        tail is still in flight."""
+        if not records:
+            return None
+        from ..sources.decode import aev2_arrow_batch, dev2_arrow_batch
+
+        fn = (
+            dev2_arrow_batch if self.input_format == "dev2"
+            else aev2_arrow_batch
+        )
+        rb = fn(pa.array([r.value for r in records], pa.binary()))
+        return rb if rb.num_rows else None
+
+    def _process(self, records, rb, t_poll: float, decode_s: float):
+        """Admit the poll's decoded rows and pick this cycle's dispatch.
+        Returns (dispatched frame numbers, the commit tail to run or
+        None).  ``t_poll``: when the poll returned; ``decode_s``: the
+        decode time (both for the commit log)."""
         t_start = time.perf_counter()
         now_ms = int(self.clock() * 1000)
         pre_poll = dict(self._offsets)
         new_offsets = dict(self._offsets)
         poll_min: dict[str, int] = {}
-        values = []
         for r in records:
             k = f"{r.topic}/{r.partition}"
             new_offsets[k] = r.offset + 1
             poll_min[k] = min(poll_min.get(k, r.offset), r.offset)
-            values.append(r.value)
         # a frame admitted from this poll can be replayed from here: the
         # pre-poll cursor, extended with this poll's first offset for
         # partitions the cursor has never consumed
@@ -557,23 +673,13 @@ class FetchLoopNexusWriter:
             k: pre_poll.get(k, poll_min.get(k))
             for k in set(pre_poll) | set(poll_min)
         }
-        rb = None
-        if values:
-            from ..sources.decode import aev2_arrow_batch, dev2_arrow_batch
-
-            fn = (
-                dev2_arrow_batch if self.input_format == "dev2"
-                else aev2_arrow_batch
-            )
-            rb = fn(pa.array(values, pa.binary()))
-            if rb.num_rows == 0:
-                rb = None
         if rb is not None:
             if self.input_format == "dev2":
                 self._admit(rb, now_ms, floor_map)
             else:
                 self._admit_aev2(rb, now_ms, floor_map)
         t_decode = time.perf_counter()
+        decode_s += t_decode - t_start
 
         # dispatch: complete now, or first-arrival TTL expired
         dispatch = []
@@ -587,15 +693,18 @@ class FetchLoopNexusWriter:
         for key in [k for k, e in self._tombstones.items() if e <= now_ms]:
             del self._tombstones[key]
 
-        frames: list[int] = []
-        if dispatch:
-            frames = self._dispatch(dispatch, new_offsets, t_start, t_decode)
-        else:
-            self._offsets = new_offsets
-            # no sink effect: the cursor may persist lazily; records not
-            # yet persisted re-poll after a crash and are FSM-idempotent
-            # (duplicates reject, tombstones reject)
-        return frames
+        # the cursor advances now; with nothing dispatched it persists
+        # lazily — records not yet persisted re-poll after a crash and
+        # are FSM-idempotent (duplicates reject, tombstones reject)
+        self._offsets = new_offsets
+        if not dispatch:
+            return [], None
+        dims, per_run, frames = self._match_runs(dispatch)
+        run_tables = self._build_run_tables(dims) if dims else {}
+        return frames, partial(
+            self._commit, dispatch, run_tables, per_run, frames, t_poll,
+            decode_s, t_decode,
+        )
 
     def _admit_aev2(self, rb: pa.RecordBatch, now_ms: int, floor_map) -> None:
         """aev2 admission: every message is one COMPLETE-or-judged frame
@@ -603,21 +712,18 @@ class FetchLoopNexusWriter:
         straight to pending with its carried completeness flag — the
         next dispatch pass emits it immediately (first_ms set past-TTL).
         Tombstones still dedupe re-delivered frame messages."""
-        ts_us = rb.column("ts").cast(pa.int64()).to_numpy(zero_copy_only=False)
-        per = rb.column("period_number").to_numpy(zero_copy_only=False)
-        ppp = rb.column("protons_per_pulse").to_numpy(zero_copy_only=False)
-        run = rb.column("running").to_numpy(zero_copy_only=False)
-        fno = rb.column("frame_number").to_numpy(zero_copy_only=False)
-        veto = rb.column("veto_flags").to_numpy(zero_copy_only=False)
-        comp = rb.column("complete").to_numpy(zero_copy_only=False)
-        n_ev = pa.compute.list_value_length(
-            rb.column("channel")
-        ).to_numpy(zero_copy_only=False)
-        for i in range(rb.num_rows):
-            key = (
-                int(ts_us[i]), int(per[i]), int(ppp[i]), bool(run[i]),
-                int(fno[i]),
-            )
+        col = {
+            name: rb.column(name).to_pylist()
+            for name in ("period_number", "protons_per_pulse", "running",
+                         "frame_number", "veto_flags", "complete")
+        }
+        keys = zip(
+            rb.column("ts").cast(pa.int64()).to_pylist(),
+            col["period_number"], col["protons_per_pulse"], col["running"],
+            col["frame_number"],
+        )
+        n_ev = pa.compute.list_value_length(rb.column("channel")).to_pylist()
+        for i, key in enumerate(keys):
             if key in self._tombstones:
                 # re-delivered after dispatch: reject, re-arm
                 self._tombstones[key] = now_ms + self.tombstone_ttl_ms
@@ -625,16 +731,18 @@ class FetchLoopNexusWriter:
             if key in self._pending:
                 continue  # duplicate within the poll: first copy wins
             fs = _FrameState(now_ms - self.frame_ttl_ms, dict(floor_map))
-            fs.veto = int(veto[i])
-            fs.n_events = int(n_ev[i])
-            fs.complete = bool(comp[i])
-            fs.batches.append(rb.take(pa.array([i], pa.int64())))
+            fs.veto = col["veto_flags"][i]
+            fs.n_events = n_ev[i]
+            fs.complete = col["complete"][i]
+            fs.parts.append((rb, np.array([i])))
             self._pending[key] = fs
 
     def _admit(self, rb: pa.RecordBatch, now_ms: int, floor_map) -> None:
         """The FSM over one decoded Arrow batch: group rows by frame
         key, apply tombstone / duplicate rules, accumulate veto + event
-        counts, stash each frame's row slice for its dispatch."""
+        counts, keep each frame's row indices for its dispatch.  One
+        sort groups the rows; the Python step is per frame key, not
+        per row."""
         ts_us = rb.column(1).cast(pa.int64()).to_numpy(zero_copy_only=False)
         per = rb.column(2).to_numpy(zero_copy_only=False)
         ppp = rb.column(3).to_numpy(zero_copy_only=False)
@@ -642,19 +750,27 @@ class FetchLoopNexusWriter:
         fno = rb.column(5).to_numpy(zero_copy_only=False)
         did = rb.column(0).to_numpy(zero_copy_only=False)
         veto = rb.column(6).to_numpy(zero_copy_only=False)
-        ch = rb.column(7)
-        n_ev = pa.compute.list_value_length(ch).to_numpy(zero_copy_only=False)
-        order = np.lexsort((veto, n_ev, did, fno, ts_us))
-        keep_rows: dict[tuple, list[int]] = {}
-        for i in map(int, order):
-            key = (
-                int(ts_us[i]), int(per[i]), int(ppp[i]), bool(run[i]),
-                int(fno[i]),
-            )
+        n_ev = pa.compute.list_value_length(rb.column(7)).to_numpy(
+            zero_copy_only=False
+        )
+        # frame key major, then digitiser: among duplicate (frame,
+        # digitiser) rows the one with the fewest events (then lowest
+        # veto, then earliest) wins, as in the direct door
+        order = np.lexsort((veto, n_ev, did, run, ppp, per, fno, ts_us))
+        key_cols = [c[order] for c in (ts_us, per, ppp, run, fno)]
+        did, veto, n_ev = did[order], veto[order], n_ev[order]
+        new_key = np.zeros(len(order), bool)
+        new_key[0] = True
+        for c in key_cols:
+            new_key[1:] |= c[1:] != c[:-1]
+        first_did = new_key.copy()
+        first_did[1:] |= did[1:] != did[:-1]
+        starts = np.flatnonzero(new_key)
+        ends = np.append(starts[1:], len(order)).tolist()
+        keys = zip(*(c[starts].tolist() for c in key_cols))
+        for key, lo, hi in zip(keys, starts.tolist(), ends):
             if key in self._tombstones:
-                self._tombstones[key] = (
-                    int(self.clock() * 1000) + self.tombstone_ttl_ms
-                )
+                self._tombstones[key] = now_ms + self.tombstone_ttl_ms
                 continue
             fs = self._pending.get(key)
             if fs is None:
@@ -665,17 +781,16 @@ class FetchLoopNexusWriter:
                 # replay point (older floors stay — they are smaller)
                 for k, v in floor_map.items():
                     fs.floor.setdefault(k, v)
-            d = int(did[i])
-            if d in fs.dids:
-                continue  # duplicate (frame, digitiser): reject wholesale
-            fs.dids.add(d)
-            fs.veto |= int(veto[i])
-            fs.n_events += int(n_ev[i])
-            keep_rows.setdefault(key, []).append(i)
-        for key, idxs in keep_rows.items():
-            self._pending[key].batches.append(
-                rb.take(pa.array(sorted(idxs), pa.int64()))
-            )
+            sel = lo + np.flatnonzero(first_did[lo:hi])
+            if fs.dids:
+                # duplicate (frame, digitiser) across polls: reject
+                sel = sel[~np.isin(did[sel], list(fs.dids))]
+                if not len(sel):
+                    continue
+            fs.dids.update(did[sel].tolist())
+            fs.veto |= int(np.bitwise_or.reduce(veto[sel]))
+            fs.n_events += int(n_ev[sel].sum())
+            fs.parts.append((rb, np.sort(order[sel])))
 
     def _match_runs(self, dispatch):
         """Identical decision table to DirectNexusWriter._match_runs
@@ -709,86 +824,94 @@ class FetchLoopNexusWriter:
     def _build_run_tables(self, dims) -> dict[str, pa.Table]:
         """The posexplode equivalent in Arrow, grouped PER RUN: repeat
         each frame's dim row across its event arrays; a zero-event frame
-        contributes one null-event row.  Building per-run tables
-        directly (instead of one table with a run_name column filtered
-        per run) skips the string column, the equality masks, and the
-        filter passes — with the numpy-backed constant columns this
-        halved the dominant ``parts`` term of the commit at 2x the bar
-        shape (64x500)."""
-        per_run: dict[str, list[pa.Table]] = {}
-        for run_name, key, fs, seq, etz, idx in dims:
-            if fs.batches:
-                ev = pa.Table.from_batches(fs.batches)
-                ch = ev.column("channel").combine_chunks()
-                n = int(
-                    pa.compute.sum(
-                        pa.compute.list_value_length(ch)
-                    ).as_py()
-                    or 0
-                )
+        contributes one null-event row.  Per run, each column is one
+        numpy call: a gather of the frames' event values out of the
+        decoded batches, or a repeat of the per-frame constants."""
+        bases: dict[int, int] = {}  # id(batch) -> first global row
+        batches: list[pa.RecordBatch] = []
+        n_rows = 0
+        for _run, _key, fs, *_ in dims:
+            for rb, _idx in fs.parts:
+                if id(rb) not in bases:
+                    bases[id(rb)] = n_rows
+                    batches.append(rb)
+                    n_rows += rb.num_rows
+        lists = {src: _flat_lists(batches, src) for _dst, src in _EVENT_LISTS}
+        per_run: dict[str, list] = {}
+        for d in dims:
+            per_run.setdefault(d[0], []).append(d)
+        return {
+            run: self._run_table(ds, bases, lists)
+            for run, ds in per_run.items()
+        }
+
+    def _run_table(self, dims, bases, lists) -> pa.Table:
+        """One run's rows: its frames in ``dims`` order, each frame's
+        rows in arrival order."""
+        fss = [fs for _run, _key, fs, *_ in dims]
+        rows = np.concatenate(
+            [np.empty(0, np.int64)]
+            + [bases[id(rb)] + idx for fs in fss for rb, idx in fs.parts]
+        )
+        n_ev = np.array([fs.n_events for fs in fss], np.int64)
+        reps = np.maximum(n_ev, 1)
+        valid = None
+        if not n_ev.all():
+            # a zero-event frame's one row carries null event values
+            valid = np.ones(int(reps.sum()), bool)
+            valid[(np.cumsum(reps) - reps)[n_ev == 0]] = False
+
+        def _const(vals, dtype):
+            return pa.array(np.repeat(np.asarray(vals, dtype), reps))
+
+        gathers: list[tuple] = []  # (row_start, row_len, event index)
+
+        def _gather(row_start, row_len):
+            # the decoder gives every event list of a message the same
+            # length, so the three columns usually share one index
+            for st, ln, idx in gathers:
+                if np.array_equal(st, row_start) and np.array_equal(
+                    ln, row_len
+                ):
+                    return idx
+            start, ln = row_start[rows], row_len[rows]
+            idx = np.repeat(start - (np.cumsum(ln) - ln), ln)
+            idx += np.arange(len(idx))
+            gathers.append((row_start, row_len, idx))
+            return idx
+
+        def _events(dst, src):
+            row_start, row_len, values = lists[src]
+            ev = values[_gather(row_start, row_len)]
+            if valid is None:
+                arr = pa.array(ev)
             else:
-                n = 0
-            complete = (
-                fs.complete if fs.complete is not None
-                else sorted(fs.dids) == self.expected
-            )
-            if n == 0:
-                per_run.setdefault(run_name, []).append(
-                    pa.table(
-                        {
-                            "frame_seq": [seq],
-                            "event_time_zero": [etz],
-                            "event_index": [idx],
-                            "period_number": [key[1]],
-                            "frame_number": [key[4]],
-                            "frame_complete": [complete],
-                            "running": [key[3]],
-                            "veto_flags": pa.array(
-                                [fs.veto], pa.int32()
-                            ),
-                            "event_time_offset": pa.array(
-                                [None], pa.int64()
-                            ),
-                            "event_id": pa.array([None], pa.int32()),
-                            "pulse_height": pa.array(
-                                [None], pa.float64()
-                            ),
-                        },
-                        schema=_EVENT_SCHEMA,
-                    )
-                )
-                continue
-            times = ev.column("event_time").combine_chunks()
-            volts = ev.column("event_voltage").combine_chunks()
+                full = np.zeros(len(valid), ev.dtype)
+                full[valid] = ev
+                arr = pa.array(full, mask=~valid)
+            return arr.cast(_EVENT_SCHEMA.field(dst).type)
 
-            def _rep(val, dtype, n=n):
-                # np.full + zero-copy into Arrow: ~2x faster than
-                # materializing a python list per constant column
-                return pa.array(np.full(n, val, dtype))
-
-            per_run.setdefault(run_name, []).append(
-                pa.table(
-                    {
-                        "frame_seq": _rep(seq, np.int64),
-                        "event_time_zero": _rep(etz, np.int64),
-                        "event_index": _rep(idx, np.int64),
-                        "period_number": _rep(key[1], np.int64),
-                        "frame_number": _rep(key[4], np.int64),
-                        "frame_complete": _rep(complete, bool),
-                        "running": _rep(key[3], bool),
-                        "veto_flags": _rep(fs.veto, np.int32),
-                        "event_time_offset": times.flatten().cast(
-                            pa.int64()
-                        ),
-                        "event_id": ch.flatten().cast(pa.int32()),
-                        "pulse_height": volts.flatten().cast(
-                            pa.float64()
-                        ),
-                    },
-                    schema=_EVENT_SCHEMA,
-                )
-            )
-        return {r: pa.concat_tables(cs) for r, cs in per_run.items()}
+        return pa.Table.from_arrays(
+            [
+                _const([d[3] for d in dims], np.int64),
+                _const([d[4] for d in dims], np.int64),
+                _const([d[5] for d in dims], np.int64),
+                _const([d[1][1] for d in dims], np.int64),
+                _const([d[1][4] for d in dims], np.int64),
+                _const(
+                    [
+                        fs.complete if fs.complete is not None
+                        else sorted(fs.dids) == self.expected
+                        for fs in fss
+                    ],
+                    bool,
+                ),
+                _const([d[1][3] for d in dims], bool),
+                _const([fs.veto for fs in fss], np.int32),
+                *(_events(dst, src) for dst, src in _EVENT_LISTS),
+            ],
+            schema=_EVENT_SCHEMA,
+        )
 
     def _write_run_tmp(self, run_name: str, table: pa.Table) -> list[str]:
         """Stage one run's rows as a hidden tmp part file; returns the
@@ -805,11 +928,7 @@ class FetchLoopNexusWriter:
         before the publish rename and the directory after it."""
         tmp, final = self._alloc_part(run_name)
         try:
-            pq.write_table(
-                table.cast(_EVENT_SCHEMA), tmp, compression="snappy"
-            )
-            if self._fsync:
-                _fsync_path(tmp)
+            self._write_part(table, tmp)
         except BaseException:
             # the dispatch never committed (no intent yet): drop the
             # partial tmp now rather than leaving it for the next
@@ -821,6 +940,13 @@ class FetchLoopNexusWriter:
                 pass
             raise
         return [tmp, final]
+
+    def _write_part(self, table: pa.Table, path: str) -> None:
+        """Write one staged part (every staging path goes through here,
+        so the write options live in one place)."""
+        pq.write_table(table.cast(_EVENT_SCHEMA), path, **_PART_WRITE_OPTIONS)
+        if self._fsync:
+            _fsync_path(path)
 
     def _alloc_part(self, run_name: str) -> list[str]:
         """Allocate one part's (tmp, final) path pair — single-threaded
@@ -839,11 +965,11 @@ class FetchLoopNexusWriter:
         return [tmp, final]
 
     # large dispatches split into slices written concurrently: pyarrow's
-    # parquet writer releases the GIL, and the write was the dominant
-    # commit term at 4x the bar shape (58 ms of a ~105 ms cycle at
-    # 128x500).  Below the threshold (the steady 32x500 path commits
-    # one ~16k-row frame per cycle) staging stays single-file — thread
-    # spawn would only add overhead there.
+    # parquet writer releases the GIL, and the write is the dominant
+    # commit term.  At the 32x500 shape a paced 50 frames/s stream
+    # commits one ~16k-row frame per cycle and stages it single-file
+    # (thread spawn would only add overhead there); a backlogged loop
+    # commits ~16 frames (~256k rows) per cycle, staged as two slices.
     _STAGE_SLICE_ROWS = 131_072
 
     def _stage_run_tables(self, run_tables: dict) -> list[list[str]]:
@@ -882,12 +1008,7 @@ class FetchLoopNexusWriter:
                     return
                 pair, tbl = allocated[i]
                 try:
-                    pq.write_table(
-                        tbl.cast(_EVENT_SCHEMA), pair[0],
-                        compression="snappy",
-                    )
-                    if self._fsync:
-                        _fsync_path(pair[0])
+                    self._write_part(tbl, pair[0])
                 except BaseException as e:  # re-raised below
                     errors.append(e)
                     return
@@ -954,26 +1075,29 @@ class FetchLoopNexusWriter:
             for d in dirs:
                 _fsync_path(d)
 
-    def _dispatch(
-        self, dispatch, new_offsets, t_start, t_decode
-    ) -> list[int]:
-        dims, per_run, frames = self._match_runs(dispatch)
-        if not dims:
+    def _commit(
+        self, dispatch, run_tables, per_run, frames, t_poll, decode_s,
+        t_decode,
+    ) -> None:
+        """The commit tail of one dispatch: stage -> intent -> publish ->
+        state -> ``on_commit``.  Reads the cursor, FSM and totals the
+        loop left for it; the loop touches none of them until it ends.
+        Logged: ``total_s`` from the poll's return to the commit
+        (including any wait for the previous tail), ``decode_s`` the
+        decode and admission work alone."""
+        if not run_tables:
             # no run matched: frames drop (as the other doors), but the
             # cursor still advances through a persisted state write
-            self._offsets = new_offsets
             self._save_state()
             if self.on_commit is not None:
                 self.on_commit([])
-            return []
-        run_tables = self._build_run_tables(dims)
+            return
 
         # stage: each run's rows land ONCE, as a hidden tmp part file
         # (step 2 of the protocol) — the intent then only needs the
-        # rename list, not a copy of the event table.  The cursor must
-        # be computed with the NEW fetch position already in place so
-        # non-pending partitions commit.
-        self._offsets = new_offsets
+        # rename list, not a copy of the event table.  The cursor
+        # already holds the NEW fetch position, so non-pending
+        # partitions commit.
         os.makedirs(self.state_dir, exist_ok=True)
         deltas = {
             run: (
@@ -1034,11 +1158,11 @@ class FetchLoopNexusWriter:
         self.commit_log.append(
             {
                 "n_frames": len(frames),
-                "decode_s": round(t_decode - t_start, 5),
+                "decode_s": round(decode_s, 5),
                 "parts_s": round(t_parts - t_decode, 5),
                 "intent_s": round(t_intent - t_parts, 5),
                 "publish_s": round(t_publish - t_intent, 5),
-                "total_s": round(time.perf_counter() - t_start, 5),
+                "total_s": round(time.perf_counter() - t_poll, 5),
             }
         )
         if len(self.commit_log) > 20_000:
@@ -1048,4 +1172,3 @@ class FetchLoopNexusWriter:
             del self.commit_log[:10_000]
         if self.on_commit is not None:
             self.on_commit(sorted(set(frames)))
-        return frames

@@ -570,3 +570,110 @@ def test_assign_malformed_shapes_rejected():
         for bad in ("[0,1]", "{}", '{"t": 3}'):
             with pytest.raises(ValueError, match="assign"):
                 consumer_from_options({**base, "assign": bad})
+
+
+class _CannedRouter:
+    """One leader whose fetch response carries fixed message sets."""
+
+    def __init__(self, msets):
+        self.msets = msets  # (topic, pid) -> message-set bytes
+
+    def group_by_leader(self, tps):
+        return {"leader:0": list(tps)}
+
+    def conn(self, _addr):
+        return self
+
+    def request(self, api_key, _version, body):
+        assert api_key == P.API_FETCH
+        _rid, _wait, _min, topics = P.decode_fetch_request(P.Cursor(body))
+        return P.Cursor(P.encode_fetch_response([
+            (t, [(p, P.ERR_NONE, 0, self.msets.get((t, p), b""))
+                 for p, _off, _max in parts])
+            for t, parts in topics
+        ]))
+
+
+def _canned_consumer(msets, positions, max_poll_records):
+    c = MiniConsumer.__new__(MiniConsumer)
+    c._router = _CannedRouter(msets)
+    c._positions = dict(positions)
+    c.max_poll_records = max_poll_records
+    return c
+
+
+def _record_walk(msets, positions, budget):
+    """The record-at-a-time consumer rule over decode_message_set: drop
+    records below the advancing position, stop at the budget."""
+    pos, out = dict(positions), []
+    for tp in sorted(pos):
+        for r in P.decode_message_set(msets.get(tp, b"")):
+            if r.offset < pos[tp]:
+                continue
+            if budget is not None and budget <= 0:
+                break
+            out.append((*tp, r.offset, r.timestamp, r.key, r.value))
+            pos[tp] = r.offset + 1
+            if budget is not None:
+                budget -= 1
+    return out, pos
+
+
+def test_consumer_poll_parse_matches_record_decoder():
+    """MiniConsumer.poll parses fetches column-wise; it must return the
+    records (topic, partition, offset, timestamp, key, value) and the
+    positions of a record-at-a-time walk over decode_message_set, for
+    plain, gzip-wrapped and truncated sets, null keys, records below
+    the position, and every max_poll_records budget."""
+    import os
+    import random
+
+    random.seed(20261017)
+
+    def recs(n):
+        return [
+            (
+                random.randrange(0, 2**40),
+                None if random.random() < 0.4
+                else os.urandom(random.randrange(0, 8)),
+                None if random.random() < 0.05
+                else os.urandom(random.randrange(1, 200)),
+            )
+            for _ in range(n)
+        ]
+
+    seen = {"null_key": False, "dropped": False, "capped": False}
+    for case in range(40):
+        plain = P.encode_message_set(recs(6), base_offset=100)
+        # a wrapper fetched from mid-set re-delivers its earlier records
+        wrapped = P.encode_message_set(
+            recs(5), base_offset=40, compression="gzip"
+        ) + P.encode_message_set(recs(3), base_offset=45)
+        mixed = P.encode_message_set(recs(4), base_offset=7) + (
+            P.encode_message_set(recs(4), base_offset=11, compression="gzip")
+        )
+        mixed = mixed[: random.randrange(len(mixed) - 30, len(mixed))]
+        msets = {("a", 0): plain, ("a", 1): wrapped, ("b", 0): mixed}
+        positions = {
+            ("a", 0): random.choice([0, 100, 103, 106]),
+            ("a", 1): random.choice([40, 42, 45, 47]),
+            ("b", 0): random.choice([0, 9, 12]),
+            ("b", 1): 5,  # nothing fetched
+        }
+        for budget in (None, 0, 1, 4, 9, 50):
+            want, want_pos = _record_walk(msets, positions, budget)
+            c = _canned_consumer(msets, positions, budget)
+            got = [
+                (r.topic, r.partition, r.offset, r.timestamp, r.key, r.value)
+                for r in c.poll(max_wait_ms=0)
+            ]
+            assert got == want, (case, budget)
+            assert c.positions() == want_pos, (case, budget)
+            if budget is None:
+                seen["null_key"] |= any(r[4] is None for r in got)
+                seen["dropped"] |= len(got) < sum(
+                    len(P.decode_message_set(m)) for m in msets.values()
+                )
+                seen["capped"] |= len(got) > 9
+    # the cases exercised every rule above
+    assert all(seen.values()), seen

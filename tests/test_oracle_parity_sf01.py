@@ -24,13 +24,6 @@ from tests.test_oracle_parity import _normalize
 # parity + plan audits
 pytestmark = pytest.mark.slow
 
-
-# slow set (pytest.ini deselects by default; opt in with -m slow):
-# multi-minute soak / streaming end-to-end / large-SF coverage whose
-# operators' value-correctness stays pinned by the default sf0.001
-# parity + plan audits
-pytestmark = pytest.mark.slow
-
 SF01 = "/root/testdata/sf0.1"
 
 # every query registered with an oracle FACTORY (callable of sf_dir)

@@ -144,13 +144,6 @@ from datetime import datetime, timezone
 
 from pyspark.sql import functions as F
 
-
-# slow set (pytest.ini deselects by default; opt in with -m slow):
-# multi-minute soak / streaming end-to-end / large-SF coverage whose
-# operators' value-correctness stays pinned by the default sf0.001
-# parity + plan audits
-pytestmark = pytest.mark.slow
-
 FRAMES_SCHEMA = (
     "ts timestamp, period_number long, protons_per_pulse int, running boolean, "
     "frame_number long, veto_flags int, complete boolean, "
