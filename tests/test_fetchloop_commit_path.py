@@ -2,10 +2,11 @@
 
 Records are injected through ``poll_once(records=...)`` or served by a
 scripted consumer handed to ``start()`` as ``consumer_factory``, so the
-loop's committer thread runs each dispatch's commit tail while the
-loop thread polls.  The sink is read back with pyarrow and compared
-with a per-frame reference built from the decoded messages; crashes
-are injected at every step of an overlapped commit tail."""
+loop's committer thread runs each multi-frame dispatch's commit tail
+while the loop thread polls (a one-frame dispatch commits inline).  The
+sink is read back with pyarrow and compared with a per-frame reference
+built from the decoded messages; crashes are injected at every step of
+an overlapped commit tail."""
 
 import os
 import random
@@ -278,9 +279,11 @@ def test_inline_polls_match_per_frame_reference(tmp_path, fmt):
 
 @pytest.mark.parametrize("fmt", ["dev2", "aev2"])
 def test_loop_overlaps_tail_and_matches_reference(tmp_path, fmt):
-    """Through start(): every tail runs on the committer thread, the
-    next poll runs while a tail is in flight, one commit_log entry per
-    on_commit, in order — and the sink equals the reference."""
+    """Through start(): a multi-frame dispatch's tail runs on the
+    committer thread and the next poll runs while it is in flight; a
+    one-frame dispatch commits inline on the loop thread.  One
+    commit_log entry per on_commit, in order — and the sink equals the
+    reference."""
     tape = _dev2_tape() if fmt == "dev2" else _aev2_tape()
     runs = (RUN_A, RUN_B)
     now = [1_000_000.0]
@@ -288,12 +291,12 @@ def test_loop_overlaps_tail_and_matches_reference(tmp_path, fmt):
     consumer = _ScriptedConsumer(
         _records([p for _poll, p, _ok in tape]), chunks, now
     )
-    calls, tail_threads = [], set()
+    calls, tail_threads = [], []
     overlapped = []
     w = None
 
     def on_commit(frames):
-        tail_threads.add(threading.current_thread().name)
+        tail_threads.append((len(frames), threading.current_thread().name))
         calls.append((len(w.commit_log), frames))
         time.sleep(0.03)  # a slow tail: the loop polls meanwhile
 
@@ -312,7 +315,14 @@ def test_loop_overlaps_tail_and_matches_reference(tmp_path, fmt):
         lambda: len({f for _n, fr in calls for f in fr}) == n_frames
     )
     _stop(w)
-    assert all(n.startswith("nexus-fetchloop-commit") for n in tail_threads)
+    # both tapes dispatch two frames from their first poll, and end
+    # with a one-frame dispatch
+    assert tail_threads[0][0] > 1 and tail_threads[-1][0] == 1
+    for n_frames_committed, thread in tail_threads:
+        if n_frames_committed > 1:
+            assert thread.startswith("nexus-fetchloop-commit")
+        else:
+            assert thread == "nexus-fetchloop"
     assert any(overlapped)
     # each dispatch logged its commit entry before its on_commit call
     assert [n for n, _fr in calls] == list(range(1, len(calls) + 1))
@@ -398,10 +408,11 @@ def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
     now = [1_000_000.0]
     path = tmp_path / "s"
 
-    c1 = _ScriptedConsumer(records, [N_DIG], now)  # one frame per poll
+    # two frames per poll: every dispatch overlaps the next poll
+    c1 = _ScriptedConsumer(records, [2 * N_DIG], now)
     w1 = _writer(path, now, consumer_factory=lambda: c1)
     threads = []
-    _bomb(w1, step, 3, threads)
+    _bomb(w1, step, 2, threads)
     w1.start()
     assert _await(lambda: w1.loop_error is not None)
     with pytest.raises(RuntimeError):
