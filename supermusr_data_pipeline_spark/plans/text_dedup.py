@@ -21,6 +21,8 @@ import threading
 import time
 from collections import OrderedDict
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -1403,17 +1405,13 @@ def q42_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pair graph — every document gets a cluster id (the component's
     minimum doc_id) and a keep/drop flag (canonical = the minimum).
 
-    Scale shape: iterative min-label propagation over the symmetric edge
-    list (the standard Spark formulation of CC; GraphFrames does the same
-    under the hood).  Each iteration is one shuffle join on the edge key;
-    near-dup components are shallow, so convergence takes a handful of
-    rounds; lineage is cut with localCheckpoint so plans don't grow.  The
-    convergence check rides the SAME job as the label update: a _changed
-    flag is computed inside the update select, so per round there is one
-    checkpoint job plus a trivial max() over the already-materialized
-    partitions — not a second labels-vs-new-labels join.  The oracle
-    restates it as a recursive-CTE transitive closure — feasible for DuckDB
-    at test scale, while the Spark path is the one that survives 100 TB.
+    The components come from ``min_label_components`` over the symmetric
+    edge list.  A pair graph of at most ``_CC_DRIVER_MAX_EDGES`` directed
+    edges (sf0.1: ~109k) is collected once and labelled on the driver by a
+    vectorised union-find; a larger one runs the distributed min-label
+    loop.  ``LAST_CC_ROUNDS`` holds the rounds of whichever path ran.  The
+    oracle restates it as a recursive-CTE transitive closure — feasible for
+    DuckDB at test scale.
 
     The label table is a shared materialized intermediate (at scale: a table
     written once per corpus snapshot) — q46 consumes the checkpoint instead
@@ -1426,59 +1424,109 @@ def q42_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds taken by the most recent min_label_components run (CI convergence pin)
 LAST_CC_ROUNDS: int | None = None
 
+# the CC path gate, in directed edge rows: at or below it the edge list is
+# collected to the driver (16 bytes a row: at most 32 MB of Arrow), above
+# it the distributed loop runs
+_CC_DRIVER_MAX_EDGES = 2_000_000
+
 
 def min_label_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Connected components by min-label propagation WITH pointer jumping.
+    """Connected components of a symmetric (u, v) edge list; returns
+    (node bigint, label bigint) where label is the component's minimum node
+    id.
 
-    `edges` is a symmetric (u, v) edge list; returns (node, label) where
-    label is the component's minimum node id.  Each round does (a) the
-    neighbor-min propagation join (the standard Spark CC formulation) and
-    (b) a path-halving join (label ← label's label), which collapses long
-    pointer chains geometrically — a 2^max_rounds-diameter path converges,
-    not just the shallow components plain propagation handles.  Convergence
-    is detected by a _changed flag computed inside the same select as the
-    update (labels only ever decrease), so each round is exactly one job:
-    the max() action doubles as the (lazy) localCheckpoint's materializer.
+    `edges` is persisted and counted once; the count picks the path:
 
-    Memory hygiene: each round's localCheckpoint supersedes the previous
-    round's — once the new one is materialized (localCheckpoint is eager)
-    nothing can reference the old blocks again, so they are unpersisted
-    immediately instead of accumulating one label-table copy per round.
-    `edges` is released in a finally so the non-convergence raise doesn't
-    leak it.  The round count is recorded in ``LAST_CC_ROUNDS`` so CI can
-    pin "near-dup components converge in a handful of rounds" and catch a
-    pair-graph blowup before a cluster bill does."""
-    global LAST_CC_ROUNDS
-    spark = edges.sparkSession
-    sc = spark.sparkContext
+    * at most ``_CC_DRIVER_MAX_EDGES`` rows: ``_driver_components`` collects
+      the edges with one ``toArrow()`` and runs a vectorised union-find on
+      the driver.  A round is one hook pass over the edges that still join
+      two trees; the sf0.01 and sf0.1 pair graphs take 3 and 4.
+    * more: ``_loop_components``, distributed min-label propagation with
+      pointer jumping.  A round is one propagate + jump job.
+
+    Neither path writes session conf, so queries planned concurrently in
+    the same session see the session's own AQE and partition settings.
+    ``LAST_CC_ROUNDS`` records the rounds taken, the last one being the
+    round that found nothing left to change, so CI can pin "near-dup
+    components converge in a handful of rounds" and catch a pair-graph
+    blowup before a cluster bill does; past ``max_rounds`` the call raises
+    "did not converge".  `edges` is released before the call returns or
+    raises."""
     edges = edges.persist()
-    # AQE executes every Exchange as its own query-stage job, so each
-    # round of this loop schedules ~13 jobs whose runtime coalescing and
-    # skew-splitting are no-ops on a small graph — pure scheduling latency
-    # (measured r14 at sf0.1: 66 jobs / 13.2 s with AQE vs 12 jobs / 8.0 s
-    # without, identical rows).  Disable AQE for the loop ONLY when the
-    # materialized edge list is small (the count doubles as the persist's
-    # materializer, so round 1 doesn't compute edges twice); a big graph —
-    # where AQE's coalescing and skew handling earn their jobs — keeps it.
-    aqe_max_edges = int(os.environ.get("SUPERMUSR_CC_AQE_MAX_EDGES", str(2_000_000)))
-    n_edges = edges.count()
-    small_graph = n_edges <= aqe_max_edges
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    parts_before = spark.conf.get("spark.sql.shuffle.partitions")
-    if small_graph:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # with AQE off the loop's exchanges use the static partition count;
-        # a small graph does not need the session default (32 locally, 200+
-        # on a cluster) — every round then runs ~5 fresh 32-task stages
-        # whose per-task codegen warm-up and scheduling dwarf the ~µs of
-        # real work (measured r15: q42 round stages at 8 s summed task time
-        # for <1 MB of shuffle).  Derive the count from the measured edge
-        # count (~64k edge rows per task, floor 8) — the same scale gate as
-        # the AQE switch: a big graph never reaches this branch.
-        loop_parts = max(8, min(int(parts_before), n_edges // 65_536))
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    else:
-        loop_parts = int(parts_before)
+    try:
+        small = edges.count() <= _CC_DRIVER_MAX_EDGES
+        return (_driver_components if small else _loop_components)(edges, max_rounds)
+    finally:
+        edges.unpersist()
+
+
+def _converge(step, max_rounds: int) -> None:
+    """Run ``step`` — one CC round, returning whether it changed anything —
+    until a round changes nothing, recording the count in LAST_CC_ROUNDS."""
+    global LAST_CC_ROUNDS
+    for rounds in range(1, max_rounds + 1):
+        LAST_CC_ROUNDS = rounds
+        if not step():
+            return
+    raise RuntimeError(f"connected components did not converge in {max_rounds} rounds")
+
+
+def _driver_components(edges: DataFrame, max_rounds: int) -> DataFrame:
+    """Union-find over the collected edge list, one numpy pass per round.
+
+    Node ids are replaced by their rank (``np.unique`` sorts), so a smaller
+    index is a smaller id.  A round hooks the larger root of every edge
+    that joins two trees onto the smaller one (``np.minimum.at``: a root
+    with several candidates takes the least), then pointer-jumps until each
+    node points at its root.  A parent is never larger than its child, so
+    a root is the minimum of its tree and, once no edge joins two trees, of
+    its component.  An edge inside one tree never joins two again and is
+    dropped for the next round."""
+    arrow = edges.select("u", "v").toArrow()
+    u, v = arrow.column("u").to_numpy(), arrow.column("v").to_numpy()
+    nodes, ends = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = ends[: len(u)], ends[len(u):]
+    parent = np.arange(len(nodes))
+
+    def hook() -> bool:
+        nonlocal a, b, parent
+        ra, rb = parent[a], parent[b]
+        joins = ra != rb
+        if not joins.any():
+            return False
+        a, b, ra, rb = a[joins], b[joins], ra[joins], rb[joins]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
+        return True
+
+    _converge(hook, max_rounds)
+    return edges.sparkSession.createDataFrame(
+        pa.table({"node": nodes, "label": nodes[parent]})
+    )
+
+
+def _loop_components(edges: DataFrame, max_rounds: int) -> DataFrame:
+    """Distributed min-label propagation WITH pointer jumping.
+
+    Each round does (a) the neighbor-min propagation join (the standard
+    Spark CC formulation) and (b) a path-halving join (label ← label's
+    label), which collapses long pointer chains geometrically — a
+    2^max_rounds-diameter path converges, not just the shallow components
+    plain propagation handles.  Convergence is detected by a _changed flag
+    computed inside the same select as the update (labels only ever
+    decrease), so each round is exactly one job: the max() action doubles
+    as the (lazy) checkpoint's materializer.
+
+    Memory hygiene: each round's checkpoint supersedes the previous
+    round's — once the new one is materialized nothing can reference the
+    old blocks again, so they are unpersisted immediately instead of
+    accumulating one label-table copy per round; a failed run releases its
+    last checkpoint too."""
+    sc = edges.sparkSession.sparkContext
+    # the session's partition count, passed explicitly: AQE never coalesces
+    # a numbered repartition, so both standing sides keep the same layout
+    parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # co-partition the loop's standing inputs ONCE (guide §2.4 "remove
     # shuffles outright: two operations keyed the same way share one
     # exchange").  edges is probed by v every round — persist it already
@@ -1487,75 +1535,67 @@ def min_label_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
     # side of a keyed join plans with zero Exchange), so ending each round
     # partitioned by node moves that shuffle inside the round's checkpoint
     # materialization and every following probe is exchange-free.
-    edges_by_v = edges.repartition(loop_parts, "v").persist()
+    edges_by_v = edges.repartition(parts, "v").persist()
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
     prev_ckpt_ids: set = set()
-    rounds = 0
-    try:
-        for _ in range(max_rounds):
-            rounds += 1
-            nbr_min = (
-                edges_by_v.join(labels, edges_by_v.v == labels.node)
-                .groupBy("u")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            mid = labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
+
+    def propagate() -> bool:
+        nonlocal labels, prev_ckpt_ids
+        nbr_min = (
+            edges_by_v.join(labels, edges_by_v.v == labels.node)
+            .groupBy("u")
+            .agg(F.min("label").alias("nbr_label"))
+        )
+        mid = labels.join(nbr_min, labels.node == nbr_min.u, "left").select(
+            "node",
+            F.col("label").alias("old"),
+            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("mid"),
+        )
+        # pointer jumping: follow the label's own label one hop.  A
+        # SECOND hop per round (doubling) was tried r15 and rejected:
+        # rounds stayed at 5 at sf0.1 — convergence here is bound by
+        # neighbor-min PROPAGATION distance, which extra label hops do
+        # not shorten — so the added per-round join was pure cost.
+        jump = mid.select(F.col("node").alias("jn"), F.col("mid").alias("jl"))
+        new_label = F.least(F.col("mid"), F.coalesce("jl", "mid"))
+        before = _persistent_rdd_ids(sc)
+        # LAZY checkpoint: the convergence agg below is the action that
+        # materializes it, so each round schedules ONE job for
+        # materialize+max instead of two (eager checkpoint job + agg
+        # job) — column pruning cannot cross the checkpoint boundary,
+        # so the agg still materializes every column (r14, guide §1.2:
+        # at 71 jobs/run the per-job scheduling latency WAS the query)
+        new_labels = materialize(
+            mid.join(jump, mid.mid == jump.jn, "left")
+            .select(
                 "node",
-                F.col("label").alias("old"),
-                F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("mid"),
+                new_label.alias("label"),
+                (new_label < F.col("old")).alias("_changed"),
             )
-            # pointer jumping: follow the label's own label one hop.  A
-            # SECOND hop per round (doubling) was tried r15 and rejected:
-            # rounds stayed at 5 at sf0.1 — convergence here is bound by
-            # neighbor-min PROPAGATION distance, which extra label hops do
-            # not shorten — so the added per-round join was pure cost.
-            jump = mid.select(F.col("node").alias("jn"), F.col("mid").alias("jl"))
-            new_label = F.least(F.col("mid"), F.coalesce("jl", "mid"))
-            before = _persistent_rdd_ids(sc)
-            # LAZY checkpoint: the convergence agg below is the action that
-            # materializes it, so each round schedules ONE job for
-            # materialize+max instead of two (eager checkpoint job + agg
-            # job) — column pruning cannot cross the checkpoint boundary,
-            # so the agg still materializes every column (r14, guide §1.2:
-            # at 71 jobs/run the per-job scheduling latency WAS the query)
-            new_labels = materialize(
-                mid.join(jump, mid.mid == jump.jn, "left")
-                .select(
-                    "node",
-                    new_label.alias("label"),
-                    (new_label < F.col("old")).alias("_changed"),
-                )
-                # stored partitioned by node: next round's two labels
-                # probes (propagation join, nbr_min attach) need no
-                # exchange — see the co-partitioning note above the loop
-                .repartition(loop_parts, "node"),
-                eager=False,
-            )
-            changed = new_labels.agg(F.max("_changed")).first()[0]
-            new_ids = _persistent_rdd_ids(sc) - before
-            _unpersist_rdd_ids(sc, prev_ckpt_ids)
-            prev_ckpt_ids = new_ids
-            labels = new_labels.drop("_changed")
-            if not changed:
-                break
-        else:
-            raise RuntimeError(
-                f"connected components did not converge in {max_rounds} rounds "
-                f"(component diameter exceeds ~2^{max_rounds})"
-            )
+            # stored partitioned by node: next round's two labels
+            # probes (propagation join, nbr_min attach) need no
+            # exchange — see the co-partitioning note above the loop
+            .repartition(parts, "node"),
+            eager=False,
+        )
+        changed = new_labels.agg(F.max("_changed")).first()[0]
+        new_ids = _persistent_rdd_ids(sc) - before
+        _unpersist_rdd_ids(sc, prev_ckpt_ids)
+        prev_ckpt_ids = new_ids
+        labels = new_labels.drop("_changed")
+        return bool(changed)
+
+    try:
+        _converge(propagate, max_rounds)
     except BaseException:
         _unpersist_rdd_ids(sc, prev_ckpt_ids)  # nobody will consume it now
         raise
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", parts_before)
         edges_by_v.unpersist()
-        edges.unpersist()
-        LAST_CC_ROUNDS = rounds
     return labels
 
 

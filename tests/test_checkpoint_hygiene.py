@@ -1,6 +1,7 @@
 """Executor-storage hygiene for the iterative/materialized paths: a
-20-round connected-components run must hold ONE label checkpoint, not 20;
-clearing the shared intermediate cache must actually release the blocks;
+20-round run of the distributed connected-components loop must hold ONE
+label checkpoint, not 20, and the driver-path CC must hold none; clearing
+the shared intermediate cache must actually release the blocks;
 LRU eviction must unpersist what it evicts.  At test scale these leaks are
 kilobytes — at 100 TB they are the difference between a pipeline that runs
 for a week and one that OOMs executors on day two."""
@@ -24,7 +25,13 @@ def _chain_edges(spark, n):
     return df.union(df.select(F.col("v"), F.col("u")))
 
 
-def test_cc_holds_one_checkpoint_not_one_per_round(spark):
+@pytest.fixture
+def cc_loop(monkeypatch):
+    """Force the distributed CC loop: no graph is under a gate of -1."""
+    monkeypatch.setattr(text_dedup, "_CC_DRIVER_MAX_EDGES", -1)
+
+
+def test_cc_holds_one_checkpoint_not_one_per_round(spark, cc_loop):
     """A 64-node chain takes several pointer-jumping rounds; only the FINAL
     round's checkpoint may remain persisted when the call returns."""
     sc = spark.sparkContext
@@ -38,7 +45,7 @@ def test_cc_holds_one_checkpoint_not_one_per_round(spark):
     text_dedup._unpersist_rdd_ids(sc, leaked)
 
 
-def test_cc_failure_path_releases_everything(spark):
+def test_cc_failure_path_releases_everything(spark, cc_loop):
     """max_rounds=1 on a deep chain raises — and must not leave the edges
     cache or the last round's checkpoint behind."""
     sc = spark.sparkContext
@@ -48,6 +55,27 @@ def test_cc_failure_path_releases_everything(spark):
     # subset, not equality: Spark's ContextCleaner may concurrently release
     # out-of-scope blocks from EARLIER tests, shrinking the baseline set —
     # the contract here is only "this call added nothing"
+    assert not (_persistent_rdd_ids(sc) - before)
+
+
+def test_cc_driver_path_holds_nothing(spark):
+    """The driver path labels a collected edge list: once the call returns,
+    not even the persisted edges remain."""
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    labels = min_label_components(_chain_edges(spark, 64))
+    assert not (_persistent_rdd_ids(sc) - before)
+    assert text_dedup.LAST_CC_ROUNDS == 2  # one hook round, one to confirm
+    assert labels.count() == 64
+
+
+def test_cc_driver_failure_path_releases_everything(spark):
+    """A too-small max_rounds raises on the driver path too, and leaves no
+    persisted RDD behind."""
+    sc = spark.sparkContext
+    before = _persistent_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        min_label_components(_chain_edges(spark, 64), max_rounds=1)
     assert not (_persistent_rdd_ids(sc) - before)
 
 
@@ -87,6 +115,10 @@ def test_q42_converges_in_few_rounds_at_bench_scale(spark):
     keep components shallow — if a threshold change ever makes the CC round
     count climb, CI catches it before the cluster bill does."""
     text_dedup.clear_shared_cache()
+    # the pair graph is under the CC gate, so the rounds are driver-path
+    # union-find rounds
+    n_pairs = entry_mod.queries()["q25_lsh_near_dup"](spark, SF01_DIR).count()
+    assert 2 * n_pairs <= text_dedup._CC_DRIVER_MAX_EDGES
     entry_mod.queries()["q42_dedup_clusters"](spark, SF01_DIR).count()
     assert text_dedup.LAST_CC_ROUNDS is not None
     assert text_dedup.LAST_CC_ROUNDS <= 8, (

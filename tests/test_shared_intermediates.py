@@ -9,6 +9,7 @@ import __spark_entry__ as entry_mod
 from supermusr_data_pipeline_spark.plans import text_dedup
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = "/root/testdata/sf0.01"
 
 
 def _builds(name: str) -> int:
@@ -38,5 +39,25 @@ def test_q47_reuses_ivf_result(spark):
 def test_cache_is_per_sf_dir(spark):
     text_dedup.clear_shared_cache()
     entry_mod.queries()["q25_lsh_near_dup"](spark, SF_DIR).count()
-    entry_mod.queries()["q25_lsh_near_dup"](spark, "/root/testdata/sf0.01").count()
+    entry_mod.queries()["q25_lsh_near_dup"](spark, SF01_DIR).count()
     assert _builds("q25_lsh_near_dup") == 2  # different datasets never alias
+
+
+def test_q42_job_count_on_cached_pairs(spark):
+    """With q25's pair graph already cached, building q42 at sf0.01 (under
+    the CC gate) and counting it takes 7 jobs: the edge count that picks
+    the CC path (3 with AQE: cache fill, shuffle stage, result), the one
+    Arrow collect of the edges, the label checkpoint, and the count itself
+    (2).  The distributed loop schedules dozens; a rise means the dedup
+    decision is scheduling Spark rounds again."""
+    sc = spark.sparkContext
+    text_dedup.clear_shared_cache()
+    entry_mod.queries()["q25_lsh_near_dup"](spark, SF01_DIR).count()
+    sc.setJobGroup("q42-job-pin", "q42 on cached q25")
+    try:
+        entry_mod.queries()["q42_dedup_clusters"](spark, SF01_DIR).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("q42-job-pin")) == 7
+    text_dedup.clear_shared_cache()
