@@ -2,11 +2,11 @@
 
 Several plans compute a subtree once and let every downstream consumer read
 the materialized result instead of re-planting the subtree per consumer
-(q25/q79/q82's token-hash projection, q78's PQ code table, the CC label
-rounds, the DAQ chain's event table).  Round 14 used ``localCheckpoint``
-for all of them, which is the right call on ``local[N]``: blocks live in
-the one process that is also the driver, so "executor loss" is process
-death and replication buys nothing.  On a real cluster it is the wrong
+(the session-shared token-signature, term-frequency and embedding tables,
+q78's PQ code table, the CC label rounds, the DAQ chain's event table).
+Round 14 used ``localCheckpoint`` for all of them, which is the right call
+on ``local[N]``: blocks live in the one process that is also the driver,
+so "executor loss" is process death and replication buys nothing.  On a real cluster it is the wrong
 call (optimization guide §5): localCheckpoint stores unreplicated
 executor-local blocks AND truncates lineage, so one lost executor turns a
 recomputable intermediate into a failed query.

@@ -41,17 +41,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..materialize import materialize
 from ..sources.testdata import load_table
 from .relational import _register
 from .text_dedup import (
     _DUCK_TH_CTE,
     _LSH_BUCKET_CAP,
-    _N_BANDS,
-    _ROWS_PER_BAND,
     _band_keys_duck,
-    _minhash_cols_spark,
-    _with_token_hashes,
+    _banded,
+    token_signatures,
 )
 
 # the "newly arrived shard": a deterministic 10% slice
@@ -158,34 +155,12 @@ def q79_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """New-shard near-dup pass: (delta x base) + (delta x delta) candidate
     pairs only — see module docstring.  Output: verified pairs touching the
     delta with exact Jaccard and a delta_base/delta_delta kind label."""
-    # one tokenize+md5 pass: every downstream consumer (signatures, the
-    # two verification-token attaches) derives from the narrow (doc_id,
-    # th) projection, so materialize it once — the plan otherwise repeats
-    # the corpus tokenize subtree per consumer (4 passes measured r14;
-    # guide §1.2 "don't compute things twice").  Same in-query
-    # materialize() pattern as q25's builder; ~16 B/token row.
-    base = materialize(
-        _with_token_hashes(spark, sf_dir, spread=True)
-        .filter(F.size("th") > 0)
-        .select("doc_id", "th")
-    )
-    th = base
-    sigs = base.select("doc_id", *_minhash_cols_spark())
-    band_cols = []
-    for bnd in range(_N_BANDS):
-        parts = [
-            F.col(f"mh{bnd * _ROWS_PER_BAND + r:02d}").cast("string")
-            for r in range(_ROWS_PER_BAND)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(bnd).alias("band_no"), F.md5(F.concat_ws(",", *parts)).alias("key")
-            ).alias(f"b{bnd}")
-        )
-    banded = (
-        sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-        .select("doc_id", F.col("bk.band_no").alias("band_no"), F.col("bk.key").alias("key"))
-    )
+    # signatures and both verification-token attaches read the session-
+    # shared signature table: one tokenize+md5 pass for the whole session
+    # instead of one per consumer (guide §1.2 "don't compute things twice")
+    base = token_signatures(spark, sf_dir)
+    th = base.select("doc_id", "th")
+    banded = _banded(base)
     is_delta = F.col("doc_id") % _DELTA_MOD == _DELTA_REM
     # occupancy is COMBINED (base+delta) — the maintained index's view;
     # one window computes it together with the star rep (see _sized_buckets)
@@ -251,26 +226,6 @@ def lsh_index_path(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"supermusr_lsh_index_{base}.parquet")
 
 
-def _banded(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band_no, key) rows from a signature table — the exact q25
-    banding (md5 over each band's 4 signature values)."""
-    band_cols = []
-    for bnd in range(_N_BANDS):
-        parts = [
-            F.col(f"mh{bnd * _ROWS_PER_BAND + r:02d}").cast("string")
-            for r in range(_ROWS_PER_BAND)
-        ]
-        band_cols.append(
-            F.struct(
-                F.lit(bnd).alias("band_no"), F.md5(F.concat_ws(",", *parts)).alias("key")
-            ).alias(f"b{bnd}")
-        )
-    return (
-        sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("bk"))
-        .select("doc_id", F.col("bk.band_no").alias("band_no"), F.col("bk.key").alias("key"))
-    )
-
-
 # doc-id hash buckets for the tokens artifact: a probe knows its candidate
 # doc_ids, so their buckets become a literal partition filter and the
 # verification-token scan reads only touched directories instead of the
@@ -292,6 +247,31 @@ LSH_BASE_BID = -1          # the bulk index build
 LSH_BULK_APPEND_BID = -2   # append_shard_to_index batch growth
 
 
+def _write_segment(sigs: DataFrame, out_path: str, bid: int, mode: str) -> None:
+    """Write a signature table's rows as index segment ``bid``: the
+    verification token sets (``th``) under ``tokens/`` and the band rows
+    (banded from the ``mh`` columns) under ``bands/``."""
+    from .index_maintenance import resolve_dir
+
+    (
+        sigs.select("doc_id", "th")
+        .withColumn("tb", _tok_bucket(F.col("doc_id")))
+        .withColumn("bid", F.lit(bid))
+        .repartition("tb")
+        .write.partitionBy("tb", "bid")
+        .mode(mode)
+        .parquet(resolve_dir(os.path.join(out_path, "tokens")))
+    )
+    (
+        _banded(sigs)
+        .withColumn("bid", F.lit(bid))
+        .repartition("band_no")
+        .write.partitionBy("band_no", "bid")
+        .mode(mode)
+        .parquet(resolve_dir(os.path.join(out_path, "bands")))
+    )
+
+
 def write_lsh_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     """Index-build job for the BASE corpus: two artifacts under one root —
     ``bands/`` (doc_id, band_no, key) partitioned by (band_no, bid), and
@@ -307,47 +287,19 @@ def write_lsh_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     shard lands against; a shard that passes is then APPENDED to it
     (band rows + token sets), which is the whole point of the layout —
     growing the index is an append, not a rebuild."""
-    from .index_maintenance import resolve_dir
-
-    df = _with_token_hashes(spark, sf_dir, spread=True)
-    # both artifacts derive from (doc_id, th); cache that projection so
-    # the corpus tokenize+hash pass runs ONCE instead of once per write
-    # (the dominant build cost — same-session A/B in the build docstring
-    # history: ~2x on the shared pass at sf0.1)
-    base = (
-        df.filter((F.col("doc_id") % _DELTA_MOD != _DELTA_REM) & (F.size("th") > 0))
-        .select("doc_id", "th")
-        .persist()
-    )
-    try:
-        (
-            base
-            .withColumn("tb", _tok_bucket(F.col("doc_id")))
-            .withColumn("bid", F.lit(LSH_BASE_BID))
-            .repartition("tb")
-            .write.partitionBy("tb", "bid")
-            .mode("overwrite")
-            .parquet(resolve_dir(os.path.join(out_path, "tokens")))
-        )
-        sigs = base.select("doc_id", *_minhash_cols_spark())
-        (
-            _banded(sigs)
-            .withColumn("bid", F.lit(LSH_BASE_BID))
-            .repartition("band_no")
-            .write.partitionBy("band_no", "bid")
-            .mode("overwrite")
-            .parquet(resolve_dir(os.path.join(out_path, "bands")))
-        )
-    finally:
-        base.unpersist()
+    # both artifacts derive from the session-shared signature table, so
+    # the build runs no tokenize or MinHash pass of its own
+    sigs = token_signatures(spark, sf_dir)
+    is_base = F.col("doc_id") % _DELTA_MOD != _DELTA_REM
+    _write_segment(sigs.filter(is_base), out_path, LSH_BASE_BID, "overwrite")
 
 
 @_register("q82_indexed_incremental", oracle=_q79_oracle())
 def q82_indexed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q79 with the base side served from the persisted index: base band
     rows and token sets are parquet scans (no recomputation of base
-    signatures from text); only the delta shard is tokenized, hashed, and
-    banded in this pass.  Build-once per session ($TMPDIR artifact, the
+    signatures from text); only the delta shard is banded in this pass,
+    from its rows of the session-shared signature table.  Build-once per session ($TMPDIR artifact, the
     q64 pattern); value-identical to q79 by construction and by oracle."""
     path = lsh_index_path(sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -356,18 +308,11 @@ def q82_indexed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _BUILT[key] = True
 
     is_delta = F.col("doc_id") % _DELTA_MOD == _DELTA_REM
-    # q79's single-pass rule: tokenize+md5 the delta shard ONCE into the
-    # narrow (doc_id, th) projection (the doc_id filter pushes below the
-    # spread repartition, so only shard rows are shuffled or tokenized);
-    # signatures and the verification attach both derive from it
-    delta_base = materialize(
-        _with_token_hashes(spark, sf_dir, spread=True)
-        .filter(is_delta)
-        .filter(F.size("th") > 0)
-        .select("doc_id", "th")
-    )
-    delta_th = delta_base
-    delta_banded = _banded(delta_base.select("doc_id", *_minhash_cols_spark()))
+    # the delta side is a filter on the session-shared signature table:
+    # its bands come from the `mh` columns, its verification sets from `th`
+    delta = token_signatures(spark, sf_dir).filter(is_delta)
+    delta_th = delta.select("doc_id", "th")
+    delta_banded = _banded(delta)
     from .index_maintenance import resolve_dir
 
     base_banded = spark.read.parquet(
@@ -430,39 +375,9 @@ def append_shard_to_index(spark: SparkSession, sf_dir: str, out_path: str) -> No
     stored).  Rows land in the reserved bid=-2 bulk-append segment so a
     concurrent streaming door's batch-id partitions can never collide
     with them."""
-    from .index_maintenance import resolve_dir
-
+    sigs = token_signatures(spark, sf_dir)
     is_delta = F.col("doc_id") % _DELTA_MOD == _DELTA_REM
-    # both artifacts derive from (doc_id, th) — persist the narrow
-    # projection so the shard tokenize+md5 pass runs once, not once per
-    # write (the write_lsh_index rule applied to the append job)
-    delta = (
-        _with_token_hashes(spark, sf_dir, spread=True)
-        .filter(is_delta)
-        .filter(F.size("th") > 0)
-        .select("doc_id", "th")
-        .persist()
-    )
-    try:
-        (
-            delta
-            .withColumn("tb", _tok_bucket(F.col("doc_id")))
-            .withColumn("bid", F.lit(LSH_BULK_APPEND_BID))
-            .repartition("tb")
-            .write.partitionBy("tb", "bid")
-            .mode("append")
-            .parquet(resolve_dir(os.path.join(out_path, "tokens")))
-        )
-        (
-            _banded(delta.select("doc_id", *_minhash_cols_spark()))
-            .withColumn("bid", F.lit(LSH_BULK_APPEND_BID))
-            .repartition("band_no")
-            .write.partitionBy("band_no", "bid")
-            .mode("append")
-            .parquet(resolve_dir(os.path.join(out_path, "bands")))
-        )
-    finally:
-        delta.unpersist()
+    _write_segment(sigs.filter(is_delta), out_path, LSH_BULK_APPEND_BID, "append")
 
 
 # ---------------------------------------------------------------------------

@@ -32,10 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..materialize import materialize
-from ..sources.testdata import load_table, spread_scan
+from ..sources.testdata import load_table
 from .relational import ORACLES, _register
-from .text_dedup import _TOKENS_EXPR_SPARK, _TOKENS_SQL_DUCK
+from .text_dedup import (
+    _TOKENS_EXPR_SPARK,
+    _TOKENS_SQL_DUCK,
+    embedding_table,
+    term_freqs,
+)
 
 _BM25_K1 = 1.2
 _BM25_B = 0.75
@@ -103,21 +107,13 @@ def q112_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms' postings and the per-query top-k is a window partitioned by
     query_term."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = spread_scan(docs).select(
-        "doc_id", F.explode(F.expr(_TOKENS_EXPR_SPARK)).alias("term")
-    )
     # every corpus statistic (dl = Σ tf per doc, df = postings length per
-    # term, the scoring probe itself) derives from tf, so MATERIALIZE the
-    # narrow (doc_id, term, tf) table once per query: r14 derived the
-    # statistics from tf but left physical dedup of the four planted
-    # subtrees to AQE runtime exchange reuse, which the plans could not
-    # prove (VERDICT r14 #5: 18 jobs / 50 stages measured).  The barrier
-    # guarantees ONE tokenize+explode+aggregate pass (guide §1.2); lazy —
-    # the first consumer's job materializes it.
-    tf = materialize(
-        tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
-        eager=False,
-    )
+    # term, the scoring probe itself) derives from the session-shared
+    # (doc_id, term, tf) table: one tokenize+explode+aggregate pass per
+    # session, shared with q116/q117 and the postings index build, instead
+    # of four planted subtrees left to AQE exchange reuse (VERDICT r14 #5:
+    # 18 jobs / 50 stages measured; guide §1.2)
+    tf = term_freqs(spark, sf_dir)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = docs.select(F.count(F.lit(1)).alias("n")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
@@ -282,42 +278,35 @@ def write_postings_index(spark: SparkSession, sf_dir: str, out: str) -> None:
     query planning: rarest-term selection runs on THIS, never the
     corpus), and doc lengths + corpus stats for the BM25 norm."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = spread_scan(docs).select(
-        "doc_id", F.explode(F.expr(_TOKENS_EXPR_SPARK)).alias("term")
-    )
-    # every artifact derives from tf (doc length = sum of a doc's term
-    # frequencies, identically count of its token rows); cache it so the
-    # corpus tokenize+explode pass runs ONCE instead of once per artifact
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")).persist()
+    # every artifact derives from the session-shared tf table (doc length =
+    # sum of a doc's term frequencies, identically count of its token rows)
+    tf = term_freqs(spark, sf_dir)
     tb = F.pmod(F.hash("term"), F.lit(_N_TERM_BUCKETS)).alias("tb")
-    try:
-        (
-            tf.withColumn("tb", tb)
-            .repartition("tb")
-            .write.partitionBy("tb")
-            .mode("overwrite")
-            .parquet(_os.path.join(out, "postings"))
+    (
+        tf.withColumn("tb", tb)
+        .repartition("tb")
+        .write.partitionBy("tb")
+        .mode("overwrite")
+        .parquet(_os.path.join(out, "postings"))
+    )
+    (
+        tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        .withColumn("tb", tb)
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(_os.path.join(out, "terms"))
+    )
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    dl.write.mode("overwrite").parquet(_os.path.join(out, "doclen"))
+    (
+        docs.select(F.count(F.lit(1)).alias("n"))
+        .crossJoin(
+            spark.read.parquet(_os.path.join(out, "doclen"))
+            .agg(F.avg("dl").alias("avgdl"))
         )
-        (
-            tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-            .withColumn("tb", tb)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(out, "terms"))
-        )
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        dl.write.mode("overwrite").parquet(_os.path.join(out, "doclen"))
-        (
-            docs.select(F.count(F.lit(1)).alias("n"))
-            .crossJoin(
-                spark.read.parquet(_os.path.join(out, "doclen"))
-                .agg(F.avg("dl").alias("avgdl"))
-            )
-            .write.mode("overwrite")
-            .parquet(_os.path.join(out, "stats"))
-        )
-    finally:
-        tf.unpersist()
+        .write.mode("overwrite")
+        .parquet(_os.path.join(out, "stats"))
+    )
 
 
 @_register("q114_bm25_indexed", oracle=ORACLES["q112_bm25_topk"])
@@ -504,34 +493,19 @@ def q116_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank fusion (1/(60+rank) per leg) merges them into the final top-10.
     See the section comment for the scale shape and determinism rules."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = spread_scan(docs).select(
-        "doc_id", F.explode(F.expr(_TOKENS_EXPR_SPARK)).alias("term")
-    )
-    # q112's single-pass rule: dl/avgdl/df and both probe joins all read
-    # the MATERIALIZED (doc_id, term, tf) table — one tokenize+explode
-    # pass per query, guaranteed by the barrier instead of hoped-for AQE
-    # runtime exchange reuse (guide §1.2; VERDICT r14 #5)
-    tf = materialize(
-        tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
-        eager=False,
-    )
+    # dl/avgdl/df and both probe joins read the session-shared (doc_id,
+    # term, tf) table — q112's postings, not a tokenize pass of this query
+    tf = term_freqs(spark, sf_dir)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = docs.select(F.count(F.lit(1)).alias("n")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
     )
     dfr = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
 
-    norm = "sqrt(aggregate(transform({c}, x -> x * x), 0D, (a, x) -> a + x))"
-    # the normed embedding table feeds three consumers (query-id gate, the
-    # broadcast query side, the corpus leg) — materialize so the scan, the
-    # double-cast, and the norm run once (same rule as tf above)
-    e = materialize(
-        spread_scan(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias("emb"),
-        ).withColumn("ne", F.expr(norm.format(c="emb"))),
-        eager=False,
-    )
+    # the normed embedding table (session-shared with q78 and q116/q117)
+    # feeds three consumers: the query-id gate, the broadcast query side
+    # and the corpus leg
+    e = embedding_table(spark, sf_dir)
 
     qids = (
         dl.join(e.select(F.col("vec_id").alias("doc_id")), "doc_id")
@@ -703,33 +677,18 @@ def q117_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     join to the vector table on candidate id, query side broadcast) —
     never a corpus-wide similarity pass."""
     docs = load_table(spark, sf_dir, "documents")
-    tok = spread_scan(docs).select(
-        "doc_id", F.explode(F.expr(_TOKENS_EXPR_SPARK)).alias("term")
-    )
-    # q112's single-pass rule: dl/avgdl/df and both probe joins all read
-    # the MATERIALIZED (doc_id, term, tf) table — one tokenize+explode
-    # pass per query, guaranteed by the barrier instead of hoped-for AQE
-    # runtime exchange reuse (guide §1.2; VERDICT r14 #5)
-    tf = materialize(
-        tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")),
-        eager=False,
-    )
+    # dl/avgdl/df and both probe joins read the session-shared (doc_id,
+    # term, tf) table — q112's postings, not a tokenize pass of this query
+    tf = term_freqs(spark, sf_dir)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = docs.select(F.count(F.lit(1)).alias("n")).crossJoin(
         dl.agg(F.avg("dl").alias("avgdl"))
     )
     dfr = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    norm = "sqrt(aggregate(transform({c}, x -> x * x), 0D, (a, x) -> a + x))"
-    # the normed embedding table feeds three consumers (query-id gate, the
-    # broadcast query side, the corpus leg) — materialize so the scan, the
-    # double-cast, and the norm run once (same rule as tf above)
-    e = materialize(
-        spread_scan(load_table(spark, sf_dir, "embeddings")).select(
-            "vec_id",
-            F.expr("transform(embedding, x -> cast(x as double))").alias("emb"),
-        ).withColumn("ne", F.expr(norm.format(c="emb"))),
-        eager=False,
-    )
+    # the normed embedding table (session-shared with q78 and q116/q117)
+    # feeds three consumers: the query-id gate, the broadcast query side
+    # and the corpus leg
+    e = embedding_table(spark, sf_dir)
 
     qids = (
         dl.join(e.select(F.col("vec_id").alias("doc_id")), "doc_id")

@@ -48,6 +48,7 @@ from .text_dedup import (
     _ivf_dots_duck,
     _ivf_dots_spark,
     _probe_order_spark,
+    embedding_table,
 )
 
 _PQ_M = 16       # subspaces
@@ -536,9 +537,10 @@ def q78_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     visible per pair."""
     cents, n_probe = _codebook(sf_dir)
     po = _probe_order_spark(len(cents))
-    e = spread_scan(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.expr("transform(embedding, x -> cast(x as double))").alias("emb")
-    )
+    # the session-shared cast table (also read by q116/q117): the scan and
+    # the double cast run once per session, and its `ne` column gives the
+    # re-rank both norms
+    e = embedding_table(spark, sf_dir)
     d = e.withColumn("dots", F.expr(_ivf_dots_spark("emb", cents)))
 
     # corpus index: (vec_id, cell, codes) — the 8 B/vec scan artifact
@@ -566,6 +568,7 @@ def q78_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("vec_id") % 50 == 0).select(
             F.col("vec_id").alias("query_id"),
             F.col("emb").alias("qe"),
+            F.col("ne").alias("nq"),
             F.expr(f"slice({po}, 1, {n_probe})").alias("probe"),
             F.expr(_adc_tables_spark("emb")).alias("tq"),
         ),
@@ -588,15 +591,14 @@ def q78_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # exact re-rank: |Q| x shortlist rows touch the float table once
-    qe_side = q.select("query_id", "qe")
+    qe_side = q.select("query_id", "qe", "nq")
     rer = (
         F.broadcast(short.select("query_id", "neighbor_id", "cell", "adc"))
         .join(e, e.vec_id == F.col("neighbor_id"))
         .join(F.broadcast(qe_side), "query_id")
     )
     dot = F.expr("aggregate(zip_with(qe, emb, (x, y) -> x * y), 0D, (a, x) -> a + x)")
-    norm = "sqrt(aggregate(transform({c}, x -> x * x), 0D, (a, x) -> a + x))"
-    sim = F.round(dot / (F.expr(norm.format(c="qe")) * F.expr(norm.format(c="emb"))), 6)
+    sim = F.round(dot / (F.col("nq") * F.col("ne")), 6)
     wr = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
     return (
         rer.select("query_id", "neighbor_id", "cell", F.round("adc", 6).alias("adc"),

@@ -108,6 +108,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# spread_scan task size: ~1 s of tokenize+md5 or IVF/PQ encode per task
+_SPREAD_BYTES_PER_TASK = 64 * 1024
+
+
 def spread_scan(df: DataFrame) -> DataFrame:
     """Unsplittable-input guard for compute-heavy passes (optimization
     guide §2.5: "one huge unsplittable file → repartition immediately
@@ -136,28 +140,13 @@ def spread_scan(df: DataFrame) -> DataFrame:
     already scans as >= target splits (any real multi-file layout)
     passes through untouched — so cluster behavior is unchanged.
     Round-robin keeps Spark's sort-before-repartition determinism under
-    task retry (SPARK-23207).
-
-    ``SUPERMUSR_SPREAD_TARGET`` pins the fan-out (0 disables);
-    ``SUPERMUSR_SPREAD_BYTES_PER_TASK`` tunes the task sizing."""
-    import os as _os
-
-    sc = df.sparkSession.sparkContext
-    dp = sc.defaultParallelism
-    tgt = _os.environ.get("SUPERMUSR_SPREAD_TARGET")
-    if tgt:
-        target = int(tgt)
-    else:
-        bpt = int(
-            _os.environ.get("SUPERMUSR_SPREAD_BYTES_PER_TASK", str(64 * 1024))
-        )
-        try:
-            size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:  # pragma: no cover — stats unavailable: full fan-out
-            size = None
-        target = dp if size is None else max(1, min(dp, size // bpt))
-    if target <= 0:
-        return df
+    task retry (SPARK-23207)."""
+    dp = df.sparkSession.sparkContext.defaultParallelism
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # pragma: no cover — stats unavailable: full fan-out
+        size = None
+    target = dp if size is None else max(1, min(dp, size // _SPREAD_BYTES_PER_TASK))
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -56,10 +56,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..plans.text_dedup import _LSH_BUCKET_CAP, _TOKENS_EXPR_SPARK, _TOKHASH_SPARK
-from ..plans.incremental import _banded, _tok_bucket
+from ..plans.incremental import _tok_bucket
 from ..plans.index_maintenance import resolve_dir
-from ..plans.text_dedup import _minhash_cols_spark
+from ..plans.text_dedup import (
+    _LSH_BUCKET_CAP,
+    _TOKENS_EXPR_SPARK,
+    _TOKHASH_SPARK,
+    _banded,
+    _minhash_cols_spark,
+)
 
 _JACCARD = 0.5
 

@@ -126,3 +126,62 @@ def test_q42_converges_in_few_rounds_at_bench_scale(spark):
         "pair-graph blowup?"
     )
     text_dedup.clear_shared_cache()
+
+
+def _shared_ids() -> set:
+    return set().union(*(ids for _df, ids in text_dedup._SHARED_CACHE.values()))
+
+
+@pytest.mark.parametrize(
+    "writer", ["write_lsh_index", "append_shard_to_index", "write_postings_index"]
+)
+def test_index_writers_leave_nothing_persisted(spark, tmp_path, writer):
+    """The index builds read the session-shared feature tables and persist
+    nothing of their own: after the write, the only new persisted RDDs are
+    the shared entries, and clearing the cache releases those too."""
+    from supermusr_data_pipeline_spark.plans import incremental, retrieval
+
+    fn = getattr(incremental, writer, None) or getattr(retrieval, writer)
+    sc = spark.sparkContext
+    text_dedup.clear_shared_cache()
+    idx = str(tmp_path / "idx")
+    if writer == "append_shard_to_index":
+        incremental.write_lsh_index(spark, SF_DIR, idx)
+    before = _persistent_rdd_ids(sc)
+    fn(spark, SF_DIR, idx)
+    assert not (_persistent_rdd_ids(sc) - before - _shared_ids())
+    text_dedup.clear_shared_cache()
+    assert not (_persistent_rdd_ids(sc) - before)
+
+
+def test_clear_shared_cache_after_curation_chain(spark, tmp_path):
+    """After the whole dedup -> index build -> probe -> retrieval chain,
+    clearing the cache returns the persisted-RDD set to its baseline.  The
+    one exception is named: q78 checkpoints its PQ code table and query
+    side per query (lazy materialize()), which belong to the returned
+    DataFrame, not to the shared cache."""
+    from supermusr_data_pipeline_spark.plans import incremental
+
+    qs = entry_mod.queries()
+    sc = spark.sparkContext
+    text_dedup.clear_shared_cache()
+    before = _persistent_rdd_ids(sc)
+    for name in ("q25_lsh_near_dup", "q42_dedup_clusters", "q46_curated_corpus"):
+        qs[name](spark, SF_DIR).count()
+    incremental.write_lsh_index(spark, SF_DIR, str(tmp_path / "idx"))
+    for name in (
+        "q82_indexed_incremental",
+        "q79_incremental_dedup",
+        "q69_lsh_recall",
+        "q112_bm25_topk",
+        "q116_hybrid_rrf",
+        "q117_hard_negatives",
+    ):
+        qs[name](spark, SF_DIR).count()
+    mid = _persistent_rdd_ids(sc)
+    qs["q78_ivf_pq_ann"](spark, SF_DIR).count()
+    q78_own = _persistent_rdd_ids(sc) - mid - _shared_ids()
+    assert len(q78_own) <= 2
+    text_dedup.clear_shared_cache()
+    assert not (_persistent_rdd_ids(sc) - before - q78_own)
+    text_dedup._unpersist_rdd_ids(sc, q78_own)

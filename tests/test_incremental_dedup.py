@@ -141,10 +141,10 @@ def test_index_append_grows_to_full_corpus(spark, tmp_path):
     incremental.write_lsh_index(spark, SF_DIR, idx)
     incremental.append_shard_to_index(spark, SF_DIR, idx)
 
-    from supermusr_data_pipeline_spark.plans.text_dedup import _with_token_hashes
-    from supermusr_data_pipeline_spark.plans.incremental import (
+    from supermusr_data_pipeline_spark.plans.text_dedup import (
         _banded,
         _minhash_cols_spark,
+        _with_token_hashes,
     )
 
     all_docs = _with_token_hashes(spark, SF_DIR).filter(F.size("th") > 0)

@@ -70,3 +70,32 @@ def test_registers_persistent_rdds_for_id_diff_bookkeeping(spark, eager):
     new = _persistent_rdd_ids(sc) - before
     assert new, "materialize() must create persistent RDDs visible to the id diff"
     _unpersist_rdd_ids(sc, new)
+
+
+def test_shared_checkpoint_cluster_branch_released_by_clear(spark, monkeypatch):
+    """The session-shared cache materializes through materialize(): on a
+    cluster master an entry is a lineage-keeping persist, and clearing the
+    cache returns the persisted-RDD set to its baseline."""
+    from supermusr_data_pipeline_spark.plans import text_dedup
+
+    monkeypatch.setattr(mat, "_local_master", lambda m: False)
+    sc = spark.sparkContext
+    text_dedup.clear_shared_cache()
+    before = text_dedup._persistent_rdd_ids(sc)
+
+    def build():
+        return spark.range(30).withColumn("v", F.col("id") * 3)
+
+    out = text_dedup._shared_checkpoint(spark, "cluster-branch-sf", "t", build)
+    try:
+        assert out.storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert "LogicalRDD" not in str(out._jdf.queryExecution().logical())
+        assert text_dedup._persistent_rdd_ids(sc) - before, "entry must be persisted"
+        assert out.agg(F.sum("v")).first()[0] == 3 * 29 * 30 // 2
+        text_dedup.clear_shared_cache()
+        # subset, not equality: the ContextCleaner may release blocks of
+        # earlier tests meanwhile — the contract is "nothing of ours is left"
+        assert not (text_dedup._persistent_rdd_ids(sc) - before)
+    finally:
+        out.unpersist()
+        text_dedup.clear_shared_cache()

