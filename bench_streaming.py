@@ -152,23 +152,15 @@ def _start_query(
     the writer's on_commit hook — frame observation rides the sink's own
     dimension collect, so the batch runs exactly the production job count.
     ``fsm`` selects the assembly engine: 'apply' = applyInPandasWithState
-    (the FSM door), 'tws' = transformWithStateInPandas (A/B'd and
-    rejected round 8; needs RocksDB + the tools/pyshims PYTHONPATH),
-    'direct' = the fused foreachBatch door (streaming/nexus_direct.py —
-    no stateful operator, driver-held bounded cache)."""
+    (the FSM door), 'direct' = the fused foreachBatch door
+    (streaming/nexus_direct.py — no stateful operator, driver-held
+    bounded cache)."""
     from supermusr_data_pipeline_spark.streaming.frame_assembly_stream import (
         DIGITISER_MESSAGE_SCHEMA,
         assemble_frames_stream,
     )
     from supermusr_data_pipeline_spark.streaming.nexus_direct import DirectNexusWriter
     from supermusr_data_pipeline_spark.streaming.nexus_stream import NexusStreamWriter
-
-    if fsm == "tws":
-        from supermusr_data_pipeline_spark.streaming.frame_assembly_tws import (
-            assemble_frames_stream_tws as assemble,
-        )
-    else:
-        assemble = assemble_frames_stream
 
     # cleanSource=delete: the spool is a consume-once landing zone, and
     # the file source re-LISTS the whole directory every micro-batch — on
@@ -185,14 +177,6 @@ def _start_query(
             _runs_df(spark, n_frames), sink, list(range(n_digitisers)),
             frame_ttl_ms=500,
             on_commit=lambda frames: on_frames(frames, time.perf_counter()),
-            persist_batch=os.environ.get("SPARK_GRAFT_DIRECT_PERSIST", "1") == "1",
-            # unset -> None -> writer coalesces to the session's shuffle
-            # partitions; "0" disables coalescing; any other int is exact
-            write_coalesce=(
-                int(os.environ["SPARK_GRAFT_DIRECT_COALESCE"])
-                if "SPARK_GRAFT_DIRECT_COALESCE" in os.environ
-                else None
-            ),
         )
         writer.phase_log = phase_log
         to_sink = messages
@@ -200,12 +184,11 @@ def _start_query(
         writer = NexusStreamWriter(
             _runs_df(spark, n_frames), sink,
             on_commit=lambda frames: on_frames(frames, time.perf_counter()),
-            # tools/ab_fsm_intent.py toggles this to attribute the
-            # write-ahead intent's cost; production default is on
-            write_intent=os.environ.get("SPARK_GRAFT_FSM_INTENT", "1") == "1",
         )
         writer.phase_log = phase_log
-        to_sink = assemble(messages, list(range(n_digitisers)), frame_ttl_ms=500)
+        to_sink = assemble_frames_stream(
+            messages, list(range(n_digitisers)), frame_ttl_ms=500
+        )
     return (
         to_sink.writeStream.foreachBatch(writer)
         .option("checkpointLocation", ckpt)
@@ -765,7 +748,7 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
                 "(streaming/nexus_direct.py) — frame assembly driver-"
                 "side inside foreachBatch, two narrow jobs per batch, "
                 "no stateful operator.  Adopted on a same-session A/B "
-                "vs the FSM topology (tools/ab_direct_sink.py, 1000-"
+                "vs the FSM topology (1000-"
                 "frame paced soaks, tools/AB_DIRECT_SINK_RESULT.json): "
                 "steady p50 2.05/2.04 s and p95 2.75/2.75 s at "
                 "8x500/32x500 vs the FSM door's 8.09/4.60 and "
@@ -797,11 +780,11 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
                 "(fetchloop_cluster_soak: pre-kill p50 0.026 s, spike "
                 "max 0.40 s, exactly-once accounting).  The "
                 "micro-batch doors remain the Spark-analytics path; "
-                "their floor stands as measured.  Perf knobs "
-                "persist_batch=False and write_coalesce were measured "
-                "WORSE or neutral (same-session, 32x500: nopersist "
-                "steady p50 2.26 s, nopersist+coalesce(8) 4.58 s) and "
-                "stay off.  History: the FSM door's floor was ~0.58 s "
+                "their floor stands as measured.  The direct "
+                "door's unpersisted-batch and coalesce variants "
+                "measured WORSE or neutral (same-session, 32x500: "
+                "nopersist steady p50 2.26 s, nopersist+coalesce(8) "
+                "4.58 s) and were removed.  History: the FSM door's floor was ~0.58 s "
                 "applyInPandasWithState machinery + ~0.45 s engine "
                 "bookkeeping + ~0.17 s append (round 7); round 8 "
                 "A/B'd transformWithStateInPandas (rejected: steady "
@@ -826,7 +809,7 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
                 "(paced_runs) so round comparisons stop chasing the "
                 "±20% single-soak noise.  Round-11 attribution of the "
                 "FSM door's residual drift vs the r7 record (3.68 s "
-                "vs 2.94 s steady p50): tools/ab_fsm_r7.py ran the r7 "
+                "vs 2.94 s steady p50): an A/B ran the r7 "
                 "PACKAGE code against HEAD, ABBA in one session — r7 "
                 "code pooled 3.68 s (one round red) vs HEAD 3.29 s "
                 "(all rounds keep up), sink_fsm_s ~1.0 s on BOTH arms "

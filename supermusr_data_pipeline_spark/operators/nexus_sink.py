@@ -187,9 +187,15 @@ def retire_completed_runs(
     one-file-per-micro-batch accumulation.  Safe here by construction:
     the run left the live sink, so no appender can race the rewrite.
 
-    ``writer``: the LIVE sink writer (NexusStreamWriter or
-    DirectNexusWriter), if one is still appending.  Retired runs are
-    dropped from its runs dimension via ``refresh_runs`` so a straggler
+    Run directories are found by their escaped names
+    (``streaming.frame_core.run_dir_name``, the ``run_name=<value>`` form
+    every door and ``partitionBy`` write), so a run name holding ``%``,
+    ``:`` or another escaped character retires like any other.
+
+    ``writer``: the LIVE sink writer (NexusStreamWriter,
+    DirectNexusWriter or FetchLoopNexusWriter), if one is still
+    appending.  Retired runs are dropped from its runs dimension via
+    ``refresh_runs`` so a straggler
     frame matching a retired run's interval can no longer RESURRECT the
     run's live directory after its data moved to ``completed/`` — the
     reference drops the run from its cache on move_to_completed and
@@ -214,11 +220,13 @@ def retire_completed_runs(
     fs = hpath(sink_path).getFileSystem(conf)
     dest_base = hpath(sink_path, completed_subdir)
     fs.mkdirs(dest_base)
+    from ..streaming.frame_core import run_dir_name
+
     moved = []
     for name in retirable:
-        src = hpath(sink_path, f"run_name={name}")
+        src = hpath(sink_path, run_dir_name(name))
         if fs.exists(src):
-            fs.rename(src, hpath(dest_base, f"run_name={name}"))
+            fs.rename(src, hpath(dest_base, run_dir_name(name)))
             moved.append(name)
     if compact and moved:
         import os as _os
@@ -228,7 +236,7 @@ def retire_completed_runs(
         for name in moved:
             compact_nexus_run(
                 spark, _os.path.join(sink_path, completed_subdir),
-                f"run_name={name}",
+                run_dir_name(name),
             )
     if writer is not None and moved:
         writer.refresh_runs(runs.filter(~F.col("run_name").isin(moved)))

@@ -6,12 +6,16 @@ package lifts the stateful pieces onto Structured Streaming:
 - frame assembly with completeness + processing-time TTL (T1-T3) →
   ``frame_assembly_stream.assemble_frames_stream`` (applyInPandasWithState)
 - run lifecycle FSM (T4) → ``run_lifecycle`` (batch fold + streaming state)
-- NeXus run sink (S6/S7) → ``nexus_stream.write_nexus_stream`` (foreachBatch)
-- fused assembly+sink, the PRODUCTION door since round 9 (A1-A3 + S6 in one
-  foreachBatch, no stateful operator) → ``nexus_direct.write_nexus_direct``
+- NeXus run sink (S6/S7), three doors writing one layout:
+  ``nexus_stream.write_nexus_stream`` (foreachBatch behind the FSM),
+  ``nexus_direct.write_nexus_direct`` (assembly fused into foreachBatch, no
+  stateful operator) and ``nexus_fetchloop.FetchLoopNexusWriter`` (an
+  in-process consumer loop, no micro-batch)
+- the decisions those doors share — frame dispatch and tombstones, run
+  matching and frame sequencing, the run directory name → ``frame_core``
 - DAQ observability stats (A7/A8) → ``daq_stats``
-- crash recovery (T5) → Structured Streaming checkpointing (free) plus the
-  sink-side resume scan in nexus_stream.
+- crash recovery (T5) → Structured Streaming checkpointing plus each
+  door's write-ahead intent and sink-side resume scan.
 """
 
 from .daq_stats import daq_stats_batch, daq_stats_stream  # noqa: F401
@@ -27,7 +31,6 @@ from .frame_assembly_stream import (  # noqa: F401
     assemble_frames_stream,
     events_long_to_messages,
 )
-from .frame_assembly_tws import assemble_frames_stream_tws  # noqa: F401
 from .nexus_direct import DirectNexusWriter, write_nexus_direct  # noqa: F401
 from .nexus_stream import write_nexus_stream  # noqa: F401
 from .postings_ingest import (  # noqa: F401

@@ -23,10 +23,11 @@ Per micro-batch this door runs TWO narrow Spark jobs, no shuffle:
    partial-frame cache and decides, per frame, dispatch-complete /
    dispatch-expired / keep / reject-duplicate / reject-tombstoned —
    the same FSM as frame_assembly_stream.make_update_fn
-   (frame/partial.rs:30-94, cache.rs:55-74);
+   (frame/partial.rs:30-94, cache.rs:55-74), its dispatch rule
+   ``frame_core.pick_dispatch``;
 2. the event write: the decorated frame dimension (run matching, veto
-   OR, frame_seq, event_time_zero, event_index — all driver-side, as
-   in nexus_stream.NexusStreamWriter) goes back as a local relation
+   OR, frame_seq, event_time_zero, event_index — all driver-side, via
+   ``frame_core.match_runs`` as in every door) goes back as a local relation
    that the batch's cached message rows broadcast-join and posexplode
    through, appended straight into the run's partition directory.
 
@@ -90,7 +91,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cache_conf import uncompressed_cache
-from .nexus_stream import _DIM_SCHEMA, _events_us_with_dim, _quote
+from .frame_core import FrameState, is_complete, is_due, match_runs, pick_dispatch
+from .nexus_stream import (
+    _DIM_SCHEMA, _append_runs, _events_us_with_dim, _RunsDimension,
+    _totals_from_sink,
+)
 
 _KEY_US = ["ts_us", "period_number", "protons_per_pulse", "running", "frame_number"]
 
@@ -108,21 +113,7 @@ _NULL_ROW_SCHEMA = (
 )
 
 
-class _FrameState:
-    """Slim per-frame cache entry: contributor set, OR'd veto, event
-    count, and the processing-time anchor of the FIRST message
-    (frame/partial.rs:30-40 — the TTL runs from first arrival)."""
-
-    __slots__ = ("dids", "veto", "first_ms", "n_events")
-
-    def __init__(self, first_ms: int):
-        self.dids: set[int] = set()
-        self.veto = 0
-        self.first_ms = first_ms
-        self.n_events = 0
-
-
-class DirectNexusWriter:
+class DirectNexusWriter(_RunsDimension):
     """The fused foreachBatch callable over a dev2 MESSAGE stream
     (DIGITISER_MESSAGE_SCHEMA rows)."""
 
@@ -136,11 +127,9 @@ class DirectNexusWriter:
         state_dir: str | None = None,
         on_commit=None,
         clock=time.time,
-        persist_batch: bool = True,
-        write_coalesce: int | None = None,
         pending_max_bytes: int = 256 << 20,
     ):
-        self.runs = runs
+        super().__init__(runs)
         self.path = path
         self.expected = sorted(int(d) for d in expected_digitizers)
         self.frame_ttl_ms = frame_ttl_ms
@@ -148,27 +137,13 @@ class DirectNexusWriter:
         self.state_dir = state_dir or os.path.join(path, "_assembler_state")
         self.on_commit = on_commit
         self.clock = clock
-        # perf knobs (tools/ab_direct_sink.py measures both):
-        # persist_batch=False lets the slim pass run on a column-PRUNED
-        # scan (no event_time/event_voltage IO) and the write re-scan the
-        # source instead of paying cache materialization (measured worse);
-        # write_coalesce bounds the append's task/file count — a
-        # micro-batch otherwise emits ONE FILE PER SOURCE PARTITION
-        # (~one per arrival file), which at 50 fps accumulates thousands
-        # of files per run-minute.  None (default) coalesces to the
-        # session's spark.sql.shuffle.partitions — the same per-batch
-        # file rate the FSM door's state partitioning produced, at
-        # noise-level latency cost (same-session A/B: steady p50 2.21 s
-        # vs 2.13 s at 32x500).  Pass 0 to disable coalescing.
-        self.persist_batch = persist_batch
-        self.write_coalesce = write_coalesce
         # same observability contract as NexusStreamWriter: fsm_s here is
         # the slim collect + driver FSM, write_s the event append
         self.phase_log: list | None = None
         self._loaded = False
         self._last_bid: int | None = None
         self._totals: dict[str, tuple[int, int]] = {}
-        self._pending: dict[tuple, _FrameState] = {}
+        self._pending: dict[tuple, FrameState] = {}
         self._pending_rows: dict[tuple, list[tuple]] = {}
         # byte budget for the carried rows (the one driver-side cache
         # that scales with event DENSITY, not just frames-in-flight);
@@ -176,7 +151,6 @@ class DirectNexusWriter:
         self.pending_max_bytes = pending_max_bytes
         self._pending_bytes = 0
         self._tombstones: dict[tuple, int] = {}
-        self._runs_rows: list | None = None
         # silent-stream expiry: the ticker and the batch path serialize
         # on this lock; _spark is captured on the first batch so a tick
         # can build its local-relation write without a batch in hand
@@ -185,21 +159,6 @@ class DirectNexusWriter:
         self._timer_stop: threading.Event | None = None
         self._timer_thread: threading.Thread | None = None
         self.timer_error: BaseException | None = None
-
-    # ---- runs dimension (identical contract to NexusStreamWriter) ----
-    def _load_runs(self) -> list:
-        if self._runs_rows is None:
-            self._runs_rows = self.runs.select(
-                "run_name",
-                F.unix_micros("collect_from").alias("from_us"),
-                F.unix_micros("collect_until").alias("until_us"),
-            ).collect()
-        return self._runs_rows
-
-    def refresh_runs(self, runs: DataFrame | None = None) -> None:
-        if runs is not None:
-            self.runs = runs
-        self._runs_rows = None
 
     # ---- state sidecar ----
     def _state_file(self) -> str:
@@ -210,23 +169,6 @@ class DirectNexusWriter:
 
     def _intent_file(self) -> str:
         return os.path.join(self.state_dir, "intent.json")
-
-    def _totals_from_sink(self, spark: SparkSession) -> dict[str, tuple[int, int]]:
-        totals: dict[str, tuple[int, int]] = {}
-        if os.path.isdir(self.path) and any(
-            n.startswith("run_name=") for n in os.listdir(self.path)
-        ):
-            prev = spark.read.parquet(self.path)
-            for r in (
-                prev.groupBy("run_name")
-                .agg(
-                    (F.max("frame_seq") + 1).alias("next_seq"),
-                    F.count("*").alias("n_events"),
-                )
-                .collect()
-            ):
-                totals[r["run_name"]] = (int(r["next_seq"]), int(r["n_events"]))
-        return totals
 
     def _load_state(self, spark: SparkSession) -> None:
         if self._loaded:
@@ -260,7 +202,7 @@ class DirectNexusWriter:
                 # didn't, pending stays intact and the next tick or
                 # batch re-dispatches.
                 pre = {k: tuple(v) for k, v in intent["totals"].items()}
-                actual = self._totals_from_sink(spark)
+                actual = _totals_from_sink(spark, self.path)
                 if actual != pre:
                     self._totals = actual
                     for kl in intent["expired_keys"]:
@@ -270,7 +212,7 @@ class DirectNexusWriter:
                         self._tombstones[key] = intent["tomb_until"]
             elif self._last_bid is None or intent["bid"] > self._last_bid:
                 pre = {k: tuple(v) for k, v in intent["totals"].items()}
-                actual = self._totals_from_sink(spark)
+                actual = _totals_from_sink(spark, self.path)
                 if actual != pre:
                     self._totals = actual
                     self._last_bid = intent["bid"]
@@ -287,7 +229,7 @@ class DirectNexusWriter:
             self._totals = {k: tuple(v) for k, v in st["totals"].items()}
             for p in st["pending"]:
                 key = tuple(p["key"])
-                fs = _FrameState(p["first_ms"])
+                fs = FrameState(p["first_ms"])
                 fs.dids = set(p["dids"])
                 fs.veto = p["veto"]
                 fs.n_events = p["n"]
@@ -316,7 +258,7 @@ class DirectNexusWriter:
             return
         # no sidecar: re-derive continuation totals from the sink itself
         # (the reference reopens an orphaned .nxs and reads sizes back)
-        self._totals = self._totals_from_sink(spark)
+        self._totals = _totals_from_sink(spark, self.path)
 
     def _save_state(self) -> None:
         os.makedirs(self.state_dir, exist_ok=True)
@@ -389,7 +331,6 @@ class DirectNexusWriter:
                 self.on_commit([])
             return
         now_ms = int(self.clock() * 1000)
-        runs_rows = self._load_runs()
 
         # write-ahead intent: BEFORE any driver-state mutation or sink
         # write, record (batch id, pre-batch totals) so a crash anywhere
@@ -419,13 +360,11 @@ class DirectNexusWriter:
         # 54-frame batch at 32x500).  Depth-counted context manager:
         # exception-safe and correct when another writer interleaves in
         # the same session (see streaming/cache_conf.py)
-        comp_ctx = uncompressed_cache(spark) if self.persist_batch else None
-        if comp_ctx is not None:
-            comp_ctx.__enter__()
+        comp_ctx = uncompressed_cache(spark)
+        comp_ctx.__enter__()
         n_frames_committed: list[int] = []
         try:
-            if self.persist_batch:
-                msgs.persist()
+            msgs.persist()
             # job 1: slim collect — key + did + veto + count, never arrays
             slim = msgs.select(
                 *_KEY_US, "digitizer_id", "veto_flags",
@@ -451,7 +390,7 @@ class DirectNexusWriter:
                     continue
                 fs = self._pending.get(key)
                 if fs is None:
-                    fs = self._pending[key] = _FrameState(now_ms)
+                    fs = self._pending[key] = FrameState(now_ms)
                 kd = (key, int(r.digitizer_id))
                 if int(r.digitizer_id) in fs.dids:
                     # duplicate (frame, digitiser) message: reject wholesale
@@ -466,24 +405,14 @@ class DirectNexusWriter:
                 fs.veto |= int(r.veto_flags)
                 fs.n_events += int(r.n)
 
-            # dispatch decisions: complete now, or first-arrival TTL expired
-            dispatch: list[tuple[tuple, _FrameState]] = []
-            for key, fs in list(self._pending.items()):
-                if sorted(fs.dids) == self.expected or (
-                    now_ms - fs.first_ms >= self.frame_ttl_ms
-                ):
-                    dispatch.append((key, fs))
-                    del self._pending[key]
-                    self._tombstones[key] = now_ms + self.tombstone_ttl_ms
-            for key in [k for k, e in self._tombstones.items() if e <= now_ms]:
-                del self._tombstones[key]
-
+            dispatch = pick_dispatch(
+                self._pending, self._tombstones, self.expected, now_ms,
+                self.frame_ttl_ms, self.tombstone_ttl_ms,
+            )
             t_fsm = time.perf_counter()
 
-            # run matching + frame sequencing, driver-side (J1 predicate,
-            # run_parameters.rs:156-175), exactly as NexusStreamWriter
             dim_vals, null_rows, per_run, dispatched_keys, frames = (
-                self._match_runs(dispatch, runs_rows)
+                self._match_runs(dispatch)
             )
             n_frames_committed.extend(frames)
 
@@ -510,10 +439,8 @@ class DirectNexusWriter:
                 self._pull_kept_rows(msgs, touched, cross_rejects, dup_in_batch)
             t_write = time.perf_counter()
         finally:
-            if self.persist_batch:
-                msgs.unpersist()
-            if comp_ctx is not None:
-                comp_ctx.__exit__(None, None, None)
+            msgs.unpersist()
+            comp_ctx.__exit__(None, None, None)
 
         self._last_bid = batch_id
         self._save_state()
@@ -532,46 +459,34 @@ class DirectNexusWriter:
         if self.on_commit is not None:
             self.on_commit(sorted(set(n_frames_committed)))
 
-    def _match_runs(self, dispatch, runs_rows):
-        """Run matching + frame sequencing for a dispatch set, driver-side
-        (J1 predicate, run_parameters.rs:156-175) — shared by the batch
-        path and the expiry tick.  Mutates nothing; returns
-        (dim_vals, null_rows, per_run, dispatched_keys, frame_numbers)."""
-        dispatch.sort(key=lambda kf: (kf[0][0], kf[0][4]))
-        per_run: dict[str, tuple[int, int]] = {}
+    def _match_runs(self, dispatch):
+        """frame_core.match_runs over a dispatch set, decorated for the
+        write — shared by the batch path and the expiry tick.  Mutates
+        nothing; returns (dim_vals, null_rows, per_run, dispatched_keys,
+        frame_numbers)."""
+        assigned, per_run = match_runs(
+            [(key, fs.n_events) for key, fs in dispatch],
+            self._load_runs(), self._totals,
+        )
         dim_vals = []
         null_rows = []  # zero-event frames: ONE null-event row each
         dispatched_keys = set()
         frames: list[int] = []
-        for run in runs_rows:
-            for key, fs in dispatch:
-                ts_us = key[0]
-                if run.from_us < ts_us and (
-                    run.until_us is None or ts_us < run.until_us
-                ):
-                    seq, idx = per_run.get(
-                        run.run_name, self._totals.get(run.run_name, (0, 0))
+        for run_name, pos, seq, etz, idx in assigned:
+            key, fs = dispatch[pos]
+            complete = is_complete(fs.dids, self.expected)
+            dim_vals.append(
+                (*key, run_name, fs.veto, complete, seq, etz, idx)
+            )
+            if fs.n_events == 0:
+                null_rows.append(
+                    (
+                        run_name, seq, etz, idx, key[1], key[4], complete,
+                        key[3], fs.veto, None, None, None,
                     )
-                    complete = sorted(fs.dids) == self.expected
-                    dim_vals.append(
-                        (
-                            *key, run.run_name, fs.veto, complete, seq,
-                            (ts_us - run.from_us) * 1000, idx,
-                        )
-                    )
-                    if fs.n_events == 0:
-                        null_rows.append(
-                            (
-                                run.run_name, seq, (ts_us - run.from_us) * 1000,
-                                idx, key[1], key[4], complete, key[3],
-                                fs.veto, None, None, None,
-                            )
-                        )
-                    per_run[run.run_name] = (
-                        seq + 1, idx + max(fs.n_events, 1)
-                    )
-                    dispatched_keys.add(key)
-                    frames.append(int(key[4]))
+                )
+            dispatched_keys.add(key)
+            frames.append(int(key[4]))
         return dim_vals, null_rows, per_run, dispatched_keys, frames
 
     # ---- silent-stream TTL expiry (T1) ----
@@ -594,7 +509,7 @@ class DirectNexusWriter:
             dispatch = [
                 (k, fs)
                 for k, fs in self._pending.items()
-                if now_ms - fs.first_ms >= self.frame_ttl_ms
+                if is_due(fs, self.expected, now_ms, self.frame_ttl_ms)
             ]
             if not dispatch:
                 return []
@@ -607,9 +522,8 @@ class DirectNexusWriter:
         expiry and the pending-cache byte budget (call under _lock,
         after _load_state, with _spark set)."""
         spark = self._spark
-        runs_rows = self._load_runs()
         dim_vals, null_rows, per_run, dispatched_keys, frames = (
-            self._match_runs(dispatch, runs_rows)
+            self._match_runs(dispatch)
         )
         tomb_until = now_ms + self.tombstone_ttl_ms
         if dim_vals:
@@ -788,10 +702,8 @@ class DirectNexusWriter:
         self, spark, msgs, dim_vals, null_rows, per_run,
         dispatched_keys, cross_rejects, dup_in_batch,
     ) -> None:
-        """Job 2: one broadcast-join + posexplode append.  Single-run
-        batches write the run's partition directory directly; a batch
-        spanning a run transition writes all runs in ONE partitionBy
-        job (all-or-nothing, as nexus_stream).  ``msgs=None`` is the
+        """Job 2: one broadcast-join + posexplode append
+        (nexus_stream._append_runs).  ``msgs=None`` is the
         expiry-tick path: the event source is the driver-held carried
         rows alone (a local relation — no scan, no shuffle)."""
         single = len(per_run) == 1
@@ -812,11 +724,13 @@ class DirectNexusWriter:
             out = _events_us_with_dim(
                 ev_src, dim_local, with_run_col=not single, outer=False
             )
-            n_out = self.write_coalesce
-            if n_out is None:
-                n_out = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-            if n_out:
-                out = out.coalesce(n_out)
+            # a micro-batch otherwise emits ONE FILE PER SOURCE PARTITION
+            # (~one per arrival file): bound the append's files to the
+            # session's shuffle partitions, the per-batch file rate the
+            # FSM door's state partitioning produces
+            out = out.coalesce(
+                int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
+            )
         if null_rows:
             schema = _NULL_ROW_SCHEMA if single else (
                 "run_name string, " + _NULL_ROW_SCHEMA
@@ -824,20 +738,8 @@ class DirectNexusWriter:
             vals = [r[1:] for r in null_rows] if single else null_rows
             nr = spark.createDataFrame(vals, schema)
             out = nr if out is None else out.unionByName(nr)
-        if out is None:
-            return
-        if single:
-            (run_name,) = per_run
-            out.write.mode("append").option("compression", "snappy").parquet(
-                os.path.join(self.path, f"run_name={_quote(run_name)}")
-            )
-        else:
-            (
-                out.write.mode("append")
-                .option("compression", "snappy")
-                .partitionBy("run_name")
-                .parquet(self.path)
-            )
+        if out is not None:
+            _append_runs(out, self.path, per_run)
 
     def _pull_kept_rows(self, msgs, keys, cross_rejects, dup_in_batch) -> None:
         """Collect the batch's rows belonging to still-pending frames

@@ -18,14 +18,19 @@ topology-level — run the LATENCY-critical admission path as its own
 fetch loop (the broker client is already in-process) and keep the
 exactly-once bookkeeping protocol the micro-batch doors proved out.
 
-What stays identical to the direct door (streaming/nexus_direct.py):
+Shared through ``frame_core`` with the other two doors (one copy):
 
-* the frame FSM — first-arrival TTL, completeness on the expected
-  digitiser set, duplicate (frame, digitiser) rejection, tombstoned
-  late-message rejection (digitiser-aggregator/src/frame/cache.rs);
+* the frame dispatch rule — completeness on the expected digitiser
+  set or first-arrival TTL — and the tombstones that reject late
+  messages (digitiser-aggregator/src/frame/cache.rs);
 * run matching + frame sequencing (J1 predicate,
   run_engine/run/run_parameters.rs:156-175) with per-run continuation
-  totals;
+  totals, and the run directory name.
+
+Admission — duplicate (frame, digitiser) rejection over Arrow row
+indices, and the cursor floors — is this door's own.  What stays the
+same as the direct door (streaming/nexus_direct.py):
+
 * the sink LAYOUT — ``run_name=<escaped>`` partition directories of
   snappy Parquet with the NEXUS event schema, schema-compatible with
   what ``partitionBy("run_name")`` produces, so every downstream
@@ -139,7 +144,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .nexus_stream import _quote
+from .frame_core import (
+    FrameState, is_complete, match_runs, pick_dispatch, run_dir_name,
+    runs_snapshot, unquote,
+)
 
 _EVENT_SCHEMA = pa.schema(
     [
@@ -198,17 +206,11 @@ def _flat_lists(batches: list[pa.RecordBatch], name: str):
     )
 
 
-class _FrameState:
-    __slots__ = (
-        "dids", "veto", "first_ms", "n_events", "parts", "floor",
-        "complete",
-    )
+class _FrameState(FrameState):
+    __slots__ = ("parts", "floor", "complete")
 
     def __init__(self, first_ms: int, floor: dict[str, int]):
-        self.dids: set[int] = set()
-        self.veto = 0
-        self.first_ms = first_ms
-        self.n_events = 0
+        super().__init__(first_ms)
         # aev2 input: the message CARRIES the completeness verdict (the
         # aggregator already judged it); None = derive from dids
         self.complete: bool | None = None
@@ -230,24 +232,6 @@ def _fsync_path(path: str) -> None:
         os.fsync(fd)
     finally:
         os.close(fd)
-
-
-def _runs_rows(runs) -> list[dict]:
-    """Accept the RUN_SCHEMA Spark DataFrame the other doors take (one
-    driver-side collect — runs are a tiny dimension) or a pre-collected
-    list of {run_name, from_us, until_us} dicts."""
-    if isinstance(runs, list):
-        return runs
-    from pyspark.sql import functions as F
-
-    return [
-        r.asDict()
-        for r in runs.select(
-            "run_name",
-            F.unix_micros("collect_from").alias("from_us"),
-            F.unix_micros("collect_until").alias("until_us"),
-        ).collect()
-    ]
 
 
 class FetchLoopNexusWriter:
@@ -300,7 +284,7 @@ class FetchLoopNexusWriter:
         # path pays the parent-directory fsync only when a run dir or
         # the state dir is first created, not per dispatch
         self._durable_dirs: set[str] = set()
-        self.runs_rows = _runs_rows(runs)
+        self.runs_rows = runs_snapshot(runs)
         self.path = path
         self.expected = sorted(int(d) for d in expected_digitizers)
         self.bootstrap = bootstrap
@@ -357,8 +341,6 @@ class FetchLoopNexusWriter:
         totals: dict[str, tuple[int, int]] = {}
         if not os.path.isdir(self.path):
             return totals
-        from .nexus_stream import _unquote
-
         for name in os.listdir(self.path):
             if not name.startswith("run_name="):
                 continue
@@ -379,7 +361,7 @@ class FetchLoopNexusWriter:
                     max_seq = max(
                         max_seq, int(pa.compute.max(t.column(0)).as_py())
                     )
-            totals[_unquote(name[len("run_name="):])] = (max_seq + 1, n_rows)
+            totals[unquote(name[len("run_name="):])] = (max_seq + 1, n_rows)
         return totals
 
     # ---- state persistence ----
@@ -694,17 +676,10 @@ class FetchLoopNexusWriter:
         t_decode = time.perf_counter()
         decode_s += t_decode - t_start
 
-        # dispatch: complete now, or first-arrival TTL expired
-        dispatch = []
-        for key, fs in list(self._pending.items()):
-            if sorted(fs.dids) == self.expected or (
-                now_ms - fs.first_ms >= self.frame_ttl_ms
-            ):
-                dispatch.append((key, fs))
-                del self._pending[key]
-                self._tombstones[key] = now_ms + self.tombstone_ttl_ms
-        for key in [k for k, e in self._tombstones.items() if e <= now_ms]:
-            del self._tombstones[key]
+        dispatch = pick_dispatch(
+            self._pending, self._tombstones, self.expected, now_ms,
+            self.frame_ttl_ms, self.tombstone_ttl_ms,
+        )
 
         # the cursor advances now; with nothing dispatched it persists
         # lazily — records not yet persisted re-poll after a crash and
@@ -806,33 +781,28 @@ class FetchLoopNexusWriter:
             fs.parts.append((rb, np.sort(order[sel])))
 
     def _match_runs(self, dispatch):
-        """Identical decision table to DirectNexusWriter._match_runs
-        (driver-side J1 + sequencing), returning per-frame dim tuples."""
-        dispatch.sort(key=lambda kf: (kf[0][0], kf[0][4]))
-        per_run: dict[str, tuple[int, int]] = {}
-        dims = []  # (run_name, key, fs, seq, etz, idx)
-        frames: list[int] = []
-        for run in self.runs_rows:
-            for key, fs in dispatch:
-                ts_us = key[0]
-                if run["from_us"] < ts_us and (
-                    run["until_us"] is None or ts_us < run["until_us"]
-                ):
-                    seq, idx = per_run.get(
-                        run["run_name"],
-                        self._totals.get(run["run_name"], (0, 0)),
-                    )
-                    dims.append(
-                        (
-                            run["run_name"], key, fs, seq,
-                            (ts_us - run["from_us"]) * 1000, idx,
-                        )
-                    )
-                    per_run[run["run_name"]] = (
-                        seq + 1, idx + max(fs.n_events, 1)
-                    )
-                    frames.append(int(key[4]))
-        return dims, per_run, frames
+        """frame_core.match_runs over a dispatch set, as per-frame dim
+        tuples (run_name, key, fs, seq, etz, idx)."""
+        assigned, per_run = match_runs(
+            [(key, fs.n_events) for key, fs in dispatch],
+            self.runs_rows, self._totals,
+        )
+        dims = [
+            (run, *dispatch[pos], seq, etz, idx)
+            for run, pos, seq, etz, idx in assigned
+        ]
+        return dims, per_run, [int(d[1][4]) for d in dims]
+
+    def refresh_runs(self, runs) -> None:
+        """Replace the runs dimension (a RUN_SCHEMA DataFrame or the
+        collected dict list) — the hook ``retire_completed_runs`` calls so
+        a retired run is never matched, and its live directory never
+        re-created, again.  Collected outside the lock; swapped in under
+        it, so every cycle from the next one on matches the new runs.
+        Not to be called from ``on_commit``, which runs under the lock."""
+        rows = runs_snapshot(runs)
+        with self._lock:
+            self.runs_rows = rows
 
     def _build_run_tables(self, dims) -> dict[str, pa.Table]:
         """The posexplode equivalent in Arrow, grouped PER RUN: repeat
@@ -914,7 +884,7 @@ class FetchLoopNexusWriter:
                 _const(
                     [
                         fs.complete if fs.complete is not None
-                        else sorted(fs.dids) == self.expected
+                        else is_complete(fs.dids, self.expected)
                         for fs in fss
                     ],
                     bool,
@@ -964,7 +934,7 @@ class FetchLoopNexusWriter:
     def _alloc_part(self, run_name: str) -> list[str]:
         """Allocate one part's (tmp, final) path pair — single-threaded
         (mutates the monotone file sequence)."""
-        run_dir = os.path.join(self.path, f"run_name={_quote(run_name)}")
+        run_dir = os.path.join(self.path, run_dir_name(run_name))
         os.makedirs(run_dir, exist_ok=True)
         import uuid
 

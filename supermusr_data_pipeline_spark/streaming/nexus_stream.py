@@ -29,6 +29,7 @@ O(runs), kept on the driver, never the data path.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cache_conf import uncompressed_cache
+from .frame_core import match_runs, run_dir_name, runs_snapshot
 
 
 _FRAME_KEY = ["ts", "period_number", "protons_per_pulse", "running", "frame_number"]
@@ -64,31 +66,6 @@ def _slim_frames(frames_batch: DataFrame) -> DataFrame:
         F.col("veto_flags").alias("frame_veto_flags"),
         "complete",
         F.greatest(F.size("channel"), F.lit(1)).cast("long").alias("n_events"),
-    )
-
-
-def _quote(name: str) -> str:
-    """Escape a partition VALUE for use in a ``run_name=<value>`` directory
-    name, matching Spark's ExternalCatalogUtils.escapePathName character
-    set — so a directory this sink writes is byte-identical to what
-    ``partitionBy("run_name")`` would have produced and partition
-    discovery decodes it to the same value."""
-    out = []
-    for c in name:
-        if ord(c) < 0x20 or c == "\x7f" or c in '"#%\'*/:=?\\{[]^':
-            out.append("%%%02X" % ord(c))
-        else:
-            out.append(c)
-    return "".join(out)
-
-
-def _unquote(name: str) -> str:
-    """Inverse of :func:`_quote` (Spark's unescapePathName): decode the
-    ``%XX`` escapes a partition directory name carries."""
-    import re
-
-    return re.sub(
-        "%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
     )
 
 
@@ -185,9 +162,79 @@ def _events_us_with_dim(
     )
 
 
+def _append_runs(out: DataFrame, path: str, runs) -> None:
+    """Append one batch's event rows (``runs``: the run names they
+    belong to; ``out`` carries a run_name column only when there are
+    several) to the sink, snappy-compressed: the sink appends on the
+    latency path every batch (the reference's HDF5 run files are
+    uncompressed — nexus_structure/mod.rs); compaction to zstd belongs
+    to the downstream maintenance pass.
+
+    A single-run batch — the overwhelmingly common case — writes the
+    run's partition DIRECTORY directly, skipping the dynamic-partition
+    machinery, whose per-task sort-by-partition-key and multi-directory
+    commit were flat per-batch latency; the directory name carries
+    run_name, so readers see exactly what partitionBy would have written.
+    A batch spanning a run transition writes all its runs in ONE
+    partitionBy job: independent per-run jobs opened a crash window in
+    which the first run's append committed and the batch replay then
+    re-appended it (ADVICE r7).  One job commits all runs or none."""
+    w = out.write.mode("append").option("compression", "snappy")
+    if len(runs) == 1:
+        (run_name,) = runs
+        w.parquet(os.path.join(path, run_dir_name(run_name)))
+    else:
+        w.partitionBy("run_name").parquet(path)
 
 
-class NexusStreamWriter:
+def _totals_from_sink(spark: SparkSession, path: str) -> dict[str, tuple[int, int]]:
+    """T5 resume: each run's continuation totals re-derived from the sink
+    itself — the reference reopens an orphaned .nxs and reads its sizes
+    back (run_engine/engine.rs:144-173)."""
+    totals: dict[str, tuple[int, int]] = {}
+    if os.path.isdir(path) and any(
+        n.startswith("run_name=") for n in os.listdir(path)
+    ):
+        prev = spark.read.parquet(path)
+        for r in (
+            prev.groupBy("run_name")
+            .agg(
+                (F.max("frame_seq") + 1).alias("next_seq"),
+                F.count("*").alias("n_events"),
+            )
+            .collect()
+        ):
+            totals[r["run_name"]] = (int(r["next_seq"]), int(r["n_events"]))
+    return totals
+
+
+class _RunsDimension:
+    """The runs dimension of a Spark door: the RUN_SCHEMA DataFrame,
+    collected once on first use.  The reference's nexus-writer holds the
+    same table in memory (run_engine/engine.rs:54-80); re-broadcasting it
+    inside every micro-batch's plan was a measurable flat cost on the
+    latency path, and matching frames against it on the driver is
+    trivial."""
+
+    def __init__(self, runs: DataFrame):
+        self.runs = runs
+        self._runs_rows: list[dict] | None = None
+
+    def _load_runs(self) -> list[dict]:
+        if self._runs_rows is None:
+            self._runs_rows = runs_snapshot(self.runs)
+        return self._runs_rows
+
+    def refresh_runs(self, runs: DataFrame | None = None) -> None:
+        """Drop the collected runs snapshot (optionally replacing the
+        DataFrame) so the next batch re-collects it — the hook for a
+        control plane that starts/stops runs while the sink is live."""
+        if runs is not None:
+            self.runs = runs
+        self._runs_rows = None
+
+
+class NexusStreamWriter(_RunsDimension):
     """The foreachBatch callable.  Holds per-run continuation totals
     {run_name: (next_frame_seq, next_event_index)}; rebuilds them from the
     sink directory on first use (T5 resume).
@@ -201,19 +248,9 @@ class NexusStreamWriter:
     replay short-circuits (the nexus_direct.py protocol, sidecar
     ``_writer_state``)."""
 
-    def __init__(
-        self, runs: DataFrame, path: str, on_commit=None,
-        write_intent: bool = True,
-    ):
-        self.runs = runs
+    def __init__(self, runs: DataFrame, path: str, on_commit=None):
+        super().__init__(runs)
         self.path = path
-        # write_intent=False drops the per-batch write-ahead intent and
-        # with it the exactly-once-under-replay guarantee (the door
-        # reverts to documented at-least-once with compact_nexus_run as
-        # the dedupe backstop).  Exists for the same-session A/B that
-        # attributes the intent's latency cost (tools/ab_fsm_intent.py);
-        # production keeps the default.
-        self.write_intent = write_intent
         # optional observer: called with the sorted frame_numbers committed
         # by each batch, AFTER the sink write — rides the slim dimension
         # rows the batch collects anyway, so observation adds no Spark
@@ -226,57 +263,15 @@ class NexusStreamWriter:
         # reads per batch; no Spark-side cost)
         self.phase_log: list | None = None
         self._totals: dict[str, tuple[int, int]] | None = None
-        self._runs_rows: list | None = None
         self._skip_bid: int | None = None
-
-    def _load_runs(self, spark: SparkSession) -> list:
-        """Collect the tiny runs dimension ONCE (run_name + interval in
-        integer µs).  The reference's nexus-writer holds the same table in
-        memory (run_engine/engine.rs:54-80); re-broadcasting it inside
-        every micro-batch's plan was a measurable flat cost on the
-        latency path, and the interval match over (frames-in-batch ×
-        runs) rows is driver-trivial."""
-        if self._runs_rows is None:
-            self._runs_rows = self.runs.select(
-                "run_name",
-                F.unix_micros("collect_from").alias("from_us"),
-                F.unix_micros("collect_until").alias("until_us"),
-            ).collect()
-        return self._runs_rows
-
-    def refresh_runs(self, runs: DataFrame | None = None) -> None:
-        """Drop the collected runs snapshot (optionally replacing the
-        DataFrame) so the next batch re-collects it — the hook for a
-        control plane that starts/stops runs while the sink is live."""
-        if runs is not None:
-            self.runs = runs
-        self._runs_rows = None
 
     def _intent_file(self) -> str:
         return os.path.join(self.path, "_writer_state", "intent.json")
 
-    def _totals_from_sink(self, spark: SparkSession) -> dict[str, tuple[int, int]]:
-        totals: dict[str, tuple[int, int]] = {}
-        if os.path.isdir(self.path) and any(
-            n.startswith("run_name=") for n in os.listdir(self.path)
-        ):
-            # T5 resume: re-derive continuation totals from the sink itself
-            prev = spark.read.parquet(self.path)
-            for r in (
-                prev.groupBy("run_name")
-                .agg(
-                    (F.max("frame_seq") + 1).alias("next_seq"),
-                    F.count("*").alias("n_events"),
-                )
-                .collect()
-            ):
-                totals[r["run_name"]] = (int(r["next_seq"]), int(r["n_events"]))
-        return totals
-
     def _load_totals(self, spark: SparkSession) -> dict[str, tuple[int, int]]:
         if self._totals is not None:
             return self._totals
-        totals = self._totals_from_sink(spark)
+        totals = _totals_from_sink(spark, self.path)
         itf = self._intent_file()
         if os.path.isfile(itf):
             # the intent persists across batches (overwritten, never
@@ -286,8 +281,6 @@ class NexusStreamWriter:
             # batch's append committed — short-circuit its replay; a
             # long-committed stale intent is harmless because the engine
             # never re-delivers batches at-or-before its commit log.
-            import json
-
             with open(itf) as fh:
                 intent = json.load(fh)
             pre = {k: tuple(v) for k, v in intent["totals"].items()}
@@ -318,7 +311,7 @@ class NexusStreamWriter:
         # tiny per-frame dimension collect doubles as the totals /
         # commit-observation source (no post-write job at all), and the
         # write is the only action that touches the event arrays.
-        runs_rows = self._load_runs(spark)
+        runs_rows = self._load_runs()
         # one-cycle micro-cache: columnar compression is pure CPU here —
         # depth-counted, exception-safe flip (streaming/cache_conf.py)
         comp_ctx = uncompressed_cache(spark)
@@ -338,97 +331,42 @@ class NexusStreamWriter:
             slim_rows = _slim_frames(frames_batch).collect()
             t_fsm = time.perf_counter()
             frame_numbers = set()
-            slim_rows.sort(key=lambda r: (r.ts_us, r.frame_number))
-            matched = []  # (run_row, frame_row), grouped per run in order
-            for run in runs_rows:
-                for r in slim_rows:
-                    # J1 predicate (run_parameters.rs:156-175), exactly as
-                    # operators/run_matching.match_events_to_runs
-                    if run.from_us < r.ts_us and (
-                        run.until_us is None or r.ts_us < run.until_us
-                    ):
-                        matched.append((run, r))
-            if matched:
-                per_run: dict[str, tuple[int, int]] = {}
+            # run matching + frame sequencing (frame_core.match_runs)
+            # (the first five slim columns are the frame key)
+            assigned, per_run = match_runs(
+                [(r[:5], r.n_events) for r in slim_rows], runs_rows, totals
+            )
+            if assigned:
                 dim_vals = []
-                for run, r in matched:
-                    seq, idx = per_run.get(
-                        run.run_name, totals.get(run.run_name, (0, 0))
-                    )
+                for run_name, pos, seq, etz, idx in assigned:
+                    r = slim_rows[pos]
                     dim_vals.append(
                         (
-                            r.ts_us, r.period_number, r.protons_per_pulse,
-                            r.running, r.frame_number, run.run_name,
-                            r.frame_veto_flags, r.complete, seq,
-                            (r.ts_us - run.from_us) * 1000, idx,
+                            *r[:5], run_name, r.frame_veto_flags, r.complete,
+                            seq, etz, idx,
                         )
                     )
-                    per_run[run.run_name] = (seq + 1, idx + r.n_events)
                     frame_numbers.add(int(r.frame_number))
-                # Single-run batch (the overwhelmingly common case on the
-                # latency path): write the run's partition DIRECTORY
-                # directly, skipping the dynamic-partition machinery —
-                # its per-task sort-by-partition-key and multi-directory
-                # commit were flat per-batch latency.  The directory name
-                # carries run_name (standard partitioned-parquet layout),
-                # so readers see exactly what partitionBy would have
-                # written.  snappy, not the session's zstd: the sink
-                # appends on the latency path every micro-batch (the
-                # reference's HDF5 run files are uncompressed —
-                # nexus_structure/mod.rs); compaction to zstd belongs to
-                # the downstream maintenance pass, not here.
-                #
-                # A batch spanning MULTIPLE runs (a run transition) writes
-                # all of them in ONE partitionBy job instead: independent
-                # per-run jobs opened a crash window in which the first
-                # run's append committed and the batch replay then
-                # re-appended it (duplicate events the totals re-derivation
-                # would count as real — ADVICE r7).  One job commits all
-                # runs or none, restoring the all-or-nothing property at
-                # the cost of the dynamic-partition machinery only on the
-                # rare transition batch.
                 # write-ahead intent: (bid, pre-batch totals) before the
-                # append, removed after totals update — see class docstring
-                if self.write_intent:
-                    import json
-
-                    os.makedirs(
-                        os.path.dirname(self._intent_file()), exist_ok=True
+                # append — see class docstring
+                os.makedirs(os.path.dirname(self._intent_file()), exist_ok=True)
+                itmp = self._intent_file() + ".tmp"
+                with open(itmp, "w") as fh:
+                    json.dump(
+                        {
+                            "bid": batch_id,
+                            "totals": {k: list(v) for k, v in totals.items()},
+                        },
+                        fh,
                     )
-                    itmp = self._intent_file() + ".tmp"
-                    with open(itmp, "w") as fh:
-                        json.dump(
-                            {
-                                "bid": batch_id,
-                                "totals": {
-                                    k: list(v) for k, v in totals.items()
-                                },
-                            },
-                            fh,
-                        )
-                    os.replace(itmp, self._intent_file())
-                if len(per_run) == 1:
-                    (run_name,) = per_run
-                    dim_local = spark.createDataFrame(dim_vals, _DIM_SCHEMA)
-                    (
-                        _events_with_dim(frames_batch, dim_local, with_run_col=False)
-                        .write.mode("append")
-                        .option("compression", "snappy")
-                        .parquet(
-                            os.path.join(
-                                self.path, f"run_name={_quote(run_name)}"
-                            )
-                        )
-                    )
-                else:
-                    dim_local = spark.createDataFrame(dim_vals, _DIM_SCHEMA)
-                    (
-                        _events_with_dim(frames_batch, dim_local, with_run_col=True)
-                        .write.mode("append")
-                        .option("compression", "snappy")
-                        .partitionBy("run_name")
-                        .parquet(self.path)
-                    )
+                os.replace(itmp, self._intent_file())
+                dim_local = spark.createDataFrame(dim_vals, _DIM_SCHEMA)
+                _append_runs(
+                    _events_with_dim(
+                        frames_batch, dim_local, with_run_col=len(per_run) > 1
+                    ),
+                    self.path, per_run,
+                )
                 totals.update(per_run)
         finally:
             frames_batch.unpersist()

@@ -6,19 +6,6 @@ import pytest
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
-# transformWithStateInPandas workers need a protobuf runtime; this
-# container has none installed, but the Cloud SDK bundles one that the
-# tools/pyshims sitecustomize adapts (see its docstring).  Must be on
-# PYTHONPATH before the JVM starts so spawned Python workers inherit it;
-# inert for every other test.
-_SHIM = os.path.join(_REPO, "tools", "pyshims")
-_GAE = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-if os.path.isdir(_GAE):
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        [_SHIM, _GAE]
-        + ([os.environ["PYTHONPATH"]] if os.environ.get("PYTHONPATH") else [])
-    )
-
 from supermusr_data_pipeline_spark.session import get_spark  # noqa: E402
 
 

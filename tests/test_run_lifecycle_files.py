@@ -3,6 +3,9 @@
 Hadoop-FS renames over the partitioned nexus sink."""
 
 import os
+from datetime import datetime, timezone
+
+import pytest
 
 from supermusr_data_pipeline_spark.generator import generate_runs, generate_traces
 from supermusr_data_pipeline_spark.operators.nexus_sink import (
@@ -88,3 +91,83 @@ def test_retire_with_compaction(spark, tmp_path):
             tuple(map(repr, r)) for r in spark.read.parquet(p).collect()
         )
         assert after == before[f"run_name={name}"]
+
+
+@pytest.mark.parametrize("name", ["run_a", "a%b", "MuSR:12"])
+def test_retire_escaped_run_name(spark, tmp_path, name):
+    """A run name that partition directories escape (``%`` -> ``%25``,
+    ``:`` -> ``%3A``) retires and compacts like a plain one."""
+    runs = spark.createDataFrame(
+        [(name, datetime(2024, 3, 1), datetime(2024, 3, 2))],
+        "run_name string, collect_from timestamp, collect_until timestamp",
+    )
+    rows = spark.createDataFrame(
+        [(name, s, 10 * s, s, 100 * s) for s in range(4)],
+        "run_name string, frame_seq long, event_index long, event_id int, "
+        "event_time_offset long",
+    )
+    sink = str(tmp_path / "sink")
+    write_nexus(rows, sink)
+    moved = retire_completed_runs(
+        spark, sink, runs, now="2030-01-01 00:00:00", compact=True
+    )
+    assert moved == [name]
+    assert not [d for d in os.listdir(sink) if d.startswith("run_name=")]
+    back = spark.read.parquet(os.path.join(sink, "completed"))
+    assert sorted(tuple(r) for r in back.select(*rows.columns).collect()) == (
+        sorted(tuple(r) for r in rows.collect())
+    )
+
+
+def test_retire_drops_run_from_fetch_loop(spark, tmp_path):
+    """``writer=`` a fetch-loop door: after retirement a straggler frame
+    inside the retired run's interval matches no run, so the run's live
+    directory is not re-created next to its completed/ copy."""
+    from pyspark.sql import functions as F
+
+    from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
+    from supermusr_data_pipeline_spark.sources import messages as M
+    from supermusr_data_pipeline_spark.streaming.nexus_fetchloop import (
+        FetchLoopNexusWriter,
+    )
+
+    t0_us = int(datetime(2024, 3, 1, tzinfo=timezone.utc).timestamp() * 1e6)
+    runs = spark.createDataFrame(
+        [("run_a", t0_us - 1_000_000, t0_us + 100_000)],
+        "run_name string, from_us long, until_us long",
+    ).select(
+        "run_name",
+        F.timestamp_micros("from_us").alias("collect_from"),
+        F.timestamp_micros("until_us").alias("collect_until"),
+    )
+
+    def frame(fno):  # both digitisers, 2 events each, 20 ms apart
+        md = {
+            "ts_ns": (t0_us + fno * 20_000) * 1000, "period_number": 0,
+            "protons_per_pulse": 4, "running": True, "frame_number": fno,
+            "veto_flags": 0,
+        }
+        return [
+            ConsumerRecord(
+                "t", 0, 2 * fno + d, 0, b"k",
+                M.encode_dev2(d, md, [10, 20], [1, 2], [d, d]),
+            )
+            for d in (0, 1)
+        ]
+
+    sink = str(tmp_path / "sink")
+    live = os.path.join(sink, "run_name=run_a")
+    w = FetchLoopNexusWriter(runs, sink, [0, 1], "unused:0", ["t"])
+    assert w.poll_once(records=frame(0)) == [0]
+    assert os.path.isdir(live)
+
+    moved = retire_completed_runs(
+        spark, sink, runs, now="2030-01-01 00:00:00", writer=w
+    )
+    assert moved == ["run_a"]
+    assert not os.path.exists(live)
+
+    assert w.poll_once(records=frame(2)) == []  # inside the retired interval
+    assert not os.path.exists(live)
+    completed = os.path.join(sink, "completed", "run_name=run_a")
+    assert spark.read.parquet(completed).count() == 4
