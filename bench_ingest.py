@@ -595,410 +595,10 @@ def bench_kafka_partition_sweep(spark) -> dict:
     return sweep
 
 
-def _cluster_soak_once(spark, workdir: str, rep: int = 0) -> dict:
-    """One chaos-soak run (VERDICT r11 #5): the full 32x500 shape paced
-    at 50 fps over a 3-broker REPLICATED MiniCluster (rf=2, acks=-1,
-    min.insync.replicas=2) through the production direct door, with a
-    leader ``kill()`` mid-soak and a ``restart()`` ~2 s later — the
-    broker-bounce the reference pipeline survives by reconnecting
-    (common/src/lib.rs:72-94).
-
-    During the bounce, produces to under-min-insync partitions fail
-    LOUD (error 19) and the feeder retries the whole frame — partial
-    re-sends may duplicate messages that did land, and the door's
-    duplicate-(frame, digitiser) rejection is what keeps the sink
-    exactly-once (the accounting below proves it).  frame_ttl_ms is
-    raised above the bounce window so frames complete rather than
-    dispatch incomplete.  Reported: keep-up across the kill, steady p50
-    (second half = post-recovery), the p95/max spike, the sink
-    accounting (rows, distinct frames, contiguous frame_seq), and a
-    WINDOWED decomposition (pre-kill vs post-recovery produce-wait /
-    HW-lag / micro-batch trigger duration) that splits any post-bounce
-    residual into its feeder / replication / sink terms (VERDICT r13
-    #1)."""
-    import threading
-
-    import bench_streaming as BS
-    from supermusr_data_pipeline_spark.kafka import MiniProducer
-    from supermusr_data_pipeline_spark.kafka.cluster import MiniCluster
-    from supermusr_data_pipeline_spark.kafka.spark_source import (
-        KafkaWireDataSource,
-    )
-    from supermusr_data_pipeline_spark.sources import messages as M
-    from supermusr_data_pipeline_spark.streaming.envelope_stream import (
-        kafka_source_options,
-    )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        DirectNexusWriter,
-    )
-
-    n_dig = 32
-    n_frames = int(os.environ.get("SPARK_GRAFT_CLUSTER_SOAK_FRAMES", "1500"))
-    # wall-clock bounce: kill at 1/3 of the soak, restart 2 s later.
-    # The bounce must NOT be keyed to feeder progress — produces to
-    # under-min-insync partitions block the feeder, so a frame-indexed
-    # restart would deadlock (the feeder can never reach it)
-    kill_t_s = (n_frames * BS.FRAME_PERIOD_S) / 3
-    bounce_s = 2.0
-    n_total = BS.N_WARMUP + n_frames
-
-    ch = [int(e % 8) for e in range(BS.EVENTS_PER_MESSAGE)]
-    et = [int(e * 37 % 20_000_000) for e in range(BS.EVENTS_PER_MESSAGE)]
-    tape = []
-    for i in range(n_total):
-        md = {
-            "ts_ns": (BS._BASE_TS_US + i * int(BS.FRAME_PERIOD_S * 1_000_000))
-            * 1000,
-            "period_number": i // 1000,
-            "protons_per_pulse": 4,
-            "running": True,
-            "frame_number": i,
-            "veto_flags": 1 << (i % 4),
-        }
-        ev = [int((e * 7 + i) % 4096) for e in range(BS.EVENTS_PER_MESSAGE)]
-        tape.append(
-            [M.encode_dev2(d, md, et, ev, ch) for d in range(n_dig)]
-        )
-
-    spark.dataSource.register(KafkaWireDataSource)
-    emit: dict[int, float] = {}
-    lock = threading.Lock()
-
-    def on_commit(frames):
-        t = time.perf_counter()
-        with lock:
-            for f in frames:
-                emit.setdefault(f, t)
-
-    sink = os.path.join(workdir, f"cluster_soak_sink_{rep}")
-    events = {"kill_s": None, "restart_s": None}
-    wall = {"kill": None, "restart": None, "feed0": None}
-    with MiniCluster(
-        n_brokers=3, replication_factor=2, min_insync_replicas=2,
-        replica_lag_ms=2000,
-    ) as cluster:
-        cluster.create_topic("daq-events", partitions=4)
-        victim = cluster.meta.state("daq-events", 0).leader
-        opts = kafka_source_options(
-            cluster.bootstrap, ["daq-events"], starting_offsets="earliest",
-        )
-        messages = (
-            spark.readStream.format("kafka-wire").options(**opts)
-            .option("valueDecode", "dev2").load()
-        )
-        writer = DirectNexusWriter(
-            BS._runs_df(spark, n_total), sink, list(range(n_dig)),
-            frame_ttl_ms=5000, on_commit=on_commit,
-        )
-        q = (
-            messages.writeStream.foreachBatch(writer)
-            .option(
-                "checkpointLocation",
-                os.path.join(workdir, f"cluster_soak_ckpt_{rep}"),
-            )
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-
-        prod = MiniProducer(cluster.bootstrap, buffer_max=n_dig)
-        produce_wait: dict[int, float] = {}
-
-        def send_frame(i):
-            # loud-failure retry loop: error 19 during the bounce window
-            # means the frame re-sends wholesale; the sink FSM dedupes
-            t_send = time.perf_counter()
-            for _ in range(600):
-                try:
-                    for d, payload in enumerate(tape[i]):
-                        prod.send("daq-events", payload, key=str(d).encode())
-                    prod.flush()
-                    produce_wait[i] = time.perf_counter() - t_send
-                    return
-                except OSError:
-                    time.sleep(0.05)
-            raise RuntimeError(f"frame {i} unsendable after 30 s of retries")
-
-        # HW-advance lag sampler: committed visibility (sum of the
-        # partitions' high watermarks) vs what the producer has had
-        # acked — the replication-path term of the cycle decomposition
-        # (produce-wait / HW-lag / sink-drain), VERDICT r12 #1.
-        # Timestamped so the lag can be WINDOWED pre-kill vs
-        # post-recovery (VERDICT r13 #1).
-        hw_lag_samples: list[tuple[float, int]] = []
-        sampler_stop = threading.Event()
-
-        def hw_sampler():
-            while not sampler_stop.is_set():
-                with cluster.meta.lock:
-                    parts = cluster.meta.topics.get("daq-events", [])
-                    hw_sum = sum(st.hw for st in parts)
-                hw_lag_samples.append(
-                    (time.perf_counter(), max(0, prod.acked - hw_sum))
-                )
-                sampler_stop.wait(0.1)
-
-        sampler = threading.Thread(target=hw_sampler, daemon=True)
-        sampler.start()
-
-        for i in range(BS.N_WARMUP):
-            send_frame(i)
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            with lock:
-                if len(emit) >= BS.N_WARMUP:
-                    break
-            time.sleep(0.05)
-
-        arrival: dict[int, float] = {}
-
-        t_feed0 = [None]
-
-        def bouncer():
-            while t_feed0[0] is None:
-                time.sleep(0.01)
-            t0 = t_feed0[0]
-            time.sleep(max(0.0, t0 + kill_t_s - time.perf_counter()))
-            cluster.kill(victim)
-            events["kill_s"] = round(time.perf_counter() - t0, 2)
-            wall["kill"] = time.time()
-            time.sleep(bounce_s)
-            cluster.restart(victim)
-            events["restart_s"] = round(time.perf_counter() - t0, 2)
-            wall["restart"] = time.time()
-
-        bt = threading.Thread(target=bouncer, daemon=True)
-        bt.start()
-
-        def feeder():
-            t0 = time.perf_counter()
-            t_feed0[0] = t0
-            wall["feed0"] = time.time()
-            for i in range(BS.N_WARMUP, n_total):
-                rel = i - BS.N_WARMUP
-                send_frame(i)
-                arrival[i] = time.perf_counter()
-                lag = (
-                    t0 + (rel + 1) * BS.FRAME_PERIOD_S - time.perf_counter()
-                )
-                if lag > 0:
-                    time.sleep(lag)
-
-        th = threading.Thread(target=feeder, daemon=True)
-        th.start()
-        deadline = time.time() + n_frames * BS.FRAME_PERIOD_S + 180
-        while time.time() < deadline:
-            with lock:
-                if len(emit) >= n_total:
-                    break
-            time.sleep(0.05)
-        th.join(timeout=15)
-        bt.join(timeout=15)
-        sampler_stop.set()
-        sampler.join(timeout=5)
-        # micro-batch durations for the windowed split below: Spark keeps
-        # the last ~100 progress events — this soak runs ~20-40 batches
-        progress = list(q.recentProgress or [])
-        q.stop()
-        prod.close()
-
-    measured = sorted(i for i in range(BS.N_WARMUP, n_total) if i in emit)
-    lats = {i: emit[i] - arrival[i] for i in measured if i in arrival}
-    lat = sorted(lats.values())
-    n_done = len(lat)
-    keys = sorted(lats)
-    t0 = arrival[keys[0]] if keys else 0.0
-    slope = BS._slope(
-        [arrival[i] - t0 for i in keys], [lats[i] for i in keys]
-    )
-    # windowed view of the disturbance: a single whole-soak slope reads
-    # positive across ANY step recovery, so segment by arrival time
-    # relative to the bounce — pre-kill steady, the bounce+drain spike,
-    # and the final quarter (post-recovery)
-    def _p50(vals):
-        vals = sorted(vals)
-        return round(vals[len(vals) // 2], 4) if vals else None
-
-    kill_abs = (t0 + events["kill_s"]) if events["kill_s"] else None
-    pre = [lats[i] for i in keys if kill_abs and arrival[i] < kill_abs]
-    last_q = [
-        lats[i] for i in keys
-        if i >= BS.N_WARMUP + 3 * (n_total - BS.N_WARMUP) // 4
-    ]
-    recovered = bool(
-        pre and last_q and _p50(last_q) <= max(1.5 * _p50(pre), _p50(pre) + 0.5)
-    )
-    second = sorted(
-        lats[i] for i in keys if i >= BS.N_WARMUP + (n_total - BS.N_WARMUP) // 2
-    )
-    # sink accounting: every frame exactly once, complete, contiguous
-    sunk = spark.read.parquet(sink)
-    from pyspark.sql import functions as F
-
-    agg = sunk.agg(
-        F.count("*").alias("rows"),
-        F.countDistinct("frame_number").alias("frames"),
-        (F.max("frame_seq") + 1).alias("seqs"),
-        F.sum(F.when(~F.col("frame_complete"), 1).otherwise(0)).alias(
-            "incomplete_rows"
-        ),
-    ).collect()[0]
-    expected_rows = n_total * n_dig * BS.EVENTS_PER_MESSAGE
-    pw = sorted(
-        produce_wait[i] for i in range(BS.N_WARMUP, n_total) if i in produce_wait
-    )
-    hls = sorted(v for _t, v in hw_lag_samples)
-    # WINDOWED terms (VERDICT r13 #1): the same post-recovery window as
-    # the keep-up gate (last quarter of the soak by frame index) vs the
-    # pre-kill window, for each term of the cycle — so a post-bounce
-    # latency residual attributes to its stage: feeder acks-wait
-    # (produce_wait), replication visibility (hw_lag), or the sink's
-    # micro-batch execution (trigger durations from query progress).
-    post_i0 = BS.N_WARMUP + 3 * (n_total - BS.N_WARMUP) // 4
-    pw_pre = [
-        produce_wait[i] for i in produce_wait
-        if kill_abs and i in arrival and arrival[i] < kill_abs
-    ]
-    pw_post = [produce_wait[i] for i in produce_wait if i >= post_i0]
-    post_abs = arrival.get(post_i0)
-    # lower-bound the pre window at the PACED feeder's start: the
-    # unpaced warmup burst (and the drain wait after it) would
-    # otherwise inflate hw_lag_p50_pre relative to pw_pre/bd_pre,
-    # which both already exclude warmup
-    feed0_abs = t_feed0[0]
-    hw_pre = [
-        v for t, v in hw_lag_samples
-        if kill_abs and feed0_abs is not None and feed0_abs <= t < kill_abs
-    ]
-    hw_post = [
-        v for t, v in hw_lag_samples if post_abs is not None and t >= post_abs
-    ]
-    # progress timestamps are wall-clock ISO; window with the wall stamps
-    def _batch_durs(lo_wall, hi_wall):
-        from datetime import datetime, timezone
-
-        out = []
-        for p in progress:
-            try:
-                ts = datetime.fromisoformat(
-                    p["timestamp"].replace("Z", "+00:00")
-                ).timestamp()
-                d = p["durationMs"]["triggerExecution"] / 1000.0
-            except (KeyError, TypeError, ValueError):
-                continue
-            if (lo_wall is None or ts >= lo_wall) and (
-                hi_wall is None or ts < hi_wall
-            ):
-                out.append(d)
-        return out
-
-    post_wall = (
-        wall["feed0"] + (post_i0 - BS.N_WARMUP) * BS.FRAME_PERIOD_S
-        if wall["feed0"] is not None else None
-    )
-    bd_pre = _batch_durs(wall["feed0"], wall["kill"])
-    bd_post = _batch_durs(post_wall, None) if post_wall else []
-    decomposition = {
-        # per-frame feeder-side acks=-1 wait (32 msgs -> up to 3
-        # leader-grouped produce requests); the budget is the 20 ms
-        # frame period — above it the feeder itself falls behind
-        "produce_wait_p50_s": round(pw[len(pw) // 2], 4) if pw else None,
-        "produce_wait_p95_s": (
-            round(pw[int(len(pw) * 0.95)], 4) if pw else None
-        ),
-        "produce_wait_max_s": round(pw[-1], 4) if pw else None,
-        # records acked by the producer but not yet consumer-visible
-        # (HW-fenced), sampled at 10 Hz: the replication-lag term
-        "hw_lag_records_p50": hls[len(hls) // 2] if hls else None,
-        "hw_lag_records_max": hls[-1] if hls else None,
-        "produce_wait_p50_pre_s": _p50(pw_pre),
-        "produce_wait_p50_post_s": _p50(pw_post),
-        "hw_lag_p50_pre": _p50(hw_pre),
-        "hw_lag_p50_post": _p50(hw_post),
-        "trigger_exec_p50_pre_s": _p50(bd_pre),
-        "trigger_exec_p50_post_s": _p50(bd_post),
-        "n_batches_pre": len(bd_pre),
-        "n_batches_post": len(bd_post),
-    }
-    return {
-        "shape": f"{n_dig}x{BS.EVENTS_PER_MESSAGE}",
-        "decomposition": decomposition,
-        "n_frames": n_frames,
-        "cluster": "3 brokers, rf=2, acks=-1, min.insync=2",
-        "bounce": events,
-        "frames_done": n_done,
-        "keeps_up_across_kill": bool(n_done == n_frames and recovered),
-        "pre_kill_p50_s": _p50(pre),
-        "post_recovery_p50_s": _p50(last_q),
-        "recovered_to_steady": recovered,
-        "latency_slope_s_per_s": round(slope, 5),
-        "latency_p50_s": round(lat[n_done // 2], 4) if n_done else None,
-        "latency_p95_s": round(lat[int(n_done * 0.95)], 4) if n_done else None,
-        "latency_max_s": round(lat[-1], 4) if n_done else None,
-        "steady_p50_s": round(second[len(second) // 2], 4) if second else None,
-        "accounting": {
-            "rows": int(agg["rows"]),
-            "expected_rows": expected_rows,
-            "distinct_frames": int(agg["frames"]),
-            "expected_frames": n_total,
-            "frame_seq_contiguous": int(agg["seqs"]) == n_total,
-            "incomplete_rows": int(agg["incomplete_rows"]),
-            "exactly_once": bool(
-                int(agg["rows"]) == expected_rows
-                and int(agg["frames"]) == n_total
-                and int(agg["seqs"]) == n_total
-            ),
-        },
-    }
-
-
-def bench_cluster_soak(spark, workdir: str) -> dict:
-    """Median-of-N chaos soak (VERDICT r13 #1): the single-run keep-up
-    gate sat at the edge of this VM's measured ±11-15% identical-code
-    noise (green on the committed run, red on a same-tree rerun), so
-    the verdict is now the MEDIAN of N independent soaks — fresh
-    cluster, sink and checkpoint per run — with min/max bands, exactly
-    like the 32x500 paced shape's ``paced_runs``.  ``exactly_once`` is
-    reported per run AND as the AND across runs (a duplicated row is a
-    correctness fault, not noise)."""
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_CLUSTER_SOAK_REPS", "3")))
-    runs = []
-    for rep in range(reps):
-        if rep:
-            spark.catalog.clearCache()
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(5)
-        runs.append(_cluster_soak_once(spark, workdir, rep))
-    if reps == 1:
-        return runs[0]
-    out = dict(runs[-1])
-    for k in (
-        "pre_kill_p50_s", "post_recovery_p50_s", "latency_slope_s_per_s",
-        "latency_p50_s", "latency_p95_s", "latency_max_s", "steady_p50_s",
-    ):
-        vals = sorted(r[k] for r in runs if r.get(k) is not None)
-        out[k] = vals[len(vals) // 2] if vals else None
-    for k in ("pre_kill_p50_s", "post_recovery_p50_s"):
-        vals = [r[k] for r in runs if r.get(k) is not None]
-        if vals:
-            out[k[:-2] + "_band_s"] = [round(min(vals), 4), round(max(vals), 4)]
-    out["keeps_up_across_kill"] = bool(
-        sum(1 for r in runs if r["keeps_up_across_kill"]) * 2 > reps
-    )
-    out["recovered_to_steady"] = bool(
-        sum(1 for r in runs if r["recovered_to_steady"]) * 2 > reps
-    )
-    out["exactly_once_all_runs"] = all(
-        r["accounting"]["exactly_once"] for r in runs
-    )
-    out["n_runs"] = reps
-    out["runs"] = runs
-    return out
-
-
 def bench_fetchloop_cluster_soak(spark, workdir: str) -> dict:
     """Chaos soak of the FETCH-LOOP door (VERDICT r12 #3): the door
     that owns the 1 s sink-commit budget, paced 50 fps at 32x500 over
-    the same 3-broker replicated cluster (rf=2, acks=-1 producer,
+    a 3-broker replicated cluster (rf=2, acks=-1 producer,
     min.insync=2) with a wall-clock leader kill + restart mid-soak.
     The loop's re-dial path (nexus_fetchloop poll loop) drops the
     consumer on a connection fault and resumes from the in-memory
@@ -1228,7 +828,6 @@ def run(spark) -> dict:
     try:
         out["kafka_front_door"] = bench_kafka_front_door(spark, base)
         out["kafka_partition_sweep"] = bench_kafka_partition_sweep(spark)
-        out["cluster_soak"] = bench_cluster_soak(spark, base)
         out["fetchloop_cluster_soak"] = bench_fetchloop_cluster_soak(
             spark, base
         )

@@ -3,31 +3,32 @@
 SUSTAINED 50 frames/s (simulator `--frame-time 20`,
 simulator/src/main.rs:132-135) with trace->frame latency bounded by the
 aggregator's 500 ms completeness TTL / <=1 s dispatch budget
-(digitiser-aggregator/src/main.rs:110-118).  This harness replays
-synthetic dev2 tapes through the FULL streaming topology — since round
-9 the PRODUCTION door is the fused direct sink (streaming/
-nexus_direct.py: frame assembly driver-side inside foreachBatch); the
-round-7/8 FSM topology (assemble_frames_stream -> NexusStreamWriter)
-keeps a shorter paced continuity soak (`32x500_fsm`) — and measures:
+(digitiser-aggregator/src/main.rs:110-118).  This harness paces
+synthetic dev2 tapes through the two NeXus doors:
 
-- **paced soak** (per shape): a feeder thread lands one message file per
-  frame every 20 ms (the real arrival cadence); per-frame latency =
-  wall-clock from the frame's LAST message landing to the frame being
-  fully committed by the sink batch that carried it.  The keep-up gate
-  is a LATENCY-VS-TAPE-POSITION SLOPE: an under-provisioned pipeline
-  shows latency growing linearly with position (backlog drift), so the
-  gate is `slope <= 0.01 s/s` over the whole soak, with the
-  first-half/second-half median comparison kept as a secondary signal.
-- **unpaced run** (per shape): the whole tape at once under availableNow
-  — the topology's maximum micro-batch throughput, the headroom number.
-- **cycle decomposition**: per-micro-batch buckets (engine durationMs
-  medians + the sink's own fsm/write phase log), published so the
-  latency floor is measured, not asserted.
+- the PRODUCTION door, the fetch loop (streaming/nexus_fetchloop.py —
+  an in-process consumer over a live wire broker, no micro-batch),
+  carries the gated shapes;
+- the Spark-stream door (assemble_frames_stream -> NexusStreamWriter)
+  keeps a shorter paced continuity soak (`32x500_fsm`).
 
-Shapes: 8 digitisers x 500 events/frame (the long 60 s soak) and the
-reference's full instrument, 32 digitisers x 500 events
-(simulator/src/integrated/simulation.rs:148-151), on a shorter soak.
-Per-frame events per digitiser are reference-exact in both.
+Per shape:
+
+- **paced soak**: one frame's messages every 20 ms (the real arrival
+  cadence); per-frame latency = wall-clock from the frame's LAST
+  message landing to the frame being fully committed by the sink.  The
+  keep-up gate is a LATENCY-VS-TAPE-POSITION SLOPE: an under-provisioned
+  pipeline shows latency growing linearly with position (backlog
+  drift), so the gate is `slope <= 0.02 s/s` over the whole soak;
+- **decomposition**: the fetch loop's per-commit split (decode / part
+  staging / intent / publish) and the FSM door's per-micro-batch
+  buckets (engine durationMs medians + the sink's own fsm/write phase
+  log), published so the latency floor is measured, not asserted.
+
+Shapes: 8 digitisers x 500 events/frame and the reference's full
+instrument, 32 digitisers x 500 events
+(simulator/src/integrated/simulation.rs:148-151).  Per-frame events per
+digitiser are reference-exact in both.
 
 Standalone: `python bench_streaming.py` prints one JSON line.
 bench.py embeds the same dict under its "streaming" key.
@@ -145,21 +146,17 @@ def _runs_df(spark: SparkSession, n_frames: int):
 def _start_query(
     spark, spool: str, sink: str, ckpt: str, on_frames, trigger: dict,
     n_digitisers: int, n_frames: int, phase_log: list | None = None,
-    fsm: str = "apply",
 ):
-    """One streaming query: files -> frame FSM -> nexus sink; on_frames is
-    called with (list[frame_number], commit_wallclock) per micro-batch via
-    the writer's on_commit hook — frame observation rides the sink's own
-    dimension collect, so the batch runs exactly the production job count.
-    ``fsm`` selects the assembly engine: 'apply' = applyInPandasWithState
-    (the FSM door), 'direct' = the fused foreachBatch door
-    (streaming/nexus_direct.py — no stateful operator, driver-held
-    bounded cache)."""
+    """One streaming query of the FSM door: files -> frame FSM
+    (applyInPandasWithState) -> nexus sink; on_frames is called with
+    (list[frame_number], commit_wallclock) per micro-batch via the
+    writer's on_commit hook — frame observation rides the sink's own
+    dimension collect, so the batch runs exactly the production job
+    count."""
     from supermusr_data_pipeline_spark.streaming.frame_assembly_stream import (
         DIGITISER_MESSAGE_SCHEMA,
         assemble_frames_stream,
     )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import DirectNexusWriter
     from supermusr_data_pipeline_spark.streaming.nexus_stream import NexusStreamWriter
 
     # cleanSource=delete: the spool is a consume-once landing zone, and
@@ -172,25 +169,16 @@ def _start_query(
         .option("cleanSource", "delete")
         .parquet(spool)
     )
-    if fsm == "direct":
-        writer = DirectNexusWriter(
-            _runs_df(spark, n_frames), sink, list(range(n_digitisers)),
-            frame_ttl_ms=500,
-            on_commit=lambda frames: on_frames(frames, time.perf_counter()),
-        )
-        writer.phase_log = phase_log
-        to_sink = messages
-    else:
-        writer = NexusStreamWriter(
-            _runs_df(spark, n_frames), sink,
-            on_commit=lambda frames: on_frames(frames, time.perf_counter()),
-        )
-        writer.phase_log = phase_log
-        to_sink = assemble_frames_stream(
+    writer = NexusStreamWriter(
+        _runs_df(spark, n_frames), sink,
+        on_commit=lambda frames: on_frames(frames, time.perf_counter()),
+    )
+    writer.phase_log = phase_log
+    return (
+        assemble_frames_stream(
             messages, list(range(n_digitisers)), frame_ttl_ms=500
         )
-    return (
-        to_sink.writeStream.foreachBatch(writer)
+        .writeStream.foreachBatch(writer)
         .option("checkpointLocation", ckpt)
         .trigger(**trigger)
         .start()
@@ -269,8 +257,10 @@ def _cycle_decomposition(query, phase_log: list) -> dict:
 
 def _run_shape(
     spark: SparkSession, base: str, n_digitisers: int, n_frames: int,
-    fsm: str = "apply", paced_only: bool = False, label_suffix: str = "",
+    label_suffix: str = "",
 ) -> dict:
+    """Paced soak of the FSM door, with its micro-batch cycle
+    decomposition."""
     n_total = N_WARMUP + n_frames
     label = f"{n_digitisers}x{EVENTS_PER_MESSAGE}{label_suffix}"
 
@@ -296,7 +286,6 @@ def _run_shape(
         spark, spool_p, os.path.join(base, f"sink_paced_{label}"),
         os.path.join(base, f"ckpt_paced_{label}"), on_frames,
         {"processingTime": "0 seconds"}, n_digitisers, n_frames, phase_log,
-        fsm=fsm,
     )
 
     for i in range(N_WARMUP):
@@ -383,57 +372,17 @@ def _run_shape(
         "steady_p50_s": round(second[len(second) // 2], 4) if second else None,
         "steady_p95_s": round(second[int(len(second) * 0.95)], 4) if second else None,
     }
-    if paced_only:
-        return {
-            "shape": shape_info,
-            "paced": paced_info,
-            "cycle_decomposition": decomposition,
-            "unpaced": None,
-        }
-
-    # ---- unpaced run: whole tape at once under availableNow = max
-    # throughput (one spare file-listing gives the FSM everything at once).
-    # Same hygiene as between shapes: the paced soak just churned ~10^5
-    # cached blocks and state versions, and headroom measured under that
-    # heap debt reads 2-3x low.
-    spark.catalog.clearCache()
-    spark.sparkContext._jvm.System.gc()
-    time.sleep(3)
-    spool_u = os.path.join(base, f"spool_unpaced_{label}")
-    os.makedirs(spool_u, exist_ok=True)
-    for i in range(n_total):
-        _write_atomic(
-            _frame_table(i, n_digitisers),
-            os.path.join(spool_u, f"frame_{i:06d}.parquet"),
-        )
-    done: list[int] = []
-    t0 = time.perf_counter()
-    q2 = _start_query(
-        spark, spool_u, os.path.join(base, f"sink_unpaced_{label}"),
-        os.path.join(base, f"ckpt_unpaced_{label}"),
-        lambda frames, t: done.extend(frames),
-        {"availableNow": True}, n_digitisers, n_frames, fsm=fsm,
-    )
-    q2.awaitTermination(600)
-    elapsed = time.perf_counter() - t0
-
     return {
         "shape": shape_info,
         "paced": paced_info,
         "cycle_decomposition": decomposition,
-        "unpaced": {
-            "frames_done": len(done),
-            "max_fps": round(len(done) / elapsed, 2) if elapsed > 0 else None,
-        },
     }
 
 
 def _run_fetchloop_shape(base: str, n_digitisers: int, n_frames: int) -> dict:
     """Paced 50 fps soak of the FETCH-LOOP door (streaming/
-    nexus_fetchloop.py) over a live wire broker: the topology-level
-    answer to the 1 s sink-commit budget (VERDICT r11 #4) — no
-    micro-batch, so commit latency is poll + decode + Arrow append.
-    Same metrics dict as _run_shape's ``paced`` block."""
+    nexus_fetchloop.py) over a live wire broker — no micro-batch, so
+    commit latency is poll + decode + Arrow append."""
     import threading as _threading
 
     from supermusr_data_pipeline_spark.kafka import MiniBroker, MiniProducer
@@ -599,28 +548,13 @@ def _run_fetchloop_shape(base: str, n_digitisers: int, n_frames: int) -> dict:
     }
 
 
-def _median_paced(runs: list[dict]) -> dict:
-    """Median-of-N paced summary (VERDICT r9 #7): the 32x500 shape's
-    single-soak numbers chased a ±20% VM-noise band round-over-round;
-    the shape now reports the per-key MEDIAN across repeats plus the
-    min/max band, and keep-up as the majority vote."""
-    out = dict(runs[-1])
-    for k in (
-        "latency_slope_s_per_s", "whole_window_fps", "latency_p50_s",
-        "latency_p95_s", "latency_first_half_p50_s",
-        "latency_second_half_p50_s", "steady_p50_s", "steady_p95_s",
-    ):
-        vals = sorted(r[k] for r in runs if r.get(k) is not None)
-        out[k] = vals[len(vals) // 2] if vals else None
-    out["keeps_up_at_50fps"] = (
-        sum(1 for r in runs if r["keeps_up_at_50fps"]) * 2 > len(runs)
-    )
-    for k in ("steady_p50_s", "steady_p95_s"):
-        vals = [r[k] for r in runs if r.get(k) is not None]
-        if vals:
-            out[k[:-2] + "_band_s"] = [round(min(vals), 4), round(max(vals), 4)]
-    out["n_runs"] = len(runs)
-    return out
+def _settle(spark: SparkSession) -> None:
+    """Isolate soaks: drop cache bookkeeping, force a GC, and give the
+    state-store maintenance / source cleaners a moment to release
+    resources."""
+    spark.catalog.clearCache()
+    spark.sparkContext._jvm.System.gc()
+    time.sleep(5)
 
 
 def run(spark: SparkSession, workdir: str | None = None) -> dict:
@@ -628,85 +562,33 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
     prior = {k: spark.conf.get(k, None) for k in _STREAM_CONF}
     for k, v in _STREAM_CONF.items():
         spark.conf.set(k, v)
+    full = SHAPES[-1][0]  # the full-instrument shape
     try:
         shapes = {}
-        for si, (n_digitisers, n_frames) in enumerate(SHAPES):
-            label = f"{n_digitisers}x{EVENTS_PER_MESSAGE}"
-            # the full 32x500 shape soaks THREE times (median + band);
-            # the 8x500 shape's single soak has been stable for rounds
-            reps = (
-                max(1, int(os.environ.get("SPARK_GRAFT_STREAM_REPS_32", "3")))
-                if n_digitisers == 32 else 1
+        # the production door, the fetch loop, over the live wire.  No
+        # Spark in its hot path, so no warm-in soak is needed — one
+        # short pre-soak settles the broker/consumer code paths
+        _run_fetchloop_shape(base + "_floopwarm", full, 300)
+        for n_digitisers, n_frames in SHAPES:
+            shapes[f"{n_digitisers}x{EVENTS_PER_MESSAGE}"] = (
+                _run_fetchloop_shape(base, n_digitisers, n_frames)
             )
-            paced_runs = []
-            res = None
-            for rep in range(reps):
-                if si > 0 or rep > 0:
-                    # isolate soaks: drop cache bookkeeping, force a GC,
-                    # and give the state-store maintenance / source
-                    # cleaners a moment to release resources
-                    spark.catalog.clearCache()
-                    spark.sparkContext._jvm.System.gc()
-                    time.sleep(5)
-                # production door since round 9: the fused direct sink
-                # (streaming/nexus_direct.py) — adopted on a same-session
-                # A/B vs the FSM topology (AB_DIRECT_SINK_RESULT.json)
-                res = _run_shape(
-                    spark, base, n_digitisers, n_frames, fsm="direct",
-                    paced_only=(rep < reps - 1),
-                    label_suffix=f"_rep{rep}" if reps > 1 else "",
-                )
-                paced_runs.append(res["paced"])
-            shapes[label] = res
-            if reps > 1:
-                shapes[label]["paced"] = _median_paced(paced_runs)
-                shapes[label]["paced_runs"] = paced_runs
-            shapes[label]["door"] = "direct"
-        # continuity soak: the round-7/8 FSM door at the full shape, kept
-        # short — so round-over-round envelope numbers stay comparable
-        # across the door switch and the stateful operator keeps getting
-        # exercised under pacing
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(5)
-        # 2000 frames (40 s, ~25 batches): the round-9 1000-frame soak was
-        # under-warmed (11 batches) and read a false keep-up regression —
-        # the r10 interleaved A/B (tools/AB_FSM_INTENT_RESULT.json) shows
-        # the door keeps up at this shape once soaks pass ~20 batches
-        n_fsm = int(os.environ.get("SPARK_GRAFT_STREAM_FRAMES_FSM", "2000"))
-        fsm_label = f"{SHAPES[1][0]}x{EVENTS_PER_MESSAGE}_fsm"
-        # throwaway warm-in: the stateful operator's python state workers
-        # and codegen are COLD here (the preceding soaks ran the direct
-        # door) — without this the soak's first batches read as keep-up
-        # drift, the same artifact the r10 interleaved A/B attributed
+        # continuity soak of the Spark-stream door at the full shape:
+        # 2000 frames (40 s, ~25 batches) — a 1000-frame soak (11
+        # batches) was under-warmed and read a false keep-up regression
         # (tools/AB_FSM_INTENT_RESULT.json)
-        _run_shape(
-            spark, base, SHAPES[1][0], 300, fsm="apply",
-            paced_only=True, label_suffix="_fsmwarm",
-        )
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(5)
+        n_fsm = int(os.environ.get("SPARK_GRAFT_STREAM_FRAMES_FSM", "2000"))
+        # throwaway warm-in: the stateful operator's python state workers
+        # and codegen are COLD here — without it the soak's first batches
+        # read as keep-up drift (tools/AB_FSM_INTENT_RESULT.json)
+        _settle(spark)
+        _run_shape(spark, base, full, 300, label_suffix="_fsmwarm")
+        _settle(spark)
+        fsm_label = f"{full}x{EVENTS_PER_MESSAGE}_fsm"
         shapes[fsm_label] = _run_shape(
-            spark, base, SHAPES[1][0], n_fsm, fsm="apply",
-            paced_only=True, label_suffix="_fsm",
+            spark, base, full, n_fsm, label_suffix="_fsm"
         )
         shapes[fsm_label]["door"] = "applyInPandasWithState"
-        # the FETCH-LOOP door at the full shape over the live wire: the
-        # 1 s sink-commit budget topology (r12; no Spark in its hot
-        # path, so no warm-in soak needed — one short pre-soak settles
-        # the broker/consumer code paths)
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(5)
-        n_floop = int(
-            os.environ.get("SPARK_GRAFT_STREAM_FRAMES_FETCHLOOP", "2000")
-        )
-        _run_fetchloop_shape(base + "_floopwarm", SHAPES[1][0], 300)
-        floop_label = f"{SHAPES[1][0]}x{EVENTS_PER_MESSAGE}_fetchloop"
-        shapes[floop_label] = _run_fetchloop_shape(
-            base, SHAPES[1][0], n_floop
-        )
     finally:
         for k, v in prior.items():
             if v is not None:
@@ -718,10 +600,10 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
     p95 = main["paced"]["latency_p95_s"]
     # the envelope claim is about the PRODUCTION door; the _fsm
     # continuity soak is reference data, not part of the gate
-    gated = [s for s in shapes.values() if s.get("door") == "direct"]
-    floop = shapes.get(f"{SHAPES[1][0]}x{EVENTS_PER_MESSAGE}_fetchloop")
-    floop_p50 = floop["paced"]["steady_p50_s"] if floop else None
-    floop_p95 = floop["paced"]["steady_p95_s"] if floop else None
+    gated = [s for s in shapes.values() if s.get("door") == "fetchloop"]
+    floop = shapes[f"{full}x{EVENTS_PER_MESSAGE}"]
+    floop_p50 = floop["paced"]["steady_p50_s"]
+    floop_p95 = floop["paced"]["steady_p95_s"]
     return {
         "shapes": shapes,
         "envelope": {
@@ -731,130 +613,28 @@ def run(spark: SparkSession, workdir: str | None = None) -> dict:
             "meets_latency": bool(p95 is not None and p95 <= LATENCY_BUDGET_S),
             "relaxed_budget_s": RELAXED_BUDGET_S,
             "meets_relaxed_latency": bool(p95 is not None and p95 <= RELAXED_BUDGET_S),
-            # the 1 s budget AT ITS OWN GRANULARITY (r12): the fetch-loop
-            # door commits per poll, like the reference writer — this is
-            # the number the reference's budget actually constrains
+            # the 1 s budget at the full instrument shape: the fetch-loop
+            # door commits per poll, like the reference writer
             "fetchloop_steady_p50_s": floop_p50,
             "fetchloop_steady_p95_s": floop_p95,
             "meets_latency_fetchloop": bool(
                 floop_p95 is not None and floop_p95 <= LATENCY_BUDGET_S
             ),
             "note": (
-                "commit latency is micro-batch-granular; the reference "
-                "dispatches per message, so its 1 s budget applies at "
-                "frame-TTL semantics, not sink-commit granularity.  The "
-                "cycle_decomposition tables are the measured floor.  "
-                "PRODUCTION DOOR since round 9: the fused direct sink "
-                "(streaming/nexus_direct.py) — frame assembly driver-"
-                "side inside foreachBatch, two narrow jobs per batch, "
-                "no stateful operator.  Adopted on a same-session A/B "
-                "vs the FSM topology (1000-"
-                "frame paced soaks, tools/AB_DIRECT_SINK_RESULT.json): "
-                "steady p50 2.05/2.04 s and p95 2.75/2.75 s at "
-                "8x500/32x500 vs the FSM door's 8.09/4.60 and "
-                "11.67/5.92 in the same session.  The direct door's "
-                "measured cycle: ~0.25 s source listing + ~0.09 s "
-                "offset/WAL + ~0.15-0.2 s slim collect + ~0.8 s event "
-                "write (FIXED w.r.t. event volume: 0.88 s at 284k and "
-                "0.80 s at 1.07M events/batch — join+explode+append "
-                "job overhead, profiled at ~0.53 s compute + ~0.27 s "
-                "parquet), so cycle ~1.0-1.3 s and latency p50 ~1.5 "
-                "cycles.  Round-9 60 s soaks: 8x500 p50 1.46-1.48 s / "
-                "p95 1.94-2.01 s (the 2 s relaxed p95 gate reads true "
-                "at this shape), 32x500 p50 1.6-2.1 s / p95 2.2-3.1 s "
-                "across three runs (±20% band at this shape, "
-                "tools/SOAK_32X500_VARIANCE_r9.json).  A 1 s "
-                "sink-commit budget remains out of reach for ANY "
-                "micro-batch topology here — ROUND 12 CLOSED IT "
-                "topology-level instead: the fetch-loop door "
-                "(streaming/nexus_fetchloop.py, the reference writer's "
-                "own consumer-loop shape) commits per poll with no "
-                "Spark job in the hot path and measures steady p50 "
-                "~0.01 s at 32x500 over the live wire (the "
-                "32x500_fetchloop shape + "
-                "envelope.meets_latency_fetchloop; r12 record 0.021 s, "
-                "halved in r13 by the write-once rename-list intent + "
-                "event-driven broker fetch wakes), exactly-once via "
-                "write-ahead intent + held-back offset cursor; r13 also "
-                "proved it through a replicated-cluster leader bounce "
-                "(fetchloop_cluster_soak: pre-kill p50 0.026 s, spike "
-                "max 0.40 s, exactly-once accounting).  The "
-                "micro-batch doors remain the Spark-analytics path; "
-                "their floor stands as measured.  The direct "
-                "door's unpersisted-batch and coalesce variants "
-                "measured WORSE or neutral (same-session, 32x500: "
-                "nopersist steady p50 2.26 s, nopersist+coalesce(8) "
-                "4.58 s) and were removed.  History: the FSM door's floor was ~0.58 s "
-                "applyInPandasWithState machinery + ~0.45 s engine "
-                "bookkeeping + ~0.17 s append (round 7); round 8 "
-                "A/B'd transformWithStateInPandas (rejected: steady "
-                "p50 5.59 s vs 4.84 s under RocksDB, tools/"
-                "AB_FSM_RESULT.json) and the kafka-wire front door "
-                "(shape-dependent: saves listing at 8x500, loses to "
-                "decode at 32x500, tools/AB_KAFKA_STREAM_RESULT*."
-                "json).  The 32x500_fsm continuity soak keeps the "
-                "stateful door measured; the file tape stays so "
-                "round-over-round numbers remain comparable.  Round-10 "
-                "attribution of the r9 FSM keep-up regression "
-                "(tools/AB_FSM_INTENT_RESULT.json, interleaved "
-                "on/off/on/off at 32x500, 1500 frames/round): the "
-                "write-ahead intent costs NOTHING once warmed (warmed "
-                "rounds steady p50 3.344 s intent-on vs 3.362 s "
-                "intent-off; all four rounds keep up, slopes "
-                "0.003-0.019 < 0.02) — the r9 red reading came from "
-                "the under-warmed 1000-frame soak (11 batches) plus "
-                "VM variance, so the intent stays and the continuity "
-                "soak now runs 2000 frames.  The 32x500 direct-door "
-                "shape reports median-of-3 with a min/max band "
-                "(paced_runs) so round comparisons stop chasing the "
-                "±20% single-soak noise.  Round-11 attribution of the "
-                "FSM door's residual drift vs the r7 record (3.68 s "
-                "vs 2.94 s steady p50): an A/B ran the r7 "
-                "PACKAGE code against HEAD, ABBA in one session — r7 "
-                "code pooled 3.68 s (one round red) vs HEAD 3.29 s "
-                "(all rounds keep up), sink_fsm_s ~1.0 s on BOTH arms "
-                "(tools/AB_FSM_R7_RESULT.json).  The r7-era 0.58 s "
-                "sink_fsm_s floor is not reproducible even by r7's "
-                "own code in today's session: the floor moved with "
-                "the VM, not the code.  Round-11 wire front door: "
-                "fetch pipelining + pre-encoded broker log + FUSED, "
-                "whole-column-VECTORIZED dev2 decode (valueDecode="
-                "dev2; 10.6 ms vs 59 ms per 2368-msg batch) fix the "
-                "r10 red round — ALL ABBA rounds keep up at 32x500 on "
-                "the direct door, and the per-cycle decomposition "
-                "(now recorded for BOTH arms) shows IDENTICAL "
-                "per-frame cost (20.2 ms/frame each; file trigger "
-                "0.847 s at 42 frames/batch vs wire 1.089 s at 54).  "
-                "The residual steady-p50 gap (file 1.37 s / wire "
-                "1.58 s pooled, 3000-frame ABBA) is a FIXED ~0.2 s/"
-                "batch in the sink's cache-building job: the Python-"
-                "DataSource read path (task dispatch + Arrow IPC both "
-                "ways) vs a JVM parquet scan — the data plane itself "
-                "(fetch+decode) measures ~40 ms.  The wire door wins "
-                "the admission-control term 0.001 s vs 0.15-0.25 s "
-                "directory listing (which grows with spool size); the "
-                "equilibrium batch is correspondingly larger, which "
-                "is the whole latency difference.  Run-to-run drift "
-                "on this VM (±20%) is larger than the remaining gap, "
-                "so the wire-vs-file ledger is carried as the "
-                "decomposition, not a single headline pair "
-                "(tools/AB_KAFKA_STREAM_RESULT_32dig_direct.json).  "
-                "END-OF-ROUND-11 re-measure on the final tree (idle "
-                "machine, same ABBA): file pooled steady p50 1.574 s "
-                "vs wire 1.658 s — a 5% gap with the ROUNDS "
-                "INTERLEAVED (wire best 1.584 < file worst 1.704), "
-                "all four rounds keep up (slopes <= 0.011); vs the "
-                "r10 red of 2.39/2.15 against 1.69/1.91 with one "
-                "failed round, the wire face now ties the file door "
-                "within round-to-round variance at the full shape.  "
-                "Round-11 headroom probe (tools/STRETCH_SHAPE_RESULT."
-                "json): the 50 fps envelope HOLDS at 2x the full "
-                "shape — 64x500 sustained, 1.6M events/s, steady p50 "
-                "1.96 s — and breaks between 64 and 128 digitisers on "
-                "this 32-thread VM (128x500 drains 38.3 of 50 fps; "
-                "binding term is the event-write job at 3.0M events/"
-                "batch — per-executor write bandwidth, i.e. more "
-                "executors on a real cluster, not a topology change)."
+                "The gated shapes run the production door, the fetch "
+                "loop (streaming/nexus_fetchloop.py): an in-process "
+                "consumer over the live wire that commits per poll with "
+                "no Spark job in the hot path, like the reference "
+                "nexus-writer, exactly-once via a write-ahead intent + "
+                "held-back offset cursor.  Its per-commit split is the "
+                "shape's decomposition block.  The 32x500_fsm soak "
+                "keeps the Spark-stream door (applyInPandasWithState "
+                "FSM -> NexusStreamWriter) measured; its commit latency "
+                "is micro-batch-granular, and its cycle_decomposition "
+                "table is the measured floor of that topology (~1.0-"
+                "1.3 s trigger cycle: offset planning, Python-source "
+                "round trips, commit-log writes), which no foreachBatch "
+                "arrangement gets under the 1 s budget."
             ),
         },
     }

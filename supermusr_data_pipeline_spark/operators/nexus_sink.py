@@ -192,10 +192,9 @@ def retire_completed_runs(
     every door and ``partitionBy`` write), so a run name holding ``%``,
     ``:`` or another escaped character retires like any other.
 
-    ``writer``: the LIVE sink writer (NexusStreamWriter,
-    DirectNexusWriter or FetchLoopNexusWriter), if one is still
-    appending.  Retired runs are dropped from its runs dimension via
-    ``refresh_runs`` so a straggler
+    ``writer``: the LIVE sink writer (NexusStreamWriter or
+    FetchLoopNexusWriter), if one is still appending.  Retired runs are
+    dropped from its runs dimension via ``refresh_runs`` so a straggler
     frame matching a retired run's interval can no longer RESURRECT the
     run's live directory after its data moved to ``completed/`` — the
     reference drops the run from its cache on move_to_completed and

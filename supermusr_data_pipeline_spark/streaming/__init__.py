@@ -6,11 +6,11 @@ package lifts the stateful pieces onto Structured Streaming:
 - frame assembly with completeness + processing-time TTL (T1-T3) →
   ``frame_assembly_stream.assemble_frames_stream`` (applyInPandasWithState)
 - run lifecycle FSM (T4) → ``run_lifecycle`` (batch fold + streaming state)
-- NeXus run sink (S6/S7), three doors writing one layout:
-  ``nexus_stream.write_nexus_stream`` (foreachBatch behind the FSM),
-  ``nexus_direct.write_nexus_direct`` (assembly fused into foreachBatch, no
-  stateful operator) and ``nexus_fetchloop.FetchLoopNexusWriter`` (an
-  in-process consumer loop, no micro-batch)
+- NeXus run sink (S6/S7), two doors writing one layout:
+  ``nexus_fetchloop.FetchLoopNexusWriter`` (an in-process consumer loop,
+  no micro-batch — the production door for Kafka input) and
+  ``nexus_stream.write_nexus_stream`` (foreachBatch behind the FSM — the
+  door for Spark-stream input)
 - the decisions those doors share — frame dispatch and tombstones, run
   matching and frame sequencing, the run directory name → ``frame_core``
 - DAQ observability stats (A7/A8) → ``daq_stats``
@@ -31,7 +31,6 @@ from .frame_assembly_stream import (  # noqa: F401
     assemble_frames_stream,
     events_long_to_messages,
 )
-from .nexus_direct import DirectNexusWriter, write_nexus_direct  # noqa: F401
 from .nexus_stream import write_nexus_stream  # noqa: F401
 from .postings_ingest import (  # noqa: F401
     bm25_topk_over_index,

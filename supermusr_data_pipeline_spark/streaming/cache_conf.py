@@ -1,19 +1,20 @@
 """Scoped, nesting-safe flip of the in-memory-cache compression conf.
 
-Both sink doors persist their micro-batch for exactly one cycle (< 2 s):
-columnar compression of the event arrays there is pure CPU (measured
-~55 ms on the cache-building job + ~15 ms per cache-hit job at the
-54-frame 32x500 batch shape), while the batch plans' long-lived persists
-(LSH edges, postings tf, IVF fit) rightly keep compression.
+The FSM door's sink (``nexus_stream.NexusStreamWriter``) persists its
+micro-batch for exactly one cycle (< 2 s): columnar compression of the
+event arrays there is pure CPU (measured ~55 ms on the cache-building
+job + ~15 ms per cache-hit job at the 54-frame 32x500 batch shape),
+while the batch plans' long-lived persists (LSH edges, postings tf, IVF
+fit) rightly keep compression.
 
 A naive set-before / restore-after around each persist has two failure
 modes: an exception between set and the restoring finally leaves the
 session uncompressed forever, and two writers interleaving in one
-session (an FSM-door and a direct-door stream) can each capture the
-other's 'false' as their prior and restore it last.  This context
-manager fixes both: depth-counted under one process lock, the OUTERMOST
-entry captures the session value and the outermost exit restores it,
-always through try/finally."""
+session (two FSM-door streams) can each capture the other's 'false' as
+their prior and restore it last.  This context manager fixes both:
+depth-counted under one process lock, the OUTERMOST entry captures the
+session value and the outermost exit restores it, always through
+try/finally."""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
 """The frame and run decisions every NeXus sink door shares.
 
-The three doors (``nexus_stream``, ``nexus_direct``, ``nexus_fetchloop``)
-differ in how frames reach the driver — Spark slim rows, Spark message
-rows, Arrow batches off an in-process consumer — but not in what they
-decide about them.  Those decisions live here, once:
+The two doors (``nexus_fetchloop``, ``nexus_stream``) differ in how
+frames reach the driver — Arrow batches off an in-process consumer,
+Spark slim rows behind the applyInPandasWithState FSM — but not in what
+they decide about them.  Those decisions live here, once:
 
 * when a pending frame dispatches, and the tombstone that then rejects
   its late messages (digitiser-aggregator/src/frame/cache.rs:55-74);
@@ -125,13 +125,6 @@ def is_complete(dids, expected: list[int]) -> bool:
     return sorted(dids) == expected
 
 
-def is_due(fs, expected: list[int], now_ms: int, frame_ttl_ms: int) -> bool:
-    """A pending :class:`FrameState` dispatches once complete
-    or once ``frame_ttl_ms`` has passed since its FIRST message arrived
-    (frame/partial.rs:30-40)."""
-    return is_complete(fs.dids, expected) or now_ms - fs.first_ms >= frame_ttl_ms
-
-
 def pick_dispatch(
     pending: dict,
     tombstones: dict,
@@ -141,13 +134,16 @@ def pick_dispatch(
     tombstone_ttl_ms: int,
 ) -> list:
     """Take every due frame out of ``pending`` and return its
-    ``(key, state)`` pairs.  Each dispatched key gets a tombstone until
-    ``now_ms + tombstone_ttl_ms`` (a late message for it is rejected and
-    re-arms it, cache.rs:55-63); tombstones expired at ``now_ms`` are then
-    pruned.  Mutates ``pending`` and ``tombstones``."""
+    ``(key, state)`` pairs.  A pending :class:`FrameState` is due once
+    complete or once ``frame_ttl_ms`` has passed since its FIRST message
+    arrived (frame/partial.rs:30-40).  Each dispatched key gets a
+    tombstone until ``now_ms + tombstone_ttl_ms`` (a late message for it
+    is rejected and re-arms it, cache.rs:55-63); tombstones expired at
+    ``now_ms`` are then pruned.  Mutates ``pending`` and ``tombstones``."""
     dispatch = [
         (key, fs) for key, fs in pending.items()
-        if is_due(fs, expected, now_ms, frame_ttl_ms)
+        if is_complete(fs.dids, expected)
+        or now_ms - fs.first_ms >= frame_ttl_ms
     ]
     until = now_ms + tombstone_ttl_ms
     for key, _fs in dispatch:

@@ -9,8 +9,9 @@ micro-batch topology measured in this repo pays a FIXED ~1.0-1.3 s
 trigger cycle before any useful work (BENCH_LOCAL
 ``cycle_decomposition``: trigger 1.299 s, of which add_batch 0.972 —
 offset planning, Python-source round trips, commit-log writes), so no
-foreachBatch arrangement can reach the budget (VERDICT r11 "what's
-wrong" #1: direct-door steady p50 band [1.57, 2.11] s, floor measured).
+foreachBatch arrangement can reach the budget (the retired fused
+foreachBatch door measured a steady p50 band of [1.57, 2.11] s at
+32x500).
 Spark 4.1 offers no lower-latency trigger for this plan shape: the
 continuous trigger supports neither ``foreachBatch`` nor Python data
 sources, and ``availableNow`` terminates.  The remaining move is
@@ -18,7 +19,7 @@ topology-level — run the LATENCY-critical admission path as its own
 fetch loop (the broker client is already in-process) and keep the
 exactly-once bookkeeping protocol the micro-batch doors proved out.
 
-Shared through ``frame_core`` with the other two doors (one copy):
+Shared through ``frame_core`` with the FSM door (one copy):
 
 * the frame dispatch rule — completeness on the expected digitiser
   set or first-arrival TTL — and the tombstones that reject late
@@ -28,8 +29,8 @@ Shared through ``frame_core`` with the other two doors (one copy):
   totals, and the run directory name.
 
 Admission — duplicate (frame, digitiser) rejection over Arrow row
-indices, and the cursor floors — is this door's own.  What stays the
-same as the direct door (streaming/nexus_direct.py):
+indices, and the cursor floors — is this door's own.  What it shares
+with the FSM door (streaming/nexus_stream.py):
 
 * the sink LAYOUT — ``run_name=<escaped>`` partition directories of
   snappy Parquet with the NEXUS event schema, schema-compatible with
@@ -39,8 +40,8 @@ same as the direct door (streaming/nexus_direct.py):
   int64 columns (the event columns are high-cardinality, so a
   dictionary only costs write time); Spark, DuckDB and pyarrow read
   them like any other Parquet;
-* crash safety by WRITE-AHEAD INTENT + state sidecar (tmp+rename, one
-  small file each — S3-PUT-portable, as nexus_direct documents).
+* crash safety by a WRITE-AHEAD INTENT written tmp+rename (one small
+  file — S3-PUT-portable); this door keeps a state sidecar beside it.
 
 What changes: decode (``dev2_arrow_batch``, the same vectorized
 whole-column walker the wire source fuses), assembly bookkeeping, and
@@ -66,17 +67,17 @@ thread would have written and every crash point below is unchanged.
 ``poll_once()`` (tests, crash fixtures) runs the tail inline and
 returns after it.
 
-The INTENT here is strictly STRONGER than the direct door's:
-it carries the tmp->final RENAME LIST of part files already staged on
-disk, so recovery can FINISH a half-landed multi-run append
-idempotently per-run (atomic renames) instead of only deciding
+The INTENT here is strictly STRONGER than the FSM door's (bid +
+pre-batch totals): it carries the tmp->final RENAME LIST of part files
+already staged on disk, so recovery can FINISH a half-landed multi-run
+append idempotently per-run (atomic renames) instead of only deciding
 landed/not-landed wholesale — and the event table is written exactly
 ONCE per commit (the earlier intent_rows.parquet sidecar wrote it
 twice, and was the dominant commit term at 2x the bar shape).
 
-Exactly-once protocol (mirrors ``nexus_direct`` but the "engine
-replay" is replaced by a HELD-BACK OFFSET CURSOR — the consumer-group
-rule of committing only fully-processed positions):
+Exactly-once protocol (the FSM door's "engine replay" is replaced by
+a HELD-BACK OFFSET CURSOR — the consumer-group rule of committing only
+fully-processed positions):
 
 1. poll advances the in-memory fetch cursor; decoded rows feed the FSM;
 2. on dispatch: stage each run's rows as a DOT-prefixed tmp part file
@@ -743,7 +744,7 @@ class FetchLoopNexusWriter:
         )
         # frame key major, then digitiser: among duplicate (frame,
         # digitiser) rows the one with the fewest events (then lowest
-        # veto, then earliest) wins, as in the direct door
+        # veto, then earliest) wins; across polls the first admitted
         order = np.lexsort((veto, n_ev, did, run, ppp, per, fno, ts_us))
         key_cols = [c[order] for c in (ts_us, per, ppp, run, fno)]
         did, veto, n_ev = did[order], veto[order], n_ev[order]

@@ -94,28 +94,6 @@ def _events_with_dim(
     arrays are always equal-length (one event per element, the aev2
     contract), so positional indexing is exact; posexplode_outer keeps
     the zero-event frame as one null row, as explode_outer did."""
-    return _events_us_with_dim(
-        frames_batch.select(
-            F.unix_micros("ts").alias("ts_us"),
-            *_FRAME_KEY[1:],
-            "channel", "event_time", "event_voltage",
-        ),
-        dim,
-        with_run_col=with_run_col,
-    )
-
-
-def _events_us_with_dim(
-    rows_us: DataFrame, dim: DataFrame, with_run_col: bool = True,
-    outer: bool = True,
-) -> DataFrame:
-    """The ts_us-shaped core of ``_events_with_dim``: ``rows_us`` carries
-    integer-microsecond ``ts_us`` plus the rest of the frame key and the
-    three parallel event arrays (frame-level OR message-level rows — the
-    join decorates either the same way).  ``outer=False`` uses plain
-    posexplode, for message-level callers that handle zero-event frames
-    via a dimension-side branch instead (streaming/nexus_direct.py)."""
-    explode = F.posexplode_outer if outer else F.posexplode
     dim_cols = [
         "frame_seq",
         "event_time_zero",
@@ -129,15 +107,17 @@ def _events_us_with_dim(
     if with_run_col:
         dim_cols.insert(0, F.col("run_name"))
     joined = (
-        rows_us.select(
-            *_JOIN_KEY, "channel", "event_time", "event_voltage",
+        frames_batch.select(
+            F.unix_micros("ts").alias("ts_us"),
+            *_FRAME_KEY[1:],
+            "channel", "event_time", "event_voltage",
         )
         .join(F.broadcast(dim), _JOIN_KEY)
         .select(
             *dim_cols,
             "event_time",
             "event_voltage",
-            explode("channel"),
+            F.posexplode_outer("channel"),
         )
     )
     passthrough = (["run_name"] if with_run_col else []) + [
@@ -208,36 +188,16 @@ def _totals_from_sink(spark: SparkSession, path: str) -> dict[str, tuple[int, in
     return totals
 
 
-class _RunsDimension:
-    """The runs dimension of a Spark door: the RUN_SCHEMA DataFrame,
-    collected once on first use.  The reference's nexus-writer holds the
-    same table in memory (run_engine/engine.rs:54-80); re-broadcasting it
-    inside every micro-batch's plan was a measurable flat cost on the
-    latency path, and matching frames against it on the driver is
-    trivial."""
-
-    def __init__(self, runs: DataFrame):
-        self.runs = runs
-        self._runs_rows: list[dict] | None = None
-
-    def _load_runs(self) -> list[dict]:
-        if self._runs_rows is None:
-            self._runs_rows = runs_snapshot(self.runs)
-        return self._runs_rows
-
-    def refresh_runs(self, runs: DataFrame | None = None) -> None:
-        """Drop the collected runs snapshot (optionally replacing the
-        DataFrame) so the next batch re-collects it — the hook for a
-        control plane that starts/stops runs while the sink is live."""
-        if runs is not None:
-            self.runs = runs
-        self._runs_rows = None
-
-
-class NexusStreamWriter(_RunsDimension):
+class NexusStreamWriter:
     """The foreachBatch callable.  Holds per-run continuation totals
     {run_name: (next_frame_seq, next_event_index)}; rebuilds them from the
     sink directory on first use (T5 resume).
+
+    The runs dimension — the RUN_SCHEMA DataFrame — is collected once on
+    first use.  The reference's nexus-writer holds the same table in
+    memory (run_engine/engine.rs:54-80); re-broadcasting it inside every
+    micro-batch's plan was a measurable flat cost on the latency path,
+    and matching frames against it on the driver is trivial.
 
     Replay safety: a write-ahead INTENT file (bid + pre-batch totals,
     written just before each append, overwritten by the next — never
@@ -245,11 +205,11 @@ class NexusStreamWriter(_RunsDimension):
     commit-log write) makes the sink append exactly-once under the
     engine's batch replay — on restart, sink-derived totals differing
     from the intent's prove the crashed batch's append landed, so its
-    replay short-circuits (the nexus_direct.py protocol, sidecar
-    ``_writer_state``)."""
+    replay short-circuits (sidecar ``_writer_state``)."""
 
     def __init__(self, runs: DataFrame, path: str, on_commit=None):
-        super().__init__(runs)
+        self.runs = runs
+        self._runs_rows: list[dict] | None = None
         self.path = path
         # optional observer: called with the sorted frame_numbers committed
         # by each batch, AFTER the sink write — rides the slim dimension
@@ -264,6 +224,19 @@ class NexusStreamWriter(_RunsDimension):
         self.phase_log: list | None = None
         self._totals: dict[str, tuple[int, int]] | None = None
         self._skip_bid: int | None = None
+
+    def _load_runs(self) -> list[dict]:
+        if self._runs_rows is None:
+            self._runs_rows = runs_snapshot(self.runs)
+        return self._runs_rows
+
+    def refresh_runs(self, runs: DataFrame | None = None) -> None:
+        """Drop the collected runs snapshot (optionally replacing the
+        DataFrame) so the next batch re-collects it — the hook for a
+        control plane that starts/stops runs while the sink is live."""
+        if runs is not None:
+            self.runs = runs
+        self._runs_rows = None
 
     def _intent_file(self) -> str:
         return os.path.join(self.path, "_writer_state", "intent.json")

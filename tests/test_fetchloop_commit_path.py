@@ -5,8 +5,9 @@ scripted consumer handed to ``start()`` as ``consumer_factory``, so the
 loop's committer thread runs each multi-frame dispatch's commit tail
 while the loop thread polls (a one-frame dispatch commits inline).  The
 sink is read back with pyarrow and compared with a per-frame reference
-built from the decoded messages; crashes are injected at every step of
-an overlapped commit tail."""
+built from the decoded messages, and over random tapes with a
+plain-Python frame FSM; crashes are injected at every step of an
+overlapped commit tail."""
 
 import os
 import random
@@ -18,12 +19,18 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
 from supermusr_data_pipeline_spark.sources import messages as M
 from supermusr_data_pipeline_spark.sources.decode import (
     aev2_arrow_batch,
     dev2_arrow_batch,
+)
+from supermusr_data_pipeline_spark.streaming.frame_core import (
+    FrameState,
+    pick_dispatch,
 )
 from supermusr_data_pipeline_spark.streaming.nexus_fetchloop import (
     FetchLoopNexusWriter,
@@ -153,7 +160,7 @@ def _reference(tape, fmt, runs):
 
 def _sink(path):
     """Per (run, frame): constant columns + event tuples in file order,
-    and per run the frames' (frame_seq, event_index, n_rows)."""
+    and per run {frame_seq: [event_index, n_rows, frame_number]}."""
     frames, seqs = {}, {}
     for name in sorted(os.listdir(path)):
         if not name.startswith("run_name="):
@@ -175,7 +182,7 @@ def _sink(path):
                     (r["event_time_offset"], r["event_id"], r["pulse_height"])
                 )
                 seqs.setdefault(run, {}).setdefault(
-                    r["frame_seq"], [r["event_index"], 0]
+                    r["frame_seq"], [r["event_index"], 0, r["frame_number"]]
                 )[1] += 1
     return frames, seqs
 
@@ -183,6 +190,10 @@ def _sink(path):
 def _assert_sink_matches(path, tape, fmt, runs):
     frames, seqs = _sink(path)
     assert frames == _reference(tape, fmt, runs)
+    _assert_contiguous(seqs)
+
+
+def _assert_contiguous(seqs):
     for run, by_seq in seqs.items():
         # frame_seq contiguous from 0; event_index continues run-wide
         assert sorted(by_seq) == list(range(len(by_seq))), run
@@ -439,3 +450,140 @@ def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
         for f in os.listdir(path / "run_name=run_a")
     )
     _assert_sink_matches(path, tape, "dev2", (RUN_A,))
+
+
+def _model(msgs, polls, runs, ttl_ms, tombstone_ttl_ms):
+    """A plain-Python frame FSM over the decoded messages, for the
+    fetch loop's dev2 admission.  ``polls``: (clock in ms, message
+    positions) per poll.  Within a poll, among duplicate (frame,
+    digitiser) messages the one with the fewest events (then lowest
+    veto, then earliest) is the candidate; it is admitted unless an
+    earlier poll admitted that digitiser for the frame or the frame is
+    tombstoned (which re-arms the tombstone).  Dispatch is
+    ``frame_core.pick_dispatch`` on the same clock.  Returns the
+    ``_sink`` view: per (run, frame) constant columns + events in
+    arrival order, and per run {frame_seq: [event_index, n_rows,
+    frame_number]}."""
+    rb = dev2_arrow_batch(msgs)
+    rows = rb.to_pylist()
+    ts = rb.column("ts").cast(pa.int64()).to_pylist()
+    expected = list(range(N_DIG))
+    pending, tombstones, events = {}, {}, {}
+    frames, seqs, totals = {}, {}, {}
+    for now_ms, positions in polls:
+        best: dict[tuple, dict[int, tuple]] = {}
+        for i in positions:
+            r = rows[i]
+            key = (ts[i], r["period_number"], r["protons_per_pulse"],
+                   r["running"], r["frame_number"])
+            cand = (len(r["channel"]), r["veto_flags"], i)
+            by_did = best.setdefault(key, {})
+            by_did[r["digitizer_id"]] = min(
+                by_did.get(r["digitizer_id"], cand), cand
+            )
+        for key, by_did in best.items():
+            if key in tombstones:
+                tombstones[key] = now_ms + tombstone_ttl_ms
+                continue
+            fs = pending.get(key)
+            if fs is None:
+                fs = pending[key] = FrameState(now_ms)
+                events[key] = []
+            for did, (n_ev, veto, i) in sorted(
+                by_did.items(), key=lambda kv: kv[1][2]
+            ):
+                if did in fs.dids:
+                    continue
+                fs.dids.add(did)
+                fs.veto |= veto
+                fs.n_events += n_ev
+                r = rows[i]
+                events[key].append((i, list(zip(
+                    r["event_time"], r["channel"],
+                    [float(v) for v in r["event_voltage"]],
+                ))))
+        dispatch = pick_dispatch(
+            pending, tombstones, expected, now_ms, ttl_ms, tombstone_ttl_ms
+        )
+        for key, fs in sorted(dispatch, key=lambda kf: (kf[0][0], kf[0][4])):
+            ts_us, period, _ppp, running, fno = key
+            evs = [e for _i, part in events.pop(key) for e in part]
+            for run in runs:
+                if not run["from_us"] < ts_us:
+                    continue
+                name = run["run_name"]
+                seq, idx = totals.get(name, (0, 0))
+                const = (
+                    (ts_us - run["from_us"]) * 1000, period,
+                    sorted(fs.dids) == expected, running, fs.veto,
+                )
+                frames[(name, fno)] = (const, evs or [(None, None, None)])
+                seqs.setdefault(name, {})[seq] = [
+                    idx, max(len(evs), 1), fno,
+                ]
+                totals[name] = (seq + 1, idx + max(len(evs), 1))
+    return frames, seqs
+
+
+def test_fsm_property_matches_model(tmp_path):
+    """Property: over random tapes (missing digitisers, duplicates with
+    different payloads, zero-event frames, interleaved frames, arbitrary
+    chunking into polls, TTL expiries on a fake clock) the fetch loop
+    writes exactly what the plain-Python frame FSM of ``_model``
+    dispatches — every row, every frame_seq and event_index."""
+    runs = (RUN_A, RUN_B)
+    case_idx = [0]
+
+    @settings(max_examples=60, deadline=None)
+    @given(data=st.data())
+    def _case(data):
+        n_frames = data.draw(st.integers(1, 4), label="n_frames")
+        msgs = []
+        for f in range(n_frames):
+            dids = data.draw(
+                st.lists(st.integers(0, N_DIG - 1), min_size=1, max_size=6),
+                label=f"dids_f{f}",  # repeats = duplicate messages
+            )
+            for j, d in enumerate(dids):
+                n_ev = data.draw(st.integers(0, 4), label=f"n_f{f}_{j}")
+                veto = data.draw(st.integers(0, 7), label=f"v_f{f}_{j}")
+                msgs.append(_dev2(d, f, n_ev, veto=veto, shift=10 * j))
+        msgs = data.draw(st.permutations(msgs), label="arrival")
+        cuts = data.draw(
+            st.lists(st.integers(1, len(msgs)), max_size=3), label="cuts"
+        )
+        bounds = sorted({0, len(msgs), *cuts})
+        chunks = [(a, b) for a, b in zip(bounds, bounds[1:]) if b > a]
+        # clock advance after each poll: inside or past the 200 ms TTL,
+        # always inside the tombstone TTL
+        steps = data.draw(
+            st.lists(
+                st.sampled_from([0.01, 0.1, 0.25]),
+                min_size=len(chunks), max_size=len(chunks),
+            ),
+            label="steps",
+        )
+        case_idx[0] += 1
+        path = tmp_path / f"case{case_idx[0]}"
+        now = [1_000_000.0]
+        w = _writer(path, now, runs=runs)
+        records = _records(msgs)
+        polls = []
+        for (a, b), step in zip(chunks, steps):
+            polls.append((int(now[0] * 1000), range(a, b)))
+            w.poll_once(records=records[a:b])
+            now[0] += step
+        now[0] += 1.0  # past every TTL: the last pending frames dispatch
+        polls.append((int(now[0] * 1000), range(0)))
+        w.poll_once(records=[])
+        assert not w._pending
+
+        want_frames, want_seqs = _model(
+            msgs, polls, runs, w.frame_ttl_ms, w.tombstone_ttl_ms
+        )
+        frames, seqs = _sink(path)
+        assert frames == want_frames
+        assert seqs == want_seqs
+        _assert_contiguous(seqs)
+
+    _case()

@@ -1,4 +1,4 @@
-"""The decisions the three NeXus doors share (streaming/frame_core.py),
+"""The decisions the two NeXus doors share (streaming/frame_core.py),
 checked without a streaming query: run matching and frame sequencing
 against a brute-force per-(run, frame) reference, the dispatch and
 tombstone rule, and run directory names.  One Spark test pins the

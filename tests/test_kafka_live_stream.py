@@ -138,77 +138,3 @@ def test_live_50fps_keepup_over_wire(spark, tmp_path):
     assert (got["dids"].map(tuple) == tuple(range(N_DIG))).all()
     assert (got["n_events"] == N_DIG * EVENTS_PER_MSG).all()
 
-
-def test_live_50fps_keepup_direct_door(spark, tmp_path):
-    """The PRODUCTION door live over the wire: paced dev2 production at
-    50 fps races the kafka-wire consumer feeding the fused direct sink.
-    Every frame lands complete (all digitisers beat the TTL) with the
-    event table's continuation columns intact."""
-    from datetime import datetime, timezone
-
-    from pyspark.sql import functions as F
-
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        write_nexus_direct,
-    )
-
-    spark.dataSource.register(KafkaWireDataSource)
-    sink = str(tmp_path / "nexus_out")
-    runs = spark.createDataFrame(
-        [("live_run", T0_NS // 1000 - 1_000_000, None)],
-        "run_name string, from_us long, until_us long",
-    ).select(
-        "run_name",
-        F.timestamp_micros("from_us").alias("collect_from"),
-        F.timestamp_micros(F.col("until_us")).alias("collect_until"),
-    )
-    with MiniBroker() as broker:
-        broker.create_topic("daq-events", partitions=2)
-        done = threading.Event()
-        producer = threading.Thread(
-            target=_producer_thread, args=(broker.bootstrap, done), daemon=True
-        )
-        opts = kafka_source_options(
-            broker.bootstrap, ["daq-events"], starting_offsets="earliest"
-        )
-        wire = (
-            spark.readStream.format("kafka-wire").options(**opts).load()
-            .select("key", "value", "topic")
-        )
-        q = write_nexus_direct(
-            decode_dev2_messages(wire), runs, sink,
-            str(tmp_path / "ckpt"), list(range(N_DIG)),
-            frame_ttl_ms=3000,
-            trigger={"processingTime": "0 seconds"},
-        )
-        try:
-            producer.start()
-            want = N_FRAMES * N_DIG * EVENTS_PER_MSG
-            deadline = time.monotonic() + N_FRAMES / FPS + 60
-            n = 0
-            while time.monotonic() < deadline:
-                try:
-                    n = spark.read.parquet(sink).count()
-                except Exception:
-                    n = 0
-                if n >= want and done.is_set():
-                    break
-                time.sleep(0.5)
-        finally:
-            q.stop()
-            q.awaitTermination(60)
-        assert done.is_set(), "producer never finished its tape"
-        assert n == want, f"sink holds {n}/{want} event rows"
-
-    out = spark.read.parquet(sink)
-    rows = out.groupBy("frame_number").agg(
-        F.count("*").alias("n"),
-        F.min("frame_complete").alias("complete"),
-        F.min("event_index").alias("idx"),
-    ).collect()
-    assert sorted(r.frame_number for r in rows) == list(range(N_FRAMES))
-    assert all(r.complete for r in rows)
-    assert all(r.n == N_DIG * EVENTS_PER_MSG for r in rows)
-    # event_index continuation: frame f's base is f * N_DIG * EVENTS_PER_MSG
-    for r in rows:
-        assert r.idx == r.frame_number * N_DIG * EVENTS_PER_MSG

@@ -1,10 +1,9 @@
 """The fetch-loop door (streaming/nexus_fetchloop.py) must produce the
-SAME sink rows as the direct door for the same dev2 tape — chaining to
-the FSM door and the batch builder through the existing parity tests —
-while committing without a micro-batch: poll + decode + Arrow append in
-one loop thread.  Crash recovery (write-ahead intent + held-back offset
-cursor) is driven crash-at-every-step, the way test_nexus_direct.py
-drives the tick protocol."""
+SAME sink rows as the batch builder for the same dev2 tape — the oracle
+the FSM door is pinned to in test_nexus_stream_batch_parity — while
+committing without a micro-batch: poll + decode + Arrow append in one
+loop thread.  Crash recovery (write-ahead intent + held-back offset
+cursor) is driven crash-at-every-step."""
 
 import os
 import time
@@ -93,17 +92,24 @@ def _await(predicate, timeout_s=10.0):
     return predicate()
 
 
-def test_fetchloop_rows_equal_direct_door(spark, tmp_path):
-    """Same complete-frame tape through the fetch loop and the direct
-    door -> identical sink rows (and therefore identical to the FSM
-    door and the batch builder, via test_nexus_direct's chain)."""
+def test_fetchloop_rows_equal_batch_builder(spark, tmp_path):
+    """Same complete-frame tape through the fetch loop and the batch
+    builder (the decoded messages' events assembled by
+    operators/frame_assembly, matched by the J1 join, decorated by
+    build_nexus_events) -> identical sink rows."""
     from pyspark.sql import functions as F
 
+    from supermusr_data_pipeline_spark.operators.frame_assembly import (
+        assemble_frames_long,
+    )
+    from supermusr_data_pipeline_spark.operators.nexus_sink import (
+        build_nexus_events,
+    )
+    from supermusr_data_pipeline_spark.operators.run_matching import (
+        match_events_to_runs,
+    )
     from supermusr_data_pipeline_spark.sources.decode import (
         decode_dev2_messages,
-    )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        DirectNexusWriter,
     )
 
     payloads = [
@@ -121,7 +127,6 @@ def test_fetchloop_rows_equal_direct_door(spark, tmp_path):
         )
         w.stop()
 
-    # direct door over the same tape (batch path, complete frames)
     runs_df = spark.createDataFrame(
         [("run_a", T0_US - 1_000_000, None)],
         "run_name string, from_us long, until_us long",
@@ -130,20 +135,32 @@ def test_fetchloop_rows_equal_direct_door(spark, tmp_path):
         F.timestamp_micros("from_us").alias("collect_from"),
         F.timestamp_micros(F.col("until_us")).alias("collect_until"),
     )
-    env = spark.createDataFrame(
-        [(p,) for p in payloads], "value binary"
-    ).select("value")
-    msgs = decode_dev2_messages(env)
-    direct = DirectNexusWriter(
-        runs_df, str(tmp_path / "direct"), list(range(N_DIG)),
-        frame_ttl_ms=200,
+    msgs = decode_dev2_messages(
+        spark.createDataFrame([(p,) for p in payloads], "value binary")
     )
-    direct(msgs, 0)
+    events = msgs.withColumn(
+        "_e", F.explode(F.arrays_zip("channel", "event_time", "event_voltage"))
+    ).select(
+        "digitizer_id", "ts", "period_number", "protons_per_pulse",
+        "running", "frame_number", "veto_flags",
+        F.col("_e.channel").alias("channel"),
+        F.col("_e.event_time").alias("event_time"),
+        F.col("_e.event_voltage").alias("event_voltage"),
+    )
+    batch_out = build_nexus_events(
+        match_events_to_runs(
+            assemble_frames_long(events, list(range(N_DIG))), runs_df
+        )
+    )
 
     got, cols_a = _sink_rows(spark, tmp_path / "loop")
-    want, cols_b = _sink_rows(spark, tmp_path / "direct")
+    cols_b = sorted(batch_out.columns)
+    want = sorted(
+        tuple(repr(r[c]) for c in cols_b) for r in batch_out.collect()
+    )
     assert cols_a == cols_b
     assert got == want
+    assert len(got) == sum(6 * (3 + d) for d in range(N_DIG))
 
 
 def test_fetchloop_ttl_dispatches_incomplete_and_tombstones(spark, tmp_path):
@@ -815,117 +832,6 @@ def test_fetchloop_survives_cluster_leader_failover(spark, tmp_path):
     assert sorted(
         r.frame_seq for r in df.select("frame_seq").distinct().collect()
     ) == list(range(8))
-
-
-def test_fetchloop_fsm_property_matches_direct_door(spark, tmp_path):
-    """Property: over random tapes (missing digitisers, duplicates,
-    zero-event frames, arbitrary chunking into polls/batches, TTL
-    expiries on a FAKE clock) the fetch-loop FSM writes the same sink
-    rows as the direct door fed the same chunks — the numpy/Arrow FSM
-    reimplementation cannot diverge from the proven one on orderings
-    the example generator finds."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from supermusr_data_pipeline_spark.kafka.client import ConsumerRecord
-    from supermusr_data_pipeline_spark.sources.decode import (
-        decode_dev2_messages,
-    )
-    from supermusr_data_pipeline_spark.streaming.nexus_direct import (
-        DirectNexusWriter,
-    )
-
-    from pyspark.sql import functions as F
-
-    runs_df = spark.createDataFrame(
-        [("run_a", T0_US - 1_000_000, None)],
-        "run_name string, from_us long, until_us long",
-    ).select(
-        "run_name",
-        F.timestamp_micros("from_us").alias("collect_from"),
-        F.timestamp_micros(F.col("until_us")).alias("collect_until"),
-    )
-
-    case_idx = [0]
-
-    @settings(max_examples=6, deadline=None)
-    @given(data=st.data())
-    def _case(data):
-        n_frames = data.draw(st.integers(1, 3), label="n_frames")
-        msgs = []
-        for f in range(n_frames):
-            dids = data.draw(
-                st.lists(
-                    st.integers(0, N_DIG - 1), min_size=1, max_size=6
-                ),
-                label=f"dids_f{f}",  # repeats = duplicate messages
-            )
-            for j, d in enumerate(dids):
-                n_ev = data.draw(st.integers(0, 4), label=f"n_f{f}_{j}")
-                veto = data.draw(st.integers(0, 7), label=f"v_f{f}_{j}")
-                msgs.append(
-                    _payload(d, f, n_ev, veto=veto, ev_offset=10 * j)
-                )
-        # one chunking shared by both doors (chunk boundary = poll /
-        # micro-batch boundary)
-        cuts = data.draw(
-            st.lists(st.integers(1, max(1, len(msgs))), max_size=3),
-            label="cuts",
-        )
-        bounds = sorted({0, len(msgs), *cuts})
-        chunks = [
-            msgs[a:b] for a, b in zip(bounds, bounds[1:]) if b > a
-        ]
-        case_idx[0] += 1
-        base = tmp_path / f"case{case_idx[0]}"
-
-        now = [1_000_000.0]
-        w = FetchLoopNexusWriter(
-            runs=_runs(), path=str(base / "loop"),
-            expected_digitizers=list(range(N_DIG)),
-            bootstrap="unused:0", topics=["t"],
-            frame_ttl_ms=500, clock=lambda: now[0],
-        )
-        direct = DirectNexusWriter(
-            runs_df, str(base / "direct"), list(range(N_DIG)),
-            frame_ttl_ms=500, clock=lambda: now[0],
-        )
-        off = [0]
-
-        def recs(chunk):
-            out = [
-                ConsumerRecord("t", 0, off[0] + i, 0, b"k", p)
-                for i, p in enumerate(chunk)
-            ]
-            off[0] += len(chunk)
-            return out
-
-        for bid, chunk in enumerate(chunks):
-            w.poll_once(records=recs(chunk))
-            env = spark.createDataFrame(
-                [(p,) for p in chunk], "value binary"
-            )
-            direct(decode_dev2_messages(env), bid)
-            now[0] += 0.05
-        # expire any pending incomplete frames on both doors
-        now[0] += 1.0
-        w.poll_once(records=[])
-        direct._spark = spark
-        direct.expire_pending()
-
-        a = _count_or_empty(spark, base / "loop")
-        b = _count_or_empty(spark, base / "direct")
-        assert a == b
-
-    def _count_or_empty(spark_, path):
-        import os as _os
-
-        if not _os.path.isdir(str(path)):
-            return []
-        rows, _cols = _sink_rows(spark_, path)
-        return rows
-
-    _case()
 
 
 def test_fetchloop_aev2_mode_matches_dev2_mode(spark, tmp_path):

@@ -171,3 +171,56 @@ def test_retire_drops_run_from_fetch_loop(spark, tmp_path):
     assert not os.path.exists(live)
     completed = os.path.join(sink, "completed", "run_name=run_a")
     assert spark.read.parquet(completed).count() == 4
+
+
+def test_retire_drops_run_from_fsm_door_writer(spark, tmp_path):
+    """``writer=`` the FSM door's NexusStreamWriter: after retirement a
+    straggler frame inside the retired run's interval no longer matches
+    it, so the run's live directory is not resurrected next to its
+    completed/ copy."""
+    from pyspark.sql import functions as F
+
+    from supermusr_data_pipeline_spark.schemas import FRAME_EVENT_LIST_SCHEMA
+    from supermusr_data_pipeline_spark.streaming.nexus_stream import (
+        NexusStreamWriter,
+    )
+
+    t0 = datetime(2024, 3, 1, tzinfo=timezone.utc)
+    t0_us = int(t0.timestamp() * 1e6)
+    runs = spark.createDataFrame(
+        [("run_a", t0_us - 1_000_000, t0_us + 100_000)],
+        "run_name string, from_us long, until_us long",
+    ).select(
+        "run_name",
+        F.timestamp_micros("from_us").alias("collect_from"),
+        F.timestamp_micros("until_us").alias("collect_until"),
+    )
+
+    def frame(fno):  # one complete frame of 4 events, 20 ms apart
+        return spark.createDataFrame(
+            [(
+                datetime.fromtimestamp(
+                    (t0_us + fno * 20_000) / 1e6, tz=timezone.utc
+                ),
+                0, 4, True, fno, 0, True, [0, 1],
+                [0, 1, 0, 1], [10, 20, 30, 40], [1.0, 2.0, 3.0, 4.0],
+            )],
+            FRAME_EVENT_LIST_SCHEMA,
+        )
+
+    sink = str(tmp_path / "sink")
+    live = os.path.join(sink, "run_name=run_a")
+    w = NexusStreamWriter(runs, sink)
+    w(frame(0), 0)
+    assert os.path.isdir(live)
+
+    moved = retire_completed_runs(
+        spark, sink, runs, now="2030-01-01 00:00:00", compact=True, writer=w
+    )
+    assert moved == ["run_a"]
+    assert not os.path.exists(live)
+
+    w(frame(2), 1)  # inside the retired interval
+    assert not os.path.exists(live)
+    completed = os.path.join(sink, "completed", "run_name=run_a")
+    assert spark.read.parquet(completed).count() == 4

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Diagnostic: run the streaming envelope bench at a reduced shape for
-fast iteration on the micro-batch latency floor (VERDICT r6 #1).
+fast iteration on the door latency floors (VERDICT r6 #1).
 
-The bench itself publishes the cycle decomposition (engine durationMs
-medians + the sink's fsm/write phase log), so this tool is just a thin
-wrapper that shrinks the soak: DIAG_FRAMES (default 300) frames at
-8 digitisers only.  `python tools/diag_stream.py` prints the bench dict
-pretty-printed.
+The bench itself publishes the decompositions (the fetch loop's
+per-commit split; the FSM door's engine durationMs medians + the sink's
+fsm/write phase log), so this tool is just a thin wrapper that shrinks
+the soak: DIAG_FRAMES (default 300) frames at 8 digitisers only
+(SPARK_GRAFT_STREAM_FRAMES_FSM shortens the FSM door's soak).
+`python tools/diag_stream.py` prints the bench dict pretty-printed.
 
 Not part of the bench contract; a working tool for the latency attack.
 """
