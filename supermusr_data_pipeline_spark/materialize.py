@@ -25,6 +25,8 @@ storage identically for either branch.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -53,3 +55,24 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     if eager:
         out.count()
     return out
+
+
+@contextmanager
+def materialize_scope(sc):
+    """Scope for one unit of work (a streaming micro-batch) whose
+    materializations must not outlive it.  Yields a list; the body
+    appends every frame it ``materialize()``s.  On exit each is
+    ``unpersist()``ed, dependents first — the persist branch's
+    CacheManager entry is dropped only that way — and any persistent RDD
+    the body left behind (the local branch's checkpoint blocks) is
+    released by the RDD-id diff."""
+    from .plans.text_dedup import _persistent_rdd_ids, _unpersist_rdd_ids
+
+    before = _persistent_rdd_ids(sc)
+    held: list = []
+    try:
+        yield held
+    finally:
+        for df in reversed(held):
+            df.unpersist()
+        _unpersist_rdd_ids(sc, _persistent_rdd_ids(sc) - before)

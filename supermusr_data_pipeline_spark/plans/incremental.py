@@ -226,11 +226,15 @@ def lsh_index_path(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"supermusr_lsh_index_{base}.parquet")
 
 
-# doc-id hash buckets for the tokens artifact: a probe knows its candidate
-# doc_ids, so their buckets become a literal partition filter and the
-# verification-token scan reads only touched directories instead of the
-# whole corpus — the q64/q114 physical-index pattern applied to the dedup
-# index's verification side.  Fixed fan-out (the bounded-directory rule).
+# doc-id hash buckets for the tokens artifact: `tb` is a stored int
+# column, and every tokens file holds its rows sorted by it.  A probe knows
+# its candidate doc_ids, so their buckets become a literal `tb IN (...)`
+# data filter that Parquet's row-group and page min/max statistics prune
+# on, and the verification-token scan reads only the touched buckets'
+# row ranges instead of the whole corpus's token sets.  Buckets are not
+# directories: a directory per bucket would multiply every segment's
+# write, and every streamed segment, by the bucket count.  Fixed
+# alphabet: the value of a doc's bucket never changes.
 _TOK_BUCKETS = 256
 
 
@@ -246,59 +250,136 @@ def _tok_bucket(col):
 LSH_BASE_BID = -1          # the bulk index build
 LSH_BULK_APPEND_BID = -2   # append_shard_to_index batch growth
 
+# the tokens/ layout, recorded in tokens/_LAYOUT next to the _CURRENT
+# pointer (plans/index_maintenance.py): one `bid=<segment>/` directory per
+# segment holding tb-sorted files.  The earlier layout nested segments
+# under 256 `tb=*` directories and wrote no marker; Spark's partition
+# discovery cannot read the two under one root, so a tokens root without
+# this marker is refused by every appender and reader —
+# write_lsh_index rebuilds it, compact_lsh_index migrates it.
+TOKENS_LAYOUT = "bid-segments/tb-sorted"
 
-def _write_segment(sigs: DataFrame, out_path: str, bid: int, mode: str) -> None:
-    """Write a signature table's rows as index segment ``bid``: the
-    verification token sets (``th``) under ``tokens/`` and the band rows
-    (banded from the ``mh`` columns) under ``bands/``."""
+
+class IndexLayoutError(RuntimeError):
+    """The index on disk was written in a layout this code does not
+    append to or read."""
+
+
+def check_tokens_layout(index_path: str) -> None:
+    """Raise IndexLayoutError when ``index_path``'s tokens artifact exists
+    but does not carry the current layout marker."""
+    from .index_maintenance import read_layout
+
+    root = os.path.join(index_path, "tokens")
+    if not os.path.isdir(root):
+        return
+    found = read_layout(root)
+    if found != TOKENS_LAYOUT:
+        raise IndexLayoutError(
+            f"LSH index {index_path}: tokens/ layout is "
+            f"{found or 'the unmarked tb=*/bid=* directory layout'!r}, "
+            f"expected {TOKENS_LAYOUT!r}; rebuild it with write_lsh_index "
+            "or migrate it with compact_lsh_index"
+        )
+
+
+# the artifacts' stored schemas, partition columns last: a read that
+# names them skips the one-task schema-inference job every parquet read
+# otherwise runs
+_ARTIFACT_SCHEMAS = {
+    "tokens": "doc_id bigint, th array<bigint>, tb int, bid int",
+    "bands": "doc_id bigint, key string, band_no int, bid int",
+}
+
+
+def read_index_artifact(
+    spark: SparkSession, index_path: str, artifact: str
+) -> DataFrame:
+    """Scan ``artifact`` ('tokens' | 'bands') of the LSH index at
+    ``index_path``, resolved through its _CURRENT pointer; refuses an
+    index whose tokens artifact is in another layout."""
     from .index_maintenance import resolve_dir
 
-    (
-        sigs.select("doc_id", "th")
-        .withColumn("tb", _tok_bucket(F.col("doc_id")))
-        .withColumn("bid", F.lit(bid))
+    check_tokens_layout(index_path)
+    return spark.read.schema(_ARTIFACT_SCHEMAS[artifact]).parquet(
+        resolve_dir(os.path.join(index_path, artifact))
+    )
+
+
+def write_segment(
+    tokens: DataFrame,
+    bands: DataFrame,
+    index_path: str,
+    bid: int,
+    mode: str,
+    dynamic: bool = False,
+) -> None:
+    """Write ``tokens`` (doc_id, th) and ``bands`` (doc_id, band_no, key)
+    as index segment ``bid``: tokens under ``tokens/bid=<bid>/`` as a few
+    files sorted by ``tb`` (one hash shuffle on tb keeps each bucket's
+    rows in one file), bands under ``bands/band_no=*/bid=<bid>/``.
+    ``mode`` 'overwrite' replaces the whole artifact (the bulk build) and
+    is the only mode that may replace an old-layout tokens root;
+    'append' adds the segment; ``dynamic`` (with 'overwrite') replaces
+    only this segment's partitions — the streaming door's crash-retry
+    unit."""
+    from .index_maintenance import resolve_dir, write_layout
+
+    if mode != "overwrite" or dynamic:
+        check_tokens_layout(index_path)
+
+    def write(df: DataFrame, artifact: str, parts: list) -> None:
+        w = df.write.partitionBy(*parts).mode(mode)
+        if dynamic:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.parquet(resolve_dir(os.path.join(index_path, artifact)))
+
+    seg = F.lit(int(bid))
+    write(
+        tokens.withColumn("tb", _tok_bucket(F.col("doc_id")))
+        .withColumn("bid", seg)
         .repartition("tb")
-        .write.partitionBy("tb", "bid")
-        .mode(mode)
-        .parquet(resolve_dir(os.path.join(out_path, "tokens")))
+        .sortWithinPartitions("tb"),
+        "tokens",
+        ["bid"],
     )
-    (
-        _banded(sigs)
-        .withColumn("bid", F.lit(bid))
-        .repartition("band_no")
-        .write.partitionBy("band_no", "bid")
-        .mode(mode)
-        .parquet(resolve_dir(os.path.join(out_path, "bands")))
-    )
+    write_layout(os.path.join(index_path, "tokens"), TOKENS_LAYOUT)
+    write(bands.withColumn("bid", seg).repartition("band_no"), "bands", ["band_no", "bid"])
 
 
 def write_lsh_index(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     """Index-build job for the BASE corpus: two artifacts under one root —
     ``bands/`` (doc_id, band_no, key) partitioned by (band_no, bid), and
-    ``tokens/`` (doc_id, th) for exact-Jaccard verification, partitioned
-    by (``tb`` = hash(doc_id) % 256, bid) so candidate verification
-    prunes to the touched buckets.  ``bid`` is the SEGMENT id: the bulk
-    build writes bid=-1, and the streaming front door
+    ``tokens/`` (doc_id, th, tb) for exact-Jaccard verification,
+    partitioned by bid only, each file sorted by ``tb`` = hash(doc_id) %
+    256 so candidate verification prunes to the touched buckets through
+    Parquet statistics; ``tokens/_LAYOUT`` records that layout.  ``bid``
+    is the SEGMENT id: the bulk build writes bid=-1 (replacing whatever
+    index, in whatever layout, was there), and the streaming front door
     (streaming/shard_ingest.py) appends each micro-batch as its own
     bid=<batch_id> partitions via dynamic partition overwrite — a
     crash-retry REPLACES its segment instead of duplicating rows, with
-    no marker files.  Token-id arrays are bigints, so the parquet
+    no idempotency marker files.  Token-id arrays are bigints, so the parquet
     round-trip is exact.  At 100 TB this is the standing dedup index a
     shard lands against; a shard that passes is then APPENDED to it
     (band rows + token sets), which is the whole point of the layout —
     growing the index is an append, not a rebuild."""
     # both artifacts derive from the session-shared signature table, so
     # the build runs no tokenize or MinHash pass of its own
-    sigs = token_signatures(spark, sf_dir)
-    is_base = F.col("doc_id") % _DELTA_MOD != _DELTA_REM
-    _write_segment(sigs.filter(is_base), out_path, LSH_BASE_BID, "overwrite")
+    sigs = token_signatures(spark, sf_dir).filter(
+        F.col("doc_id") % _DELTA_MOD != _DELTA_REM
+    )
+    write_segment(
+        sigs.select("doc_id", "th"), _banded(sigs), out_path, LSH_BASE_BID, "overwrite"
+    )
 
 
 @_register("q82_indexed_incremental", oracle=_q79_oracle())
 def q82_indexed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q79 with the base side served from the persisted index: base band
     rows and token sets are parquet scans (no recomputation of base
-    signatures from text); only the delta shard is banded in this pass,
+    signatures from text) — ``tokens/`` holds one directory of tb-sorted
+    files per segment; only the delta shard is banded in this pass,
     from its rows of the session-shared signature table.  Build-once per session ($TMPDIR artifact, the
     q64 pattern); value-identical to q79 by construction and by oracle."""
     path = lsh_index_path(sf_dir)
@@ -313,18 +394,13 @@ def q82_indexed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = token_signatures(spark, sf_dir).filter(is_delta)
     delta_th = delta.select("doc_id", "th")
     delta_banded = _banded(delta)
-    from .index_maintenance import resolve_dir
-
-    base_banded = spark.read.parquet(
-        resolve_dir(os.path.join(path, "bands"))
-    ).select("doc_id", F.col("band_no").cast("int").alias("band_no"), "key")
-    # no tb pruning here: a 10%-of-corpus delta's candidates touch nearly
-    # every bucket, so the filter would list all directories for nothing;
-    # the SMALL-batch probe (streaming/shard_ingest.admit_batch) is where
-    # the bucketed layout pays
-    base_th = spark.read.parquet(
-        resolve_dir(os.path.join(path, "tokens"))
-    ).select("doc_id", "th")
+    base_banded = read_index_artifact(spark, path, "bands").select(
+        "doc_id", "band_no", "key"
+    )
+    # no tb filter here: a 10%-of-corpus delta's candidates touch nearly
+    # every bucket, so it would prune nothing; the SMALL-batch probe
+    # (streaming/shard_ingest.admit_batch) is where the tb-sorted files pay
+    base_th = read_index_artifact(spark, path, "tokens").select("doc_id", "th")
 
     banded = base_banded.unionByName(delta_banded)
     # combined occupancy — identical to the maintained index's view (q79);
@@ -375,9 +451,13 @@ def append_shard_to_index(spark: SparkSession, sf_dir: str, out_path: str) -> No
     stored).  Rows land in the reserved bid=-2 bulk-append segment so a
     concurrent streaming door's batch-id partitions can never collide
     with them."""
-    sigs = token_signatures(spark, sf_dir)
-    is_delta = F.col("doc_id") % _DELTA_MOD == _DELTA_REM
-    _write_segment(sigs.filter(is_delta), out_path, LSH_BULK_APPEND_BID, "append")
+    sigs = token_signatures(spark, sf_dir).filter(
+        F.col("doc_id") % _DELTA_MOD == _DELTA_REM
+    )
+    write_segment(
+        sigs.select("doc_id", "th"), _banded(sigs), out_path, LSH_BULK_APPEND_BID,
+        "append",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -62,8 +62,10 @@ the same precondition table formats exist to remove for raw parquet
 directories.
 
 Scale notes: compaction is one shuffle per artifact keyed by the
-partition column (band_no / cell / tb), writing ~one file per key — the
-exact layout the builders (plans/incremental.write_lsh_index,
+partition column (band_no / cell / the postings tb), writing ~one file
+per key, or for the LSH ``tokens/`` artifact one range shuffle on (bid,
+tb) writing a few tb-sorted files per segment — the exact layout the
+builders (plans/incremental.write_lsh_index,
 streaming/vector_ingest.write_vector_index) produce, so a compacted
 index is indistinguishable from a freshly built one.  Content equality
 is CI-pinned: admission decisions and probes against a compacted index
@@ -85,6 +87,11 @@ from pyspark.sql import functions as F
 _POINTER = "_CURRENT"
 _MANIFEST = "_COMPACT_MANIFEST"
 _RETIRED = "_RETIRED"
+# layout version marker: names the on-disk layout of the data the pointer
+# resolves to, so a reader or appender can refuse (or a rebuild replace)
+# an artifact written in an older layout instead of mixing two
+_LAYOUT = "_LAYOUT"
+_KEEP = (_POINTER, _RETIRED, _LAYOUT)
 
 
 # ---------------------------------------------------------------------------
@@ -109,6 +116,25 @@ def _read_pointer(path: str) -> str | None:
     except OSError:
         return None
     return name or None
+
+
+def read_layout(path: str) -> str | None:
+    """The layout version recorded next to artifact ``path``'s pointer,
+    or None when no marker was ever written."""
+    try:
+        with open(os.path.join(path, _LAYOUT)) as f:
+            return f.read().strip() or None
+    except OSError:
+        return None
+
+
+def write_layout(path: str, layout: str) -> None:
+    """Record ``layout`` for artifact ``path`` (one atomic replace)."""
+    p = os.path.join(path, _LAYOUT)
+    tmp = p + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(layout + "\n")
+    os.replace(tmp, p)
 
 
 def _flip_pointer(path: str, version_name: str) -> None:
@@ -136,7 +162,7 @@ def _gc_stale(path: str, keep: set[str]) -> None:
     except OSError:
         return
     for name in entries:
-        if name in keep or name in (_POINTER, _RETIRED):
+        if name in keep or name in _KEEP:
             continue
         full = os.path.join(path, name)
         if os.path.isdir(full):
@@ -165,7 +191,7 @@ def gc_retired(path: str) -> int:
     cur = _read_pointer(path)
     removed = 0
     for name in names:
-        if name == cur or name in (_POINTER, _RETIRED):
+        if name == cur or name in _KEEP:
             continue
         full = os.path.join(path, name)
         if os.path.isdir(full):
@@ -222,7 +248,7 @@ def _publish_compacted(path: str, write_fn, _fail_at: str | None = None) -> dict
     try:
         retired = [
             n for n in os.listdir(path)
-            if n not in (vname, _POINTER, _RETIRED)
+            if n != vname and n not in _KEEP
             and not n.endswith(".tmp")
         ]
     except OSError:
@@ -241,12 +267,18 @@ def _compact_segmented(
     key: str,
     base_bid: int = -1,
     protect_bid: int | None = None,
+    sorted_by_key: bool = False,
     _fail_at: str | None = None,
 ) -> dict:
     """Compact a segmented (``bid``-partitioned) artifact: fold every
-    segment into the reserved base segment ``bid=<base_bid>`` with one
-    file per bucket directory.  Pure concatenation — a row lives in
-    exactly one segment, so values are untouched.
+    segment into the reserved base segment ``bid=<base_bid>``.  Pure
+    concatenation — a row lives in exactly one segment, so values are
+    untouched.  By default ``key`` is a bucket DIRECTORY and the fold
+    writes one file per bucket directory; with ``sorted_by_key`` the
+    artifact has no bucket directories (the LSH ``tokens/`` layout): one
+    range shuffle on (bid, key) writes each segment as a few files, each
+    sorted by ``key`` and covering its own ``key`` range, so a probe's
+    ``key`` filter prunes on the Parquet footers' min/max statistics.
 
     ``protect_bid`` keeps ONE segment unfolded (its rows re-land under
     their original bid): the in-stream compaction hook passes the batch
@@ -267,12 +299,13 @@ def _compact_segmented(
     df = df.withColumn("bid", out_bid)
 
     def write(vdir: str) -> None:
-        (
-            df.repartition(max(1, df.select(key).distinct().count()), key)
-            .write.partitionBy(key, "bid")
-            .mode("overwrite")
-            .parquet(vdir)
-        )
+        if sorted_by_key:
+            out = df.orderBy("bid", key).write.partitionBy("bid")
+        else:
+            out = df.repartition(
+                max(1, df.select(key).distinct().count()), key
+            ).write.partitionBy(key, "bid")
+        out.mode("overwrite").parquet(vdir)
 
     return _publish_compacted(live_root, write, _fail_at=_fail_at)
 
@@ -282,18 +315,25 @@ def compact_lsh_index(
 ) -> dict:
     """Compact the q82/shard-ingest LSH index: every per-batch ``bid``
     segment folds into the bid=-1 base segment — ``bands/`` back to one
-    file per band_no directory, ``tokens/`` to one file per tb bucket
-    directory."""
-    return {
+    file per band_no directory, ``tokens/`` to one ``bid=-1`` segment of
+    files sorted by ``tb`` (plans/incremental.py's layout).  The tokens
+    fold reads whichever layout the artifact holds, so it also MIGRATES
+    an index written in the older ``tb=*/bid=*`` directory layout; the
+    layout marker is written once the new version is published."""
+    from .incremental import TOKENS_LAYOUT
+
+    tokens = os.path.join(index_path, "tokens")
+    out = {
         "bands": _compact_segmented(
             spark, os.path.join(index_path, "bands"), "band_no",
             protect_bid=protect_bid,
         ),
         "tokens": _compact_segmented(
-            spark, os.path.join(index_path, "tokens"), "tb",
-            protect_bid=protect_bid,
+            spark, tokens, "tb", protect_bid=protect_bid, sorted_by_key=True,
         ),
     }
+    write_layout(tokens, TOKENS_LAYOUT)
+    return out
 
 
 def compact_vector_index(
@@ -319,9 +359,15 @@ def _max_files_per_dir(root: str) -> int:
     single-bucket probe opens, maximized over buckets.  A bucket's files
     are spread across SEGMENT subdirectories (``bid=``/``batch=``), so
     counts group on the non-segment partition component of each path
-    (``tb=3`` whether the layout nests it outside or inside the segment
-    dir); an unbucketed artifact (the stats ledger) groups to one total.
-    One local directory walk — metadata only."""
+    (``tb=3`` of the postings index whether the layout nests it outside
+    or inside the segment dir, ``band_no=2``, ``cell=7``).  An artifact
+    without bucket directories (the LSH ``tokens/`` files sorted by
+    ``tb``, the stats ledger) groups under ``_root``, where every probe
+    opens every segment; there each SEGMENT counts once, not each file:
+    a compacted base segment holds as many well-sized files as its data
+    needs, and counting them would re-fire compaction on every batch
+    once the base outgrew the threshold.  One local directory walk —
+    metadata only."""
     groups: dict = {}
     for r, _d, files in os.walk(root):
         n = sum(1 for f in files if f.endswith(".parquet"))
@@ -332,8 +378,10 @@ def _max_files_per_dir(root: str) -> int:
             c for c in rel.split(os.sep)
             if "=" in c and not c.startswith(("bid=", "batch="))
         ]
-        key = comps[-1] if comps else "_root"
-        groups[key] = groups.get(key, 0) + n
+        if comps:
+            groups[comps[-1]] = groups.get(comps[-1], 0) + n
+        else:
+            groups["_root"] = groups.get("_root", 0) + 1
     return max(groups.values(), default=0)
 
 
@@ -345,9 +393,11 @@ def maybe_compact(
     protect_bid: int | None = None,
 ) -> dict | None:
     """The policy hook the streaming front doors call between batches
-    (VERDICT r7 #6): when any leaf directory of the index has accumulated
-    more than ``max_files_per_dir`` parquet files, run the artifact's
-    compactor; otherwise do nothing (one directory walk).  ``kind`` is
+    (VERDICT r7 #6): when a single-bucket probe of the index would open
+    more than ``max_files_per_dir`` parquet files (``_max_files_per_dir``:
+    files per bucket directory, or segments for the unbucketed tokens
+    artifact), run the artifact's compactor; otherwise do nothing (one
+    directory walk).  ``kind`` is
     'lsh' | 'vector' | 'postings'.  Callers inside a foreachBatch MUST
     pass their current batch id as ``protect_bid`` (see
     _compact_segmented) so a crash-replay of the not-yet-committed batch

@@ -50,14 +50,19 @@ def get_spark(
         # as before, so cluster behavior at scale is unchanged.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # bounded-fanout bucket layouts (the 256-dir LSH tokens artifact,
-        # the 64-dir postings index) sit just above the default 32-path
-        # threshold, so every probe paid a full Spark JOB (256 tasks
-        # measured for one q82 probe) to list a few hundred local
-        # directories the driver lists in milliseconds.  1024 covers every
-        # by-design bucket alphabet in this engine; genuinely large
-        # partitioned tables (dates x regions at 100 TB = 10k+ dirs) still
-        # exceed it and keep the distributed listing.
+        # bounded-fanout bucket layouts sit above the default 32-path
+        # threshold: the postings index's 64 `tb=` term-bucket dirs (q114,
+        # streaming/postings_ingest), the cell-partitioned IVF/PQ indexes
+        # (q64/q96, streaming/vector_ingest) once a codebook has more than
+        # 32 cells, and the streamed `batch=`/`bid=` segment dirs between
+        # compactions.  Past 32, every probe pays a Spark JOB to list
+        # directories the driver lists in milliseconds: q114 over a
+        # postings index with all 64 buckets filled ran 12 jobs / 88 tasks
+        # at 32 against 11 jobs / 24 tasks at 1024, +0.3-0.6 s per probe
+        # (local[4]).  1024 covers every by-design bucket alphabet in this
+        # engine; genuinely large partitioned tables (dates x regions at
+        # 100 TB = 10k+ dirs) still exceed it and keep the distributed
+        # listing.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big Arrow batches amortize Python UDF overhead on 30k-sample traces

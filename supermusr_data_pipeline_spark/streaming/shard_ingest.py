@@ -19,9 +19,10 @@ document enter the corpus" against the full standing index.
 Failure semantics: foreachBatch may re-run a batch after a crash, so the
 append must be idempotent — and it is the APPEND itself that is
 idempotent, not a marker protocol around it: each micro-batch's admitted
-rows land as their own ``bid=<batch_id>`` segment partitions (inside the
-existing tb / band_no buckets) via dynamic partition overwrite, so a
-re-run REPLACES its segment wholesale.  The decision recompute excludes
+rows land as their own ``bid=<batch_id>`` segment partitions (the
+``tokens/bid=<batch_id>/`` directory and one leaf inside each band_no
+bucket) via dynamic partition overwrite, so a re-run REPLACES its
+segment wholesale.  The decision recompute excludes
 exactly its own segment (``bid != batch_id`` — a partition filter), so
 it sees the index as the first attempt did and recomputes byte-identical
 decisions; a crash between the tokens and bands writes just leaves a
@@ -42,22 +43,22 @@ equi-join against bucket-truncated index bands (cap mirrors
 _LSH_BUCKET_CAP — a boilerplate bucket's representative is always inside
 the truncation, so template families still block admission), one
 batch-internal self-join bounded the same way, and an append of the
-admitted slice.  The verification-token artifact is tb=hash(doc_id)
-bucketed, so both token probes (candidate verification + redelivery
-presence) carry literal partition filters and read only the touched
-directories.  Nothing scans the base corpus.
+admitted slice.  Every verification-token file is sorted by its stored
+``tb`` = hash(doc_id) % 256 column, so both token probes (candidate
+verification + redelivery presence) carry a literal ``tb IN (...)``
+filter pushed into the Parquet scan, which skips row groups and pages
+whose min/max statistics miss the touched buckets.  Nothing scans the
+base corpus.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..plans.incremental import _tok_bucket
-from ..plans.index_maintenance import resolve_dir
+from ..materialize import materialize, materialize_scope
+from ..plans.incremental import _tok_bucket, read_index_artifact, write_segment
 from ..plans.text_dedup import (
     _LSH_BUCKET_CAP,
     _TOKENS_EXPR_SPARK,
@@ -88,6 +89,7 @@ def admit_batch(
     index_path: str,
     bucket_cap: int = _LSH_BUCKET_CAP,
     exclude_bid: int | None = None,
+    held: list | None = None,
 ) -> DataFrame:
     """Admission decisions for one micro-batch against the standing index:
     (doc_id, already_ingested, dups_base, dups_earlier_peer, admit,
@@ -104,28 +106,29 @@ def admit_batch(
     else found in the index under a batch doc_id was ingested by an
     EARLIER batch (an at-least-once source redelivering), and
     short-circuits to ``already_ingested`` / admit=false instead of
-    re-admitting a duplicate index row."""
+    re-admitting a duplicate index row.
+
+    ``held``, when given, receives the intermediate frames this call
+    materializes, for the caller to ``unpersist()`` once the decisions
+    are no longer read."""
     spark = batch_docs.sparkSession
     tokens, bands = _batch_artifacts(batch_docs)
     batch_ids = batch_docs.select("doc_id").distinct()
-    # resolve through the _CURRENT pointer: after a compaction the live
+    # resolved through the _CURRENT pointer: after a compaction the live
     # data lives in a hidden version subdir (plans/index_maintenance.py)
-    idx_bands = spark.read.parquet(resolve_dir(os.path.join(index_path, "bands")))
-    idx_tokens_all = spark.read.parquet(resolve_dir(os.path.join(index_path, "tokens")))
+    idx_bands = read_index_artifact(spark, index_path, "bands")
+    idx_tokens_all = read_index_artifact(spark, index_path, "tokens")
     if exclude_bid is not None:
         # own-segment exclusion — a literal partition filter on bid
         idx_bands = idx_bands.filter(F.col("bid") != int(exclude_bid))
         idx_tokens_all = idx_tokens_all.filter(F.col("bid") != int(exclude_bid))
-    idx_bands = idx_bands.select(
-        "doc_id", F.col("band_no").cast("int").alias("band_no"), "key"
-    )
-    # the tokens artifact is tb=hash(doc_id)-bucketed (write_lsh_index):
-    # every read below carries a LITERAL bucket filter derived from the
-    # doc_ids it actually needs, so verification never scans the whole
-    # corpus's token sets — only the touched directories
-    idx_tokens_all = idx_tokens_all.select(
-        "doc_id", "th", F.col("tb").cast("int").alias("tb")
-    )
+    idx_bands = idx_bands.select("doc_id", "band_no", "key")
+    # the tokens files are sorted by their stored tb=hash(doc_id) column
+    # (write_lsh_index): every read below carries a LITERAL bucket filter
+    # derived from the doc_ids it actually needs, pushed into the scan, so
+    # verification never reads the whole corpus's token sets — only the
+    # row groups and pages whose tb statistics hold a touched bucket
+    idx_tokens_all = idx_tokens_all.select("doc_id", "th", "tb")
 
     def _pruned_tokens(ids_df, id_col: str):
         buckets = [
@@ -156,9 +159,9 @@ def admit_batch(
     idx_capped = idx_bands.withColumn("rk", rk).filter(F.col("rk") <= bucket_cap)
 
     # materialize the (bounded: <= batch x bands x cap rows) candidate
-    # pairs once — their old_ids' buckets become the literal partition
-    # filter for the verification-token probe below
-    cand_base = (
+    # pairs once — their old_ids' buckets become the literal tb filter
+    # for the verification-token probe below
+    cand_base = materialize(
         bands.alias("n")
         .join(
             idx_capped.alias("i"),
@@ -169,8 +172,9 @@ def admit_batch(
             F.col("n.doc_id").alias("new_id"), F.col("i.doc_id").alias("old_id")
         )
         .distinct()
-        .localCheckpoint()
     )
+    if held is not None:
+        held.append(cand_base)
     old_tokens = _pruned_tokens(cand_base, "old_id")
     verified_base = (
         cand_base.join(tokens.select(F.col("doc_id").alias("new_id"),
@@ -259,30 +263,15 @@ def admit_batch(
 def _append_admitted(
     batch_docs: DataFrame, admitted: DataFrame, index_path: str, bid: int
 ) -> None:
-    """Append the admitted slice as the ``bid`` segment's partitions.
-    Dynamic partition overwrite makes a crash-retry replace its own
-    (tb, bid) / (band_no, bid) leaf directories instead of appending
-    duplicates — the append IS the idempotency mechanism."""
+    """Append the admitted slice as the ``bid`` segment.  Dynamic
+    partition overwrite makes a crash-retry replace its own
+    ``tokens/bid=<bid>/`` and ``bands/band_no=*/bid=<bid>/`` leaf
+    directories instead of appending duplicates — the append IS the
+    idempotency mechanism."""
     tokens, bands = _batch_artifacts(
         batch_docs.join(admitted.select("doc_id"), "doc_id")
     )
-    (
-        tokens.withColumn("tb", _tok_bucket(F.col("doc_id")))
-        .withColumn("bid", F.lit(int(bid)))
-        .repartition("tb")
-        .write.partitionBy("tb", "bid")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(resolve_dir(os.path.join(index_path, "tokens")))
-    )
-    (
-        bands.withColumn("bid", F.lit(int(bid)))
-        .repartition("band_no")
-        .write.partitionBy("band_no", "bid")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(resolve_dir(os.path.join(index_path, "bands")))
-    )
+    write_segment(tokens, bands, index_path, int(bid), "overwrite", dynamic=True)
 
 
 DOC_JSON_SCHEMA = (
@@ -308,6 +297,55 @@ def docs_from_envelope(df: DataFrame) -> DataFrame:
     )
 
 
+def ingest_shard_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    index_path: str,
+    decisions_path: str,
+    bucket_cap: int = _LSH_BUCKET_CAP,
+    compact_files_threshold: int | None = None,
+) -> None:
+    """One micro-batch of the streaming front door (the foreachBatch body
+    of ``ingest_shard_stream``): decide admissions against the standing
+    index, append the admitted slice as segment ``batch_id``, publish the
+    decisions, and run the maybe_compact hook when a threshold is set."""
+    from ..plans.index_maintenance import maybe_compact
+
+    if batch_df.isEmpty():
+        return
+    # per-batch materializations must not accumulate over the stream's
+    # lifetime (the q42 checkpoint-hygiene rule)
+    with materialize_scope(batch_df.sparkSession.sparkContext) as held:
+        # own-segment exclusion (bid != batch_id) makes the recompute
+        # on a crash-retry byte-identical to the first attempt, and the
+        # segment overwrite below makes the re-append replace rather
+        # than duplicate — no marker files, no ordering window
+        decisions = materialize(
+            admit_batch(
+                batch_df, index_path, bucket_cap, exclude_bid=batch_id, held=held
+            )
+        )
+        held.append(decisions)
+        # append BEFORE publishing decisions: a batch's decisions must not
+        # become visible until the index reflects its admissions (a
+        # stop/crash between the two steps re-runs both; both writes are
+        # partition-overwrite idempotent)
+        _append_admitted(batch_df, decisions.filter("admit"), index_path, batch_id)
+        (
+            decisions.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(decisions_path)
+        )
+        if compact_files_threshold is not None:
+            maybe_compact(
+                batch_df.sparkSession, index_path, "lsh",
+                max_files_per_dir=compact_files_threshold,
+                protect_bid=batch_id,
+            )
+
+
 def ingest_shard_stream(
     docs_stream: DataFrame,
     index_path: str,
@@ -320,54 +358,21 @@ def ingest_shard_stream(
     """Start the streaming front door: per micro-batch, decide admissions
     against the standing index, write decisions (partitioned by batch_id,
     re-run-safe), and append the admitted slice so later batches dedup
-    against it.  Returns the StreamingQuery.
+    against it (``ingest_shard_batch``).  Returns the StreamingQuery.
 
     ``compact_files_threshold`` makes compaction part of the ingest
     contract: after each batch commits its writes, the maybe_compact
     policy hook folds the accumulated segments once any index bucket
-    directory exceeds that many files — protecting the just-written
-    batch's segment so a crash-replay keeps its own-segment exclusion
-    (plans/index_maintenance.maybe_compact).  None (default) leaves
-    compaction to a standalone maintenance job."""
-
-    from ..plans.index_maintenance import maybe_compact
-    from ..plans.text_dedup import _persistent_rdd_ids, _unpersist_rdd_ids
+    exceeds that many files (plans/index_maintenance._max_files_per_dir)
+    — protecting the just-written batch's segment so a crash-replay
+    keeps its own-segment exclusion (plans/index_maintenance.maybe_compact).
+    None (default) leaves compaction to a standalone maintenance job."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sc = batch_df.sparkSession.sparkContext
-        before = _persistent_rdd_ids(sc)
-        try:
-            # own-segment exclusion (bid != batch_id) makes the recompute
-            # on a crash-retry byte-identical to the first attempt, and the
-            # segment overwrite below makes the re-append replace rather
-            # than duplicate — no marker files, no ordering window
-            decisions = admit_batch(
-                batch_df, index_path, bucket_cap, exclude_bid=batch_id
-            ).localCheckpoint()
-            # append BEFORE publishing decisions: a batch's decisions must not
-            # become visible until the index reflects its admissions (a
-            # stop/crash between the two steps re-runs both; both writes are
-            # partition-overwrite idempotent)
-            _append_admitted(batch_df, decisions.filter("admit"), index_path, batch_id)
-            (
-                decisions.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(decisions_path)
-            )
-            if compact_files_threshold is not None:
-                maybe_compact(
-                    batch_df.sparkSession, index_path, "lsh",
-                    max_files_per_dir=compact_files_threshold,
-                    protect_bid=batch_id,
-                )
-        finally:
-            # per-batch checkpoint blocks must not accumulate over the
-            # stream's lifetime (the q42 checkpoint-hygiene rule)
-            _unpersist_rdd_ids(sc, _persistent_rdd_ids(sc) - before)
+        ingest_shard_batch(
+            batch_df, batch_id, index_path, decisions_path, bucket_cap,
+            compact_files_threshold,
+        )
 
     return (
         docs_stream.writeStream.foreachBatch(process)

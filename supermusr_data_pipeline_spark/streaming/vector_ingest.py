@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, materialize_scope
 from ..plans.index_maintenance import resolve_dir
 from ..plans.text_dedup import _SEM_TAU, _codebook, _ivf_dots_spark, _probe_order_spark
 
@@ -241,6 +242,51 @@ def vectors_from_envelope(df: DataFrame) -> DataFrame:
     )
 
 
+def ingest_vector_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    index_path: str,
+    decisions_path: str,
+    cents,
+    tau: float = _SEM_TAU,
+    compact_files_threshold: int | None = None,
+) -> None:
+    """One micro-batch of the vector front door (the foreachBatch body of
+    ``ingest_vector_stream``): assign cells, decide admissions against
+    the standing index, append the admitted slice as segment
+    ``batch_id``, publish the decisions, and run the maybe_compact hook
+    when a threshold is set."""
+    from ..plans.index_maintenance import maybe_compact
+
+    if batch_df.isEmpty():
+        return
+    # per-batch materializations must not accumulate over the stream's
+    # lifetime (the q42 checkpoint-hygiene rule applied here)
+    with materialize_scope(batch_df.sparkSession.sparkContext) as held:
+        assigned = materialize(assign_cells(batch_df, cents))
+        held.append(assigned)
+        # own-segment exclusion + segment overwrite = idempotent retry
+        # with byte-identical decisions (see module docstring)
+        decisions = materialize(
+            _admit_assigned(assigned, index_path, tau, exclude_bid=batch_id)
+        )
+        held.append(decisions)
+        _append_assigned(assigned, decisions.filter("admit"), index_path, batch_id)
+        (
+            decisions.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(decisions_path)
+        )
+        if compact_files_threshold is not None:
+            maybe_compact(
+                batch_df.sparkSession, index_path, "vector",
+                max_files_per_dir=compact_files_threshold,
+                protect_bid=batch_id,
+            )
+
+
 def ingest_vector_stream(
     vecs_stream: DataFrame,
     index_path: str,
@@ -258,41 +304,12 @@ def ingest_vector_stream(
     maybe_compact hook (see ingest_shard_stream)."""
     if cents is None:
         cents = _codebook("")[0]
-    from ..plans.index_maintenance import maybe_compact
-    from ..plans.text_dedup import _persistent_rdd_ids, _unpersist_rdd_ids
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sc = batch_df.sparkSession.sparkContext
-        before = _persistent_rdd_ids(sc)
-        try:
-            assigned = assign_cells(batch_df, cents).localCheckpoint()
-            # own-segment exclusion + segment overwrite = idempotent retry
-            # with byte-identical decisions (see module docstring)
-            decisions = _admit_assigned(
-                assigned, index_path, tau, exclude_bid=batch_id
-            ).localCheckpoint()
-            _append_assigned(
-                assigned, decisions.filter("admit"), index_path, batch_id
-            )
-            (
-                decisions.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(decisions_path)
-            )
-            if compact_files_threshold is not None:
-                maybe_compact(
-                    batch_df.sparkSession, index_path, "vector",
-                    max_files_per_dir=compact_files_threshold,
-                    protect_bid=batch_id,
-                )
-        finally:
-            # per-batch checkpoints must not accumulate over the stream's
-            # lifetime (the q42 checkpoint-hygiene rule applied here)
-            _unpersist_rdd_ids(sc, _persistent_rdd_ids(sc) - before)
+        ingest_vector_batch(
+            batch_df, batch_id, index_path, decisions_path, cents, tau,
+            compact_files_threshold,
+        )
 
     return (
         vecs_stream.writeStream.foreachBatch(process)

@@ -4,6 +4,7 @@ executor loss recomputes instead of failing (VERDICT r14 #2)."""
 
 import pytest
 from pyspark import StorageLevel
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from supermusr_data_pipeline_spark import materialize as mat
@@ -99,3 +100,90 @@ def test_shared_checkpoint_cluster_branch_released_by_clear(spark, monkeypatch):
     finally:
         out.unpersist()
         text_dedup.clear_shared_cache()
+
+
+# ---------------------------------------------------------------------------
+# the streaming ingest doors materialize through materialize() and release
+# what they materialized at the end of every micro-batch, on both branches
+# ---------------------------------------------------------------------------
+
+DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
+
+
+def _branch(monkeypatch, cluster: bool) -> list:
+    """Route materialize() to the requested branch; returns the list of
+    masters it was asked about (one entry per materialize() call)."""
+    calls: list = []
+    real = mat._local_master
+    monkeypatch.setattr(
+        mat, "_local_master", lambda m: calls.append(m) or (real(m) and not cluster)
+    )
+    return calls
+
+
+def _assert_released(spark, before):
+    from supermusr_data_pipeline_spark.plans.text_dedup import _persistent_rdd_ids
+
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not (_persistent_rdd_ids(spark.sparkContext) - before)
+
+
+@pytest.mark.parametrize("cluster", [False, True])
+def test_shard_ingest_batch_releases_materializations(spark, tmp_path, monkeypatch, cluster):
+    from supermusr_data_pipeline_spark.plans import incremental
+    from supermusr_data_pipeline_spark.plans.text_dedup import _persistent_rdd_ids
+    from supermusr_data_pipeline_spark.sources.testdata import load_table
+    from supermusr_data_pipeline_spark.streaming import shard_ingest
+
+    idx = str(tmp_path / "idx")
+    incremental.write_lsh_index(spark, SF_DIR, idx)
+    base = (
+        load_table(spark, SF_DIR, "documents")
+        .filter("doc_id % 10 != 7 AND length(text) > 40")
+        .orderBy("doc_id").first()
+    )
+    fresh = "unique text about parquet footers and row group statistics here"
+    batch = spark.createDataFrame(
+        [(10**9, base.text, "en", "s1", len(base.text)),
+         (10**9 + 1, fresh, "en", "s1", len(fresh))],
+        DOC_SCHEMA,
+    )
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark.sparkContext)
+    calls = _branch(monkeypatch, cluster)
+    dec = str(tmp_path / "decisions")
+    shard_ingest.ingest_shard_batch(batch, 0, idx, dec)
+    assert len(calls) == 2  # the candidate pairs and the decisions
+    _assert_released(spark, before)
+    got = {r.doc_id: r.reason for r in spark.read.parquet(dec).collect()}
+    assert got == {10**9: "near_dup_of_base", 10**9 + 1: "admitted"}
+
+
+@pytest.mark.parametrize("cluster", [False, True])
+def test_vector_ingest_batch_releases_materializations(spark, tmp_path, monkeypatch, cluster):
+    import numpy as np
+
+    from supermusr_data_pipeline_spark.plans.text_dedup import (
+        _codebook,
+        _persistent_rdd_ids,
+    )
+    from supermusr_data_pipeline_spark.streaming import vector_ingest
+
+    cents = _codebook("")[0]
+    rng = np.random.default_rng(5)
+    vschema = "vec_id bigint, embedding array<double>"
+    base = [(i, rng.normal(size=64).tolist()) for i in range(1, 4)]
+    idx = str(tmp_path / "vidx")
+    vector_ingest.write_vector_index(spark.createDataFrame(base, vschema), idx, cents)
+    batch = spark.createDataFrame(
+        [(100, base[0][1]), (101, rng.normal(size=64).tolist())], vschema
+    )
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark.sparkContext)
+    calls = _branch(monkeypatch, cluster)
+    dec = str(tmp_path / "decisions")
+    vector_ingest.ingest_vector_batch(batch, 0, idx, dec, cents)
+    assert len(calls) == 2  # the cell assignment and the decisions
+    _assert_released(spark, before)
+    got = {r.vec_id: r.admit for r in spark.read.parquet(dec).collect()}
+    assert got == {100: False, 101: True}

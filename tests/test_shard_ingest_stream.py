@@ -117,33 +117,35 @@ def test_append_is_rerun_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{idx}/tokens").filter("doc_id = 41").count() == 1
 
 
-def test_partial_append_heals_on_retry(spark, tmp_path):
+def test_partial_append_heals_on_retry(spark, tmp_path, monkeypatch):
     """ADVICE r7: a crash BETWEEN the tokens append and the bands append
     must not leave a doc permanently invisible to LSH candidate
     generation.  Simulate the half-segment (tokens written, bands not)
     and re-run the whole batch: the doc must end up in BOTH artifacts
     exactly once, and its decision must still be 'admitted'."""
-    import os
-
-    from pyspark.sql import functions as F
-
+    from supermusr_data_pipeline_spark.plans import incremental, index_maintenance
     from supermusr_data_pipeline_spark.streaming import shard_ingest
-    from supermusr_data_pipeline_spark.plans.incremental import _tok_bucket
 
     idx = _mk_index(spark, tmp_path)
     batch = spark.createDataFrame(
         [(61, NEW_TEXT, "en", "s1", len(NEW_TEXT))], SCHEMA
     )
-    # first attempt: tokens landed, crash before bands
-    tokens, _bands = shard_ingest._batch_artifacts(batch)
-    (
-        tokens.withColumn("tb", _tok_bucket(F.col("doc_id")))
-        .withColumn("bid", F.lit(3))
-        .write.partitionBy("tb", "bid")
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(os.path.join(idx, "tokens"))
-    )
+    # first attempt: tokens landed, crash before bands — the segment
+    # writer itself, stopped right after its tokens write (the layout
+    # marker is the step between the two writes)
+    tokens, bands = shard_ingest._batch_artifacts(batch)
+    real_write_layout = index_maintenance.write_layout
+
+    def crash_after_tokens(path, layout):
+        real_write_layout(path, layout)
+        raise RuntimeError("injected crash: before bands")
+
+    monkeypatch.setattr(index_maintenance, "write_layout", crash_after_tokens)
+    with pytest.raises(RuntimeError, match="before bands"):
+        incremental.write_segment(tokens, bands, idx, 3, "overwrite", dynamic=True)
+    monkeypatch.undo()
+    assert spark.read.parquet(f"{idx}/tokens").filter("doc_id = 61").count() == 1
+    assert spark.read.parquet(f"{idx}/bands").filter("doc_id = 61").count() == 0
     # retry of batch 3: own-segment exclusion hides the half-append, so
     # the decision recomputes as a fresh admit, and the segment overwrite
     # completes both artifacts

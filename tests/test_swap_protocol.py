@@ -86,24 +86,27 @@ def test_crash_after_flip_serves_new_state_and_gc_later(spark, tmp_path):
     before = _probe_decisions(spark, idx)
 
     with pytest.raises(RuntimeError, match="after_flip"):
-        im._compact_segmented(spark, tokens, "tb", _fail_at="after_flip")
+        im._compact_segmented(
+            spark, tokens, "tb", sorted_by_key=True, _fail_at="after_flip"
+        )
     # pointer flipped: readers already resolve the compacted copy; the
-    # stale plain partition dirs are inert garbage awaiting GC (the
+    # stale plain segment dirs are inert garbage awaiting GC (the
     # crash lost the _RETIRED marker — the next publish's catch-all
     # collects them anyway)
     assert im._read_pointer(tokens) == ".v1"
     assert _probe_decisions(spark, idx) == before
-    assert any(n.startswith("tb=") for n in os.listdir(tokens))
+    assert any(n.startswith("bid=") for n in os.listdir(tokens))
 
     # the next maintenance run collects the stranded garbage, publishes
-    # .v2, and tombstones .v1; phase 2 then collects .v1
-    im._compact_segmented(spark, tokens, "tb")
+    # .v2, and tombstones .v1; phase 2 then collects .v1.  The layout
+    # marker lives next to the pointer and survives every GC.
+    im._compact_segmented(spark, tokens, "tb", sorted_by_key=True)
     assert im._read_pointer(tokens) == ".v2"
     assert _probe_decisions(spark, idx) == before
-    assert not any(n.startswith("tb=") for n in os.listdir(tokens))
+    assert not any(n.startswith("bid=") for n in os.listdir(tokens))
     assert ".v1" in os.listdir(tokens)  # tombstoned, one cycle of grace
     im.gc_retired(tokens)
-    assert set(os.listdir(tokens)) == {im._POINTER, ".v2"}
+    assert set(os.listdir(tokens)) == {im._POINTER, im._LAYOUT, ".v2"}
 
 
 def test_repeated_compaction_and_post_compaction_appends(spark, tmp_path):
@@ -123,9 +126,9 @@ def test_repeated_compaction_and_post_compaction_appends(spark, tmp_path):
     d = shard_ingest.admit_batch(batch, idx, exclude_bid=9)
     assert d.collect()[0].admit
     shard_ingest._append_admitted(batch, d.filter("admit"), idx, bid=9)
-    # the append went into .v1, not a new plain partition dir at the root
+    # the append went into .v1, not a new plain segment dir at the root
     assert not any(
-        n.startswith(("tb=", "band_no=")) for n in os.listdir(os.path.join(idx, "tokens"))
+        n.startswith("bid=") for n in os.listdir(os.path.join(idx, "tokens"))
     )
     redel = spark.createDataFrame([_fresh(300)], SCHEMA)
     d2 = shard_ingest.admit_batch(redel, idx, exclude_bid=10).collect()[0]
