@@ -494,7 +494,10 @@ def _run_fetchloop_shape(base: str, n_digitisers: int, n_frames: int) -> dict:
     # decode / part staging / intent / publish, plus the poll-vs-process
     # duty from the per-cycle log — the attribution that turned the
     # 64x500 gap from "unexplained 0.35 s work vs 1.2 s latency" into
-    # "intent double-write + python-list column build", both since fixed
+    # "intent double-write + python-list column build", both since fixed.
+    # The door's commit point is now its one write-once commit record,
+    # so commit_intent_p50_s (the commit_log's intent_s) times the record
+    # write; the key names are kept for comparison with earlier runs.
     def _p50_of(key):
         vals = sorted(
             c[key] for c in commit_log[mid:] if key in c

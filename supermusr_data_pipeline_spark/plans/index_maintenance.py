@@ -129,7 +129,11 @@ def read_layout(path: str) -> str | None:
 
 
 def write_layout(path: str, layout: str) -> None:
-    """Record ``layout`` for artifact ``path`` (one atomic replace)."""
+    """Record ``layout`` for artifact ``path`` (one atomic replace), unless
+    it is recorded already: every segment write calls this, and replacing
+    an existing file costs a forced flush of the new one on ext4."""
+    if read_layout(path) == layout:
+        return
     p = os.path.join(path, _LAYOUT)
     tmp = p + ".tmp"
     with open(tmp, "w") as f:

@@ -259,6 +259,31 @@ import tempfile as _tempfile
 _N_TERM_BUCKETS = 64
 _POSTINGS_BUILT: dict = {}
 
+# the postings index's stored schemas, partition columns last: a read that
+# names them skips the one-task schema-inference job every parquet read
+# otherwise runs (incremental.read_index_artifact's rule)
+_POSTINGS_SCHEMAS = {
+    "terms": "term string, df bigint, tb int",
+    "postings": "doc_id bigint, term string, tf bigint, tb int",
+    "doclen": "doc_id bigint, dl bigint",
+    "stats": "n bigint, avgdl double",
+}
+
+
+def read_postings_artifact(
+    spark: SparkSession, index_path: str, artifact: str,
+    schemas: dict = _POSTINGS_SCHEMAS,
+) -> DataFrame:
+    """Scan ``artifact`` of a postings index at ``index_path`` (resolved
+    through its _CURRENT pointer when it has one) with its stored schema
+    from ``schemas`` — q114's index by default; the streaming segment
+    index (streaming/postings_ingest.py) passes its own."""
+    from .index_maintenance import resolve_dir
+
+    return spark.read.schema(schemas[artifact]).parquet(
+        resolve_dir(_os.path.join(index_path, artifact))
+    )
+
 
 def postings_index_path(sf_dir: str, app_id: str = "") -> str:
     """Where the postings artifact lives.  The path is keyed by BOTH the
@@ -301,7 +326,7 @@ def write_postings_index(spark: SparkSession, sf_dir: str, out: str) -> None:
     (
         docs.select(F.count(F.lit(1)).alias("n"))
         .crossJoin(
-            spark.read.parquet(_os.path.join(out, "doclen"))
+            read_postings_artifact(spark, out, "doclen")
             .agg(F.avg("dl").alias("avgdl"))
         )
         .write.mode("overwrite")
@@ -322,7 +347,7 @@ def q114_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_postings_index(spark, sf_dir, path)
         _POSTINGS_BUILT[key] = True
 
-    terms = spark.read.parquet(_os.path.join(path, "terms"))
+    terms = read_postings_artifact(spark, path, "terms")
     qrows = (
         terms.orderBy(F.asc("df"), "term").limit(_BM25_N_QUERIES).collect()
     )
@@ -346,12 +371,12 @@ def q114_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("q")
     ).select("q.query_term", "q.df")
     postings = (
-        spark.read.parquet(_os.path.join(path, "postings"))
+        read_postings_artifact(spark, path, "postings")
         .filter(F.col("tb").isin(buckets))
         .select("term", "doc_id", "tf")
     )
-    dl = spark.read.parquet(_os.path.join(path, "doclen"))
-    stats = spark.read.parquet(_os.path.join(path, "stats"))
+    dl = read_postings_artifact(spark, path, "doclen")
+    stats = read_postings_artifact(spark, path, "stats")
     idf = F.log(
         F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )

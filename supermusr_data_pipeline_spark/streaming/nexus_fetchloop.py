@@ -40,8 +40,9 @@ with the FSM door (streaming/nexus_stream.py):
   int64 columns (the event columns are high-cardinality, so a
   dictionary only costs write time); Spark, DuckDB and pyarrow read
   them like any other Parquet;
-* crash safety by a WRITE-AHEAD INTENT written tmp+rename (one small
-  file — S3-PUT-portable); this door keeps a state sidecar beside it.
+* crash safety by a write-ahead commit point written tmp+rename (one
+  small file — S3-PUT-portable); in this door that file is also the
+  resume state.
 
 What changes: decode (``dev2_arrow_batch``, the same vectorized
 whole-column walker the wire source fuses), assembly bookkeeping, and
@@ -54,7 +55,7 @@ tables are built with one gather or repeat per column.
 
 Two threads share the work.  The loop thread polls, decodes, runs the
 FSM, picks each dispatch and builds its run tables; the commit TAIL of
-a dispatch of SEVERAL frames (stage -> intent -> publish -> state ->
+a dispatch of SEVERAL frames (stage -> record -> publish -> unlink ->
 ``on_commit``) runs on one committer thread while the loop thread makes
 its next poll and decodes it — several frames in one dispatch mean
 records queued while the loop worked, so that poll has data to read.
@@ -62,18 +63,19 @@ A one-frame dispatch (a loop keeping pace, e.g. 50 frames/s) commits
 inline: its next poll would only wait, and a hand-off would add a
 thread wake-up to every frame's latency.  Only ONE tail is ever in
 flight: the loop waits for it before touching the FSM, cursor or
-totals, so the intent and state files hold exactly what a single
-thread would have written and every crash point below is unchanged.
+totals, so the commit records hold exactly what a single thread
+would have written and every crash point below is unchanged.
 ``poll_once()`` (tests, crash fixtures) runs the tail inline and
 returns after it.
 
-The INTENT here is strictly STRONGER than the FSM door's (bid +
-pre-batch totals): it carries the tmp->final RENAME LIST of part files
-already staged on disk, so recovery can FINISH a half-landed multi-run
-append idempotently per-run (atomic renames) instead of only deciding
-landed/not-landed wholesale — and the event table is written exactly
-ONCE per commit (the earlier intent_rows.parquet sidecar wrote it
-twice, and was the dominant commit term at 2x the bar shape).
+The commit RECORD here is strictly STRONGER than the FSM door's
+intent (bid + pre-batch totals): it carries the tmp->final RENAME LIST
+of part files already staged on disk, so recovery can FINISH a
+half-landed multi-run append idempotently per-run (atomic renames)
+instead of only deciding landed/not-landed wholesale — and the event
+table is written exactly ONCE per commit (the earlier
+intent_rows.parquet sidecar wrote it twice, and was the dominant
+commit term at 2x the bar shape).
 
 Exactly-once protocol (the FSM door's "engine replay" is replaced by
 a HELD-BACK OFFSET CURSOR — the consumer-group rule of committing only
@@ -83,19 +85,24 @@ fully-processed positions):
 2. on dispatch: stage each run's rows as a DOT-prefixed tmp part file
    inside its run directory (invisible to Spark's listing and to
    ``*.parquet`` globs);
-3. write ``intent.json`` = {persisted offsets, pre-batch totals,
-   per-run (frames, rows) deltas, dispatched frame keys, the rename
-   list} (tmp+rename — the commit point);
-4. PUBLISH: ``os.replace`` each tmp to its final part name (atomic);
-5. persist ``state.json`` (offsets, totals, tombstones) and delete the
-   intent.
+3. write the dispatch's commit RECORD ``commit-<seq>.json`` in the
+   state dir = {persisted offsets, post-commit totals, tombstones (the
+   dispatched frames' among them), the rename list}, as a tmp renamed
+   to its fresh, numbered name — the commit point AND the resume state;
+4. PUBLISH: rename each tmp to its final part name (atomic);
+5. unlink the previous record.
 
-A crash before 3 leaves only invisible tmps (swept on recovery) and an
-unadvanced persisted cursor — the records replay and the frames
-re-assemble, correctly, because they never landed.  A crash after 3
-recovers by re-running 4 idempotently (a final that exists already
-published; a surviving tmp renames now), re-arming the dispatched
-frames' tombstones, and adopting the intent's offsets/totals.
+A crash before 3 leaves only invisible tmps (swept on recovery) and the
+previous record, whose cursor has not advanced — the records replay and
+the frames re-assemble, correctly, because they never landed.  Recovery
+resumes from the NEWEST record: it re-runs 4 idempotently (a final that
+exists already published; a surviving tmp renames now), re-arms the
+record's tombstones, adopts its offsets and totals, and unlinks every
+older record.  A record is written once and never changed, so a torn
+write is only ever a tmp, which recovery ignores.  A ``state.json`` /
+``intent.json`` pair left by the earlier two-file layout is read once
+by the same recovery (the intent as the newest record, its totals
+re-derived from the sink after its renames) and replaced by a record.
 
 The PERSISTED cursor is held back to the pre-poll position of the
 OLDEST still-pending frame (each frame snapshots the cursor at its
@@ -107,21 +114,27 @@ rejected by the persisted tombstones (re-armed to a fresh TTL on
 load); the replay window is bounded by the frame TTL of tape, and the
 constructor DERIVES the tombstone TTL past it (frame TTL + poll slack)
 so no configuration can prune a tombstone while its records are still
-replayable.  Recovery of a surviving intent finishes the publish step
-idempotently from the rename list, then offsets/totals adopt the
-intent's values — so the sink append is exactly-once across crashes at
-EVERY step.
+replayable.  Recovery finishes the newest record's publish step
+idempotently from its rename list, then adopts its offsets and totals
+— so the sink append is exactly-once across crashes at EVERY step.
 
 Durability scope: "crash" above means PROCESS crash (kill -9, OOM,
 exception), which is what every test in the suite simulates — the
 default mode issues no fsync, so an OS-level power cut can reorder a
 rename ahead of its data and surface a truncated file at a final name.
-``durability="power"`` closes that: fsync the staged part and intent
-tmp files before their renames and the parent directories after, at
-the cost of a few ms of commit latency per dispatch (still far inside
-the 1 s budget; the default stays fsync-free because the soaks measure
-the reference's own posture — a plain consumer process whose broker,
-not filesystem, is the source of truth for replay).
+The default mode also never renames over, or truncates, an existing
+file on the commit path (records and parts get fresh names; the older
+record is unlinked): on ext4 (``auto_da_alloc``, on by default)
+replacing an existing file forces the new file's data to disk first,
+an implicit flush that cost 45-60 ms per commit on a 4-vCPU VM when the
+resume state was one file replaced every dispatch.
+``durability="power"`` closes the power-cut gap: fsync the staged
+parts and the record tmp before their renames and the parent
+directories after, at the cost of a few ms of commit latency per
+dispatch (still far inside the 1 s budget; the default stays
+fsync-free because the soaks measure the reference's own posture — a
+plain consumer process whose broker, not filesystem, is the source of
+truth for replay).
 
 Scale posture (100 TB honesty): this door is the real-time WRITER for
 one instrument stream — the reference's own deployment shape (one
@@ -184,6 +197,10 @@ _PART_WRITE_OPTIONS = dict(
         if f.type == pa.int64()
     },
 )
+
+
+# one commit record per dispatch, numbered, written once (see _save_state)
+_RECORD = "commit-%012d.json"
 
 
 def _flat_lists(batches: list[pa.RecordBatch], name: str):
@@ -329,13 +346,22 @@ class FetchLoopNexusWriter:
         self.commit_log: list[dict] = []  # per-append timing observability
         self.poll_log: list[dict] = []  # per-cycle poll/process split
         self._file_seq = 0  # monotone per-writer part index (debuggability)
+        self._seq = 0  # the newest commit record's number (0: none yet)
 
-    # ---- sidecar paths ----
-    def _state_file(self) -> str:
-        return os.path.join(self.state_dir, "state.json")
+    # ---- commit records ----
+    def _record_file(self, seq: int) -> str:
+        return os.path.join(self.state_dir, _RECORD % seq)
 
-    def _intent_file(self) -> str:
-        return os.path.join(self.state_dir, "intent.json")
+    def _record_seqs(self) -> list[int]:
+        """The numbers of the commit records on disk, ascending (a
+        record's dot-prefixed tmp is not a record)."""
+        if not os.path.isdir(self.state_dir):
+            return []
+        return sorted(
+            int(n[7:-5]) for n in os.listdir(self.state_dir)
+            if n.startswith("commit-") and n.endswith(".json")
+            and n[7:-5].isdigit()
+        )
 
     # ---- totals derivation (recovery fallback; pyarrow, no Spark) ----
     def _totals_from_sink(self) -> dict[str, tuple[int, int]]:
@@ -376,42 +402,97 @@ class FetchLoopNexusWriter:
                 out[k] = min(out.get(k, v), v)
         return out
 
-    def _save_state(self) -> None:
-        os.makedirs(self.state_dir, exist_ok=True)
-        tmp = self._state_file() + ".tmp"
+    def _save_state(self, per_run=None, renames=()) -> None:
+        """Write the next commit record: the persisted cursor, the totals
+        with ``per_run`` (the dispatch's post-commit run totals) applied,
+        the tombstones and the dispatch's rename list.  The record is the
+        commit point and the resume state in one write: a tmp renamed to
+        a FRESH numbered name, so nothing is renamed over an existing
+        file (on ext4 that forces the new file's data out first).  The
+        caller unlinks the previous record once the publish is done.
+        Power mode fsyncs the tmp before its rename and the state dir
+        after."""
+        totals = {**self._totals, **(per_run or {})}
+        seq = self._seq + 1
+        final = self._record_file(seq)
+        tmp = os.path.join(self.state_dir, "." + _RECORD % seq + ".tmp")
         with open(tmp, "w") as fh:
-            json.dump(
+            # dumps, not dump: only the one-shot encoder is the C one
+            fh.write(json.dumps(
                 {
                     "offsets": self._persist_offsets(),
-                    "totals": {k: list(v) for k, v in self._totals.items()},
+                    "totals": {k: list(v) for k, v in totals.items()},
                     "tombstones": [
                         [list(k), e] for k, e in self._tombstones.items()
                     ],
-                },
-                fh,
-            )
+                    "renames": list(renames),
+                }
+            ))
             if self._fsync:
                 fh.flush()
                 os.fsync(fh.fileno())
-        os.replace(tmp, self._state_file())
+        os.rename(tmp, final)
         if self._fsync:
             _fsync_path(self.state_dir)
             self._ensure_state_dir_durable()
+        self._seq = seq
+        self._totals = totals
+
+    def _drop_record(self, seq: int) -> None:
+        """Unlink a superseded commit record (0: there was none)."""
+        if seq:
+            os.remove(self._record_file(seq))
 
     def _ensure_state_dir_durable(self) -> None:
         """Power mode: the state dir's own DIRECTORY ENTRY must be
-        durable once, or a power cut after the very first state write
-        can lose state.json entirely (cursor regresses to the starting
-        policy, persisted tombstones vanish).  Covers a custom
-        ``state_dir`` outside ``self.path`` too."""
+        durable once, or a power cut after the very first record write
+        can lose every record (cursor regresses to the starting policy,
+        persisted tombstones vanish).  Covers a custom ``state_dir``
+        outside ``self.path`` too."""
         if self.state_dir not in self._durable_dirs:
             _fsync_path(os.path.dirname(self.state_dir) or ".")
             self._durable_dirs.add(self.state_dir)
 
+    def _read_json(self, name: str):
+        """A state-dir JSON file, or None when it does not exist."""
+        path = os.path.join(self.state_dir, name)
+        if not os.path.isfile(path):
+            return None
+        with open(path) as fh:
+            return json.load(fh)
+
+    def _legacy_record(self):
+        """The earlier two-file layout as a record: ``state.json``
+        (offsets, totals, tombstones) with a surviving ``intent.json``
+        laid over it as the newest, in-doubt commit.  The intent held
+        per-run deltas, not totals, so its totals are left to the sink
+        (``None``), read once its renames have landed.  Returns
+        (record or None, in doubt)."""
+        state = self._read_json("state.json")
+        intent = self._read_json("intent.json")
+        if state is None and intent is None:
+            return None, False
+        rec = dict(state or {"offsets": {}, "totals": None}, renames=[])
+        rec.setdefault("tombstones", [])
+        if intent is not None:
+            rec.update(
+                offsets=intent["offsets"], totals=None,
+                renames=intent["renames"],
+            )
+            rec["tombstones"] += [[k, 0] for k in intent["frame_keys"]]
+        return rec, intent is not None
+
     def _load_state(self) -> None:
-        """Resume: state.json -> offsets/totals/tombstones; a surviving
-        intent is FINISHED per run (append the missing runs' slices from
-        the intent table), then its post-offsets/totals adopted.
+        """Resume from the newest commit record: finish its publish
+        (renames are idempotent), adopt its offsets and totals, re-arm
+        its tombstones, then unlink every older record and stray tmp.
+        While an older record is still on disk the newest one's publish
+        may have been cut off, so a rename pair with neither file is
+        corruption; with the newest alone its publish finished, and a
+        missing part was moved since (run retirement, compaction).  No
+        record: a ``state.json``/``intent.json`` pair of the earlier
+        layout goes through the same recovery and is replaced by a
+        record; nothing at all: totals from the sink.
         Pending (undispatched) frames are deliberately NOT persisted:
         their records sit at offsets >= the cursor, so the resumed loop
         re-fetches and re-assembles them — the replay-is-cheaper-than-
@@ -419,58 +500,44 @@ class FetchLoopNexusWriter:
         memory too)."""
         if self._loaded:
             return
-        if os.path.isfile(self._state_file()):
-            with open(self._state_file()) as fh:
-                st = json.load(fh)
-            self._offsets = {k: int(v) for k, v in st["offsets"].items()}
-            self._totals = {
-                k: (int(a), int(b)) for k, (a, b) in st["totals"].items()
-            }
+        seqs = self._record_seqs()
+        if seqs:
+            self._seq = seqs[-1]
+            rec = self._read_json(_RECORD % seqs[-1])
+            in_doubt = len(seqs) > 1
+        else:
+            rec, in_doubt = self._legacy_record()
+        if rec is not None:
+            self._publish_renames(rec["renames"], in_doubt)
+            self._offsets = {k: int(v) for k, v in rec["offsets"].items()}
             # re-arm every persisted tombstone to a FRESH TTL: the
             # held-back cursor replays up to ~frame-TTL of tape, and
             # those records' dispatched frames must still reject
             now_ms = int(self.clock() * 1000)
             self._tombstones = {
                 tuple(k): now_ms + self.tombstone_ttl_ms
-                for k, _e in st.get("tombstones", [])
+                for k, _e in rec["tombstones"]
             }
-        else:
+        if rec is None or rec["totals"] is None:
             self._totals = self._totals_from_sink()
-        if os.path.isfile(self._intent_file()):
-            with open(self._intent_file()) as fh:
-                intent = json.load(fh)
-            # finish the publish idempotently: a final that exists
-            # already landed before the crash; a surviving tmp renames
-            # now (atomic os.replace — this is the only writer of these
-            # names, uuid-unique per dispatch)
-            self._publish_renames(intent.get("renames", []))
-            # re-arm the dispatched frames' tombstones: the adopted
-            # cursor below is held back to any crash-time pending
-            # frame's floor, so the loop will replay this dispatch's
-            # records — they must reject, not re-assemble (exactly-once)
-            now_ms = int(self.clock() * 1000)
-            for k in intent.get("frame_keys", []):
-                self._tombstones[tuple(k)] = now_ms + self.tombstone_ttl_ms
-            self._offsets = {
-                k: int(v) for k, v in intent["offsets"].items()
+        else:
+            self._totals = {
+                k: (int(a), int(b)) for k, (a, b) in rec["totals"].items()
             }
-            self._totals.update(
-                {
-                    run: (pre[0] + intent["deltas"][run][0],
-                          pre[1] + intent["deltas"][run][1])
-                    for run, pre in (
-                        (r, intent["pre_totals"][r])
-                        for r in intent["pre_totals"]
-                    )
-                }
-            )
-            self._save_state()
-            os.remove(self._intent_file())
-        # sweep staged-part orphans from a crash BEFORE the intent was
+        os.makedirs(self.state_dir, exist_ok=True)
+        if rec is not None and not seqs:
+            self._save_state()  # the earlier layout becomes a record
+        keep = _RECORD % self._seq
+        for name in os.listdir(self.state_dir):
+            if name != keep and name.startswith(
+                ("commit-", ".commit-", "state.json", "intent.json")
+            ):
+                os.remove(os.path.join(self.state_dir, name))
+        # sweep staged-part orphans from a crash BEFORE the record was
         # written (the dispatch never committed — its records replay
         # from the unadvanced cursor): the dot-prefixed tmp names are
         # invisible to readers but would otherwise accumulate forever.
-        # Runs after intent recovery, which consumes its own tmps.
+        # Runs after the record's publish, which consumes its own tmps.
         if os.path.isdir(self.path):
             for name in os.listdir(self.path):
                 if not name.startswith("run_name="):
@@ -691,8 +758,8 @@ class FetchLoopNexusWriter:
         dims, per_run, frames = self._match_runs(dispatch)
         run_tables = self._build_run_tables(dims) if dims else {}
         return frames, partial(
-            self._commit, dispatch, run_tables, per_run, frames, t_poll,
-            decode_s, t_decode,
+            self._commit, run_tables, per_run, frames, t_poll, decode_s,
+            t_decode,
         )
 
     def _admit_aev2(self, rb: pa.RecordBatch, now_ms: int, floor_map) -> None:
@@ -897,34 +964,6 @@ class FetchLoopNexusWriter:
             schema=_EVENT_SCHEMA,
         )
 
-    def _write_run_tmp(self, run_name: str, table: pa.Table) -> list[str]:
-        """Stage one run's rows as a hidden tmp part file; returns the
-        ``[tmp, final]`` pair for the intent's rename list.  The final
-        name is uuid-suffixed like Spark's own part files: a
-        directory-count name could recur after compaction deletes files,
-        and a recurring name silently overwrites.  The tmp name is
-        DOT-prefixed so a crash orphan is invisible to Spark's directory
-        listing (hidden-file filter) and to ``*.parquet`` globs; a
-        PROCESS crash mid-write can therefore never leave a truncated
-        .parquet at a final name (that would poison _totals_from_sink
-        and every downstream reader).  Against an OS power cut the same
-        holds only in ``durability='power'`` mode, which fsyncs the tmp
-        before the publish rename and the directory after it."""
-        tmp, final = self._alloc_part(run_name)
-        try:
-            self._write_part(table, tmp)
-        except BaseException:
-            # the dispatch never committed (no intent yet): drop the
-            # partial tmp now rather than leaving it for the next
-            # restart's recovery sweep — same contract as the pooled
-            # multi-part branch's error path
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        return [tmp, final]
-
     def _write_part(self, table: pa.Table, path: str) -> None:
         """Write one staged part (every staging path goes through here,
         so the write options live in one place)."""
@@ -933,8 +972,18 @@ class FetchLoopNexusWriter:
             _fsync_path(path)
 
     def _alloc_part(self, run_name: str) -> list[str]:
-        """Allocate one part's (tmp, final) path pair — single-threaded
-        (mutates the monotone file sequence)."""
+        """Allocate one part's ``[tmp, final]`` path pair — single-
+        threaded (mutates the monotone file sequence).  The final name
+        is uuid-suffixed like Spark's own part files: a directory-count
+        name could recur after compaction deletes files, and a recurring
+        name silently overwrites.  The tmp name is DOT-prefixed so a
+        crash orphan is invisible to Spark's directory listing
+        (hidden-file filter) and to ``*.parquet`` globs; a PROCESS crash
+        mid-write can therefore never leave a truncated .parquet at a
+        final name (that would poison _totals_from_sink and every
+        downstream reader).  Against an OS power cut the same holds only
+        in ``durability='power'`` mode, which fsyncs the tmp before the
+        publish rename and the directory after it."""
         run_dir = os.path.join(self.path, run_dir_name(run_name))
         os.makedirs(run_dir, exist_ok=True)
         import uuid
@@ -959,8 +1008,10 @@ class FetchLoopNexusWriter:
     def _stage_run_tables(self, run_tables: dict) -> list[list[str]]:
         """Stage every run's rows as one or more hidden tmp part files
         (concurrently when large); returns the rename list for the
-        intent.  Part names are allocated in the caller thread — only
-        the writes fan out."""
+        record.  Part names are allocated in the caller thread; only the
+        (GIL-releasing) writes fan out, through a BOUNDED pool — a
+        catch-up dispatch spanning many overlapping runs must not spawn
+        one writer thread per part."""
         jobs = []  # (run_name, table_slice)
         for run, t in run_tables.items():
             if t.num_rows > self._STAGE_SLICE_ROWS:
@@ -971,88 +1022,52 @@ class FetchLoopNexusWriter:
                     jobs.append((run, t.slice(off, step)))
             else:
                 jobs.append((run, t))
-        if len(jobs) == 1:
-            return [self._write_run_tmp(*jobs[0])]
-        # _write_run_tmp mutates _file_seq, so names are allocated here
-        # in the caller thread; only the (GIL-releasing) writes fan out,
-        # through a BOUNDED pool — a catch-up dispatch spanning many
-        # overlapping runs must not spawn one writer thread per part
-        allocated = [
-            (self._alloc_part(run), tbl) for run, tbl in jobs
-        ]
-        errors: list = []
-        next_job = iter(range(len(allocated)))
-        it_lock = threading.Lock()
-
-        def _worker():
-            while True:
-                with it_lock:
-                    i = next(next_job, None)
-                if i is None or errors:
-                    return
-                pair, tbl = allocated[i]
-                try:
-                    self._write_part(tbl, pair[0])
-                except BaseException as e:  # re-raised below
-                    errors.append(e)
-                    return
-
-        threads = [
-            threading.Thread(target=_worker, daemon=True)
-            for _ in range(min(8, len(allocated)))
-        ]
-        for th in threads:
-            th.start()
-        for th in threads:
-            th.join()
-        if errors:
-            # a failed staging never committed (the intent is not yet
-            # written): drop every tmp now instead of leaving it for the
-            # next restart's recovery sweep
-            for (tmp, _final), _tbl in allocated:
+        parts = [(self._alloc_part(run), tbl) for run, tbl in jobs]
+        try:
+            if len(parts) == 1:
+                self._write_part(parts[0][1], parts[0][0][0])
+            else:
+                with ThreadPoolExecutor(min(8, len(parts))) as pool:
+                    list(pool.map(
+                        lambda p: self._write_part(p[1], p[0][0]), parts
+                    ))
+        except BaseException:
+            # the dispatch never committed (no record yet): drop every
+            # tmp now rather than leaving it for the next restart's
+            # recovery sweep
+            for (tmp, _final), _tbl in parts:
                 try:
                     os.remove(tmp)
                 except OSError:
                     pass
-            raise errors[0]
-        return [pair for pair, _tbl in allocated]
+            raise
+        return [pair for pair, _tbl in parts]
 
-    def _write_intent(self, payload: dict) -> None:
-        """Step 3, the commit point: the intent lands atomically or not
-        at all (tmp+rename; fsync'd through in power mode so the rename
-        can never beat its data to the journal)."""
-        itmp = self._intent_file() + ".tmp"
-        with open(itmp, "w") as fh:
-            json.dump(payload, fh)
-            if self._fsync:
-                fh.flush()
-                os.fsync(fh.fileno())
-        os.replace(itmp, self._intent_file())
-        if self._fsync:
-            _fsync_path(self.state_dir)
-            self._ensure_state_dir_durable()
-
-    def _publish_renames(self, renames) -> None:
-        """The publish step: atomic per-part renames.  Idempotent —
-        recovery re-runs it for a surviving intent, where some pairs may
-        already have published before the crash.  A pair with NEITHER
-        file present is corruption (the intent promised rows that no
-        longer exist — e.g. an un-fsynced directory entry lost to a
-        power cut in the default mode, or an external job consuming the
-        sink while an intent was pending): fail loudly rather than
-        silently adopt totals for vanished rows.  In power mode the
-        directory fsync covers every pair's directory, including pairs
+    def _publish_renames(self, renames, in_doubt: bool = True) -> None:
+        """The publish step: atomic per-part renames onto fresh
+        (uuid-named) finals.  Idempotent — recovery re-runs it for the
+        newest record, where some pairs may already have published
+        before the crash.  While the publish is ``in_doubt`` a pair with
+        NEITHER file present is corruption (the record promised rows
+        that no longer exist — e.g. an un-fsynced directory entry lost
+        to a power cut in the default mode, or an external job consuming
+        the sink mid-commit): fail loudly rather than silently adopt
+        totals for vanished rows.  A publish known finished skips such a
+        pair: its part was moved since.  In power mode the directory
+        fsync covers every present pair's directory, including pairs
         whose rename itself happened before a crash (their entries may
         not have been fsynced yet)."""
         dirs = set()
         for tmp, final in renames:
             if os.path.isfile(tmp):
-                os.replace(tmp, final)
+                os.rename(tmp, final)
             elif not os.path.isfile(final):
+                if not in_doubt:
+                    continue
                 raise RuntimeError(
                     "commit corruption: neither the staged tmp nor the "
                     f"published part exists for {final} — the sink lost "
-                    "rows the write-ahead intent committed"
+                    "rows the commit record committed"
                 )
             dirs.add(os.path.dirname(final))
         if self._fsync:
@@ -1060,43 +1075,38 @@ class FetchLoopNexusWriter:
                 _fsync_path(d)
 
     def _commit(
-        self, dispatch, run_tables, per_run, frames, t_poll, decode_s,
-        t_decode,
+        self, run_tables, per_run, frames, t_poll, decode_s, t_decode,
     ) -> None:
-        """The commit tail of one dispatch: stage -> intent -> publish ->
-        state -> ``on_commit``.  Reads the cursor, FSM and totals the
-        loop left for it; the loop touches none of them until it ends.
-        Logged: ``total_s`` from the poll's return to the commit
-        (including any wait for the previous tail), ``decode_s`` the
-        decode and admission work alone."""
+        """The commit tail of one dispatch: stage -> record -> publish ->
+        unlink the previous record -> ``on_commit``.  Reads the cursor,
+        FSM and totals the loop left for it; the loop touches none of
+        them until it ends.  Logged: ``total_s`` from the poll's return
+        to the commit (including any wait for the previous tail),
+        ``decode_s`` the decode and admission work alone, ``intent_s``
+        the record write."""
+        prev = self._seq
         if not run_tables:
             # no run matched: frames drop (as the other doors), but the
-            # cursor still advances through a persisted state write
+            # cursor and tombstones still persist, in a record with an
+            # empty rename list
             self._save_state()
+            self._drop_record(prev)
             if self.on_commit is not None:
                 self.on_commit([])
             return
 
         # stage: each run's rows land ONCE, as a hidden tmp part file
-        # (step 2 of the protocol) — the intent then only needs the
+        # (step 2 of the protocol) — the record then only needs the
         # rename list, not a copy of the event table.  The cursor
         # already holds the NEW fetch position, so non-pending
         # partitions commit.
-        os.makedirs(self.state_dir, exist_ok=True)
-        deltas = {
-            run: (
-                per_run[run][0] - self._totals.get(run, (0, 0))[0],
-                run_tables[run].num_rows,
-            )
-            for run in per_run
-        }
         renames = self._stage_run_tables(
             {run: run_tables[run] for run in per_run}
         )
         if self._fsync:
             # the staged tmps' DIRECTORY ENTRIES must be durable before
-            # the intent commits, or a power cut can lose a tmp the
-            # intent promises (recovery would then see neither tmp nor
+            # the record commits, or a power cut can lose a tmp the
+            # record promises (recovery would then see neither tmp nor
             # final and fail loudly).  The sink-root fsync covers run
             # directories' own entries and is paid only when a run dir
             # first appears, not per dispatch.
@@ -1109,36 +1119,17 @@ class FetchLoopNexusWriter:
                 self._durable_dirs |= new_dirs
         t_parts = time.perf_counter()
 
-        self._write_intent(
-                {
-                    "offsets": self._persist_offsets(),
-                    "pre_totals": {
-                        run: list(self._totals.get(run, (0, 0)))
-                        for run in per_run
-                    },
-                    "deltas": {k: list(v) for k, v in deltas.items()},
-                    # the dispatched frame keys: recovery re-arms their
-                    # tombstones BEFORE resuming the loop.  The intent's
-                    # offsets are held back to the floor of any frame
-                    # still pending at crash time, so the resumed loop
-                    # replays this dispatch's records too — without
-                    # these tombstones (which were only in memory when
-                    # the crash hit) the frames would re-assemble and
-                    # re-append.
-                    "frame_keys": [list(key) for key, _fs in dispatch],
-                    # the publish list: recovery finishes these renames
-                    # idempotently
-                    "renames": renames,
-                }
-        )
+        # the commit point: the held-back cursor, the post-commit
+        # totals, and the tombstones — the dispatched frames' among
+        # them, so a recovery that replays from a still-pending frame's
+        # floor rejects this dispatch's records instead of re-appending
+        self._save_state(per_run, renames)
         t_intent = time.perf_counter()
 
         self._publish_renames(renames)
         t_publish = time.perf_counter()
 
-        self._totals.update(per_run)
-        self._save_state()
-        os.remove(self._intent_file())
+        self._drop_record(prev)
         self.commit_log.append(
             {
                 "n_frames": len(frames),

@@ -51,10 +51,21 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.index_maintenance import resolve_dir
-from ..plans.retrieval import _BM25_B, _BM25_K1, _N_TERM_BUCKETS
+from ..plans.retrieval import (
+    _BM25_B, _BM25_K1, _N_TERM_BUCKETS, read_postings_artifact,
+)
 from ..plans.text_dedup import _TOKENS_EXPR_SPARK
 
 _N_DOC_BUCKETS = 64
+
+# the segment index's stored schemas (read_postings_artifact names them,
+# so no read runs a schema-inference job)
+_SEGMENT_SCHEMAS = {
+    "postings": "doc_id bigint, term string, tf bigint, dl bigint, "
+                "batch int, tb int",
+    "doclen": "doc_id bigint, dl bigint, batch int, db int",
+    "stats": "n_docs bigint, sum_dl bigint, batch int",
+}
 
 
 def _term_bucket(col):
@@ -115,7 +126,7 @@ def ingest_doc_batch(batch_df: DataFrame, index_path: str, batch_id: int) -> int
             .distinct().collect()
         ]
         seen = (
-            spark.read.parquet(resolve_dir(doclen_path))
+            read_postings_artifact(spark, index_path, "doclen", _SEGMENT_SCHEMAS)
             .filter(F.col("db").isin(buckets))
             # a crash-retry's own segment must not count as "seen" — it is
             # about to be overwritten wholesale
@@ -198,7 +209,7 @@ def bm25_topk_over_index(
         }
     )
     postings = (
-        spark.read.parquet(resolve_dir(os.path.join(index_path, "postings")))
+        read_postings_artifact(spark, index_path, "postings", _SEGMENT_SCHEMAS)
         .filter(F.col("tb").isin(buckets))
         .select("term", "doc_id", "tf", "dl")
     )
@@ -208,7 +219,9 @@ def bm25_topk_over_index(
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
     )
-    stats = spark.read.parquet(resolve_dir(os.path.join(index_path, "stats"))).agg(
+    stats = read_postings_artifact(
+        spark, index_path, "stats", _SEGMENT_SCHEMAS
+    ).agg(
         F.sum("n_docs").alias("n"),
         (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
     )

@@ -9,6 +9,7 @@ built from the decoded messages, and over random tapes with a
 plain-Python frame FSM; crashes are injected at every step of an
 overlapped commit tail."""
 
+import json
 import os
 import random
 import sys
@@ -381,9 +382,9 @@ def test_loop_handoff_under_fast_thread_switching(tmp_path):
 # tail step -> the writer method that performs it
 _TAIL_STEPS = {
     "stage": "_write_part",
-    "intent": "_write_intent",
+    "record": "_save_state",
     "publish": "_publish_renames",
-    "state": "_save_state",
+    "unlink": "_drop_record",
 }
 
 
@@ -394,8 +395,6 @@ def _bomb(w, step, fuse, threads):
     left = [fuse]
 
     def wrapped(*args):
-        if step == "state" and not os.path.isfile(w._intent_file()):
-            return orig(*args)  # a state save outside a commit tail
         threads.append(threading.current_thread().name)
         left[0] -= 1
         if left[0] == 0:
@@ -408,8 +407,7 @@ def _bomb(w, step, fuse, threads):
     setattr(w, _TAIL_STEPS[step], wrapped)
 
 
-@pytest.mark.parametrize("step", ["stage", "intent", "publish", "state"])
-def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
+def _crash_in_overlapped_tail(tmp_path, step, durability):
     n_frames = 6
     payloads = [
         _dev2(d, f, 2 + f % 3) for f in range(n_frames) for d in range(N_DIG)
@@ -421,7 +419,9 @@ def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
 
     # two frames per poll: every dispatch overlaps the next poll
     c1 = _ScriptedConsumer(records, [2 * N_DIG], now)
-    w1 = _writer(path, now, consumer_factory=lambda: c1)
+    w1 = _writer(
+        path, now, consumer_factory=lambda: c1, durability=durability
+    )
     threads = []
     _bomb(w1, step, 2, threads)
     w1.start()
@@ -438,7 +438,9 @@ def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
     # the persisted cursor through a fresh consumer (the poll size
     # changes too, so replayed frames re-assemble across polls)
     c2 = _ScriptedConsumer(records, [3], now)
-    w2 = _writer(path, now, consumer_factory=lambda: c2)
+    w2 = _writer(
+        path, now, consumer_factory=lambda: c2, durability=durability
+    )
     w2.start()
     assert _await(lambda: w2._totals.get("run_a", (0, 0))[0] == n_frames)
     _stop(w2)
@@ -449,7 +451,242 @@ def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
         f.endswith(".tmp")
         for f in os.listdir(path / "run_name=run_a")
     )
+    # one record survives: the newest
+    assert os.listdir(w2.state_dir) == [f"commit-{w2._seq:012d}.json"]
     _assert_sink_matches(path, tape, "dev2", (RUN_A,))
+
+
+@pytest.mark.parametrize("step", list(_TAIL_STEPS))
+def test_crash_in_overlapped_tail_lands_every_frame_once(tmp_path, step):
+    _crash_in_overlapped_tail(tmp_path, step, "process")
+
+
+@pytest.mark.parametrize("step", list(_TAIL_STEPS))
+def test_crash_in_power_mode_tail_lands_every_frame_once(tmp_path, step):
+    _crash_in_overlapped_tail(tmp_path, step, "power")
+
+
+def _record_files(w):
+    return sorted(
+        n for n in os.listdir(w.state_dir) if n.startswith("commit-")
+    )
+
+
+def _read_record(w, name):
+    with open(os.path.join(w.state_dir, name)) as fh:
+        return json.load(fh)
+
+
+def _drain(w, polls, now, start=0):
+    """Feed ``polls`` (lists of records) from offset ``start`` on, then
+    run past every TTL so the last pending frame dispatches."""
+    for recs in polls:
+        recs = [r for r in recs if r.offset >= start]
+        if recs:
+            w.poll_once(records=recs)
+        now[0] += 0.01
+    now[0] += 10.0
+    w.poll_once(records=[])
+
+
+def _cut_before_unlink(path, now, polls, n_polls):
+    """Run ``n_polls`` polls, then crash the next dispatch's tail after
+    its publish: the newest record and its predecessor are both on
+    disk.  Returns the crashed writer."""
+    w = _writer(path, now)
+    for recs in polls[:n_polls]:
+        w.poll_once(records=recs)
+        now[0] += 0.01
+    _bomb(w, "unlink", 1, [])
+    with pytest.raises(RuntimeError, match="crash at unlink"):
+        _drain(w, polls[n_polls:], now)
+    assert len(_record_files(w)) == 2
+    return w
+
+
+def test_newest_record_wins_and_torn_tmp_is_ignored(tmp_path):
+    """Two records on disk (a crash before the older one's unlink) plus a
+    torn tmp of a third: a fresh writer resumes from the newest record,
+    ignores the tmp, leaves one record behind and lands every frame
+    exactly once."""
+    tape = _dev2_tape()
+    polls = _polls(tape)
+    now = [1_000_000.0]
+    path = tmp_path / "s"
+    w1 = _cut_before_unlink(path, now, polls, 1)
+    older, newest = _record_files(w1)
+    want = _read_record(w1, newest)
+    assert want != _read_record(w1, older)
+    torn = os.path.join(w1.state_dir, f".commit-{w1._seq + 1:012d}.json.tmp")
+    with open(torn, "w") as fh:
+        fh.write('{"offsets": {"t/0": 99')
+
+    w2 = _writer(path, now)
+    w2.poll_once(records=[])
+    assert _record_files(w2) == [newest]
+    assert not os.path.exists(torn)
+    assert w2._offsets == want["offsets"]
+    assert w2._totals == {k: tuple(v) for k, v in want["totals"].items()}
+    assert set(w2._tombstones) == {tuple(k) for k, _e in want["tombstones"]}
+    _drain(w2, polls, now, start=w2._offsets.get("t/0", 0))
+    _assert_sink_matches(path, tape, "dev2", (RUN_A,))
+
+
+def test_vanished_part_is_corruption_only_while_publish_in_doubt(tmp_path):
+    """The newest record's publish is in doubt while its predecessor is
+    still on disk: a rename pair with neither file then fails loudly.
+    With the newest record alone the publish finished, and a part that
+    moved since (run retirement, compaction) is no error."""
+    polls = _polls(_dev2_tape())
+    now = [1_000_000.0]
+    path = tmp_path / "s"
+    w1 = _cut_before_unlink(path, now, polls, 1)
+    _older, newest = _record_files(w1)
+    (_tmp, final), = _read_record(w1, newest)["renames"]
+    moved = str(tmp_path / os.path.basename(final))
+    os.rename(final, moved)
+    with pytest.raises(RuntimeError, match="commit corruption"):
+        _writer(path, now).poll_once(records=[])
+
+    os.rename(moved, final)
+    _writer(path, now).poll_once(records=[])  # recovers; one record left
+    os.rename(final, moved)
+    w3 = _writer(path, now)
+    w3.poll_once(records=[])
+    assert _record_files(w3) == [newest]
+
+
+@pytest.mark.parametrize("legacy", ["state_and_intent", "state_only"])
+def test_legacy_state_and_intent_resume_exactly_once(tmp_path, legacy):
+    """A state dir of the earlier two-file layout — ``state.json``
+    (offsets, totals, tombstones) and a surviving ``intent.json`` of a
+    dispatch cut off before its publish finished — goes through the
+    same recovery, is replaced by one record, and every frame lands
+    exactly once."""
+    tape = _dev2_tape()
+    polls = _polls(tape)
+    now = [1_000_000.0]
+    path = tmp_path / "s"
+    w1 = _writer(path, now)
+    w1.poll_once(records=polls[0])
+    now[0] += 0.01
+    prev = _read_record(w1, _record_files(w1)[0])
+    # the next dispatch crashes before its publish
+    _bomb(w1, "publish", 1, [])
+    with pytest.raises(RuntimeError, match="crash at publish"):
+        w1.poll_once(records=polls[1])
+    older, newest = _record_files(w1)
+    rec = _read_record(w1, newest)
+    assert rec["renames"] and os.path.isfile(rec["renames"][0][0])
+    # rewrite the state dir in the earlier layout
+    for name in (older, newest):
+        os.remove(os.path.join(w1.state_dir, name))
+    state = {k: prev[k] for k in ("offsets", "totals", "tombstones")}
+    with open(os.path.join(w1.state_dir, "state.json"), "w") as fh:
+        json.dump(state, fh)
+    if legacy == "state_and_intent":
+        keys = {tuple(k) for k, _e in prev["tombstones"]}
+        pre = {r: prev["totals"].get(r, [0, 0]) for r in rec["totals"]}
+        with open(os.path.join(w1.state_dir, "intent.json"), "w") as fh:
+            json.dump(
+                {
+                    "offsets": rec["offsets"],
+                    "pre_totals": pre,
+                    "deltas": {
+                        r: [a - pre[r][0], b - pre[r][1]]
+                        for r, (a, b) in rec["totals"].items()
+                    },
+                    "frame_keys": [
+                        k for k, _e in rec["tombstones"]
+                        if tuple(k) not in keys
+                    ],
+                    "renames": rec["renames"],
+                },
+                fh,
+            )
+    else:
+        # a clean stop in the earlier layout: nothing was in flight
+        for tmp, _final in rec["renames"]:
+            os.remove(tmp)
+
+    w2 = _writer(path, now)
+    w2.poll_once(records=[])
+    assert _record_files(w2) == ["commit-000000000001.json"]
+    assert sorted(os.listdir(w2.state_dir)) == _record_files(w2)
+    if legacy == "state_and_intent":
+        assert w2._offsets == rec["offsets"]
+        assert w2._totals == {k: tuple(v) for k, v in rec["totals"].items()}
+    else:
+        assert w2._offsets == prev["offsets"]
+        assert w2._totals == {k: tuple(v) for k, v in prev["totals"].items()}
+    _drain(w2, polls, now, start=w2._offsets.get("t/0", 0))
+    _assert_sink_matches(path, tape, "dev2", (RUN_A,))
+
+
+@pytest.mark.parametrize("durability", ["process", "power"])
+def test_commit_path_writes_one_record_and_replaces_nothing(
+    tmp_path, monkeypatch, durability
+):
+    """Over ``poll_once`` cycles: no rename lands on an existing path,
+    no file is opened for writing over an existing one, each dispatch
+    writes one JSON file, one record stays on disk, and power mode
+    fsyncs five times per one-part dispatch once its directories are
+    durable (staged part, its directory, record tmp, state dir, and the
+    published part's directory — the earlier intent + state protocol
+    took seven)."""
+    import builtins
+
+    import supermusr_data_pipeline_spark.streaming.nexus_fetchloop as FL
+
+    tape = _dev2_tape()
+    now = [1_000_000.0]
+    w = _writer(tmp_path / "s", now, durability=durability)
+    counts = {"dump": 0, "fsync": 0}
+
+    def guard(orig):
+        def renamed(src, dst, *a, **kw):
+            assert not os.path.exists(dst), f"rename onto existing {dst}"
+            return orig(src, dst, *a, **kw)
+        return renamed
+
+    def opened(file, mode="r", *a, **kw):
+        if "w" in mode:
+            assert not os.path.exists(file), f"rewrite of {file}"
+        return builtins.open(file, mode, *a, **kw)
+
+    def counting(name, orig):
+        def call(*a, **kw):
+            counts[name] += 1
+            return orig(*a, **kw)
+        return call
+
+    monkeypatch.setattr(os, "replace", guard(os.replace))
+    monkeypatch.setattr(os, "rename", guard(os.rename))
+    monkeypatch.setattr(FL, "open", opened, raising=False)
+    monkeypatch.setattr(FL.json, "dumps", counting("dump", FL.json.dumps))
+    monkeypatch.setattr(os, "fsync", counting("fsync", os.fsync))
+    per_dispatch = []
+    for recs in _polls(tape) + [[]]:
+        if not recs:
+            now[0] += 10.0
+        before = dict(counts)
+        n_log = len(w.commit_log)
+        w.poll_once(records=recs)
+        now[0] += 0.01
+        if len(w.commit_log) > n_log:
+            per_dispatch.append(
+                {k: counts[k] - before[k] for k in counts}
+            )
+    assert not w._pending
+    assert len(per_dispatch) == 3
+    assert all(d["dump"] == 1 for d in per_dispatch)
+    assert _record_files(w) == [f"commit-{w._seq:012d}.json"]
+    fsyncs = [d["fsync"] for d in per_dispatch]
+    if durability == "power":
+        assert fsyncs[1:] == [5, 5]
+    else:
+        assert fsyncs == [0, 0, 0]
+    _assert_sink_matches(tmp_path / "s", tape, "dev2", (RUN_A,))
 
 
 def _model(msgs, polls, runs, ttl_ms, tombstone_ttl_ms):

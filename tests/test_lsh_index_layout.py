@@ -100,11 +100,17 @@ def test_admit_batch_pushes_tb_filter_into_token_scan(spark, built):
 
 
 def test_build_append_compact_is_concatenation(spark, built):
+    tokens = os.path.join(built, "tokens")
+    marker = os.stat(os.path.join(tokens, "_LAYOUT"))
     incremental.append_shard_to_index(spark, SF_DIR, built)
     batch = spark.createDataFrame([_fresh(9100 + k) for k in range(5)], SCHEMA)
     d = shard_ingest.admit_batch(batch, built, exclude_bid=0)
     shard_ingest._append_admitted(batch, d.filter("admit"), built, bid=0)
-    tokens = os.path.join(built, "tokens")
+    # appends find the marker current and leave the file alone
+    after = os.stat(os.path.join(tokens, "_LAYOUT"))
+    assert (after.st_ino, after.st_mtime_ns) == (
+        marker.st_ino, marker.st_mtime_ns
+    )
     assert sorted(_visible(tokens)) == ["bid=-1", "bid=-2", "bid=0"]
     _assert_sorted_files(spark, built)
     # every segment counts once toward the compaction trigger, exactly as
@@ -149,7 +155,8 @@ def test_old_layout_is_refused_not_mixed(spark, tmp_path):
     assert sorted(os.listdir(tokens)) == listing
     assert not any(n.startswith("bid=") for n in listing)
 
-    # the bulk build replaces it wholesale
+    # the bulk build replaces it wholesale and records the marker
+    assert im.read_layout(tokens) is None
     incremental.write_lsh_index(spark, SF_DIR, idx)
     assert _visible(tokens) == ["bid=-1"]
     assert im.read_layout(tokens) == incremental.TOKENS_LAYOUT

@@ -2,9 +2,10 @@
 SAME sink rows as the batch builder for the same dev2 tape — the oracle
 the FSM door is pinned to in test_nexus_stream_batch_parity — while
 committing without a micro-batch: poll + decode + Arrow append in one
-loop thread.  Crash recovery (write-ahead intent + held-back offset
+loop thread.  Crash recovery (write-once commit records + held-back offset
 cursor) is driven crash-at-every-step."""
 
+import json
 import os
 import time
 from datetime import datetime, timezone
@@ -252,48 +253,46 @@ class _Boom(RuntimeError):
     pass
 
 
+def _committed(w):
+    """The rename list of the newest commit record on disk (empty when
+    no dispatch has reached its commit point)."""
+    seqs = w._record_seqs()
+    if not seqs:
+        return []
+    with open(w._record_file(seqs[-1])) as fh:
+        return json.load(fh)["renames"]
+
+
 def _crashing_writer(broker, path, crash_at: str, **kw):
     """A writer whose commit path crashes at a chosen protocol step:
-    ``after_parts`` (tmps staged, intent never written), ``after_intent``
-    (intent written, nothing published), ``after_publish`` (parts
-    published, state not yet saved)."""
+    ``after_parts`` (tmps staged, record never written), ``after_record``
+    (record written, nothing published), ``after_publish`` (parts
+    published, the previous record not yet unlinked)."""
     w = _writer(broker, path, **kw)
-    orig_intent = w._write_intent
-    orig_publish = w._publish_renames
-    orig_save = w._save_state
+    step = {
+        "after_parts": "_save_state",
+        "after_record": "_publish_renames",
+        "after_publish": "_drop_record",
+    }[crash_at]
+    orig = getattr(w, step)
     state = {"armed": True}
 
-    if crash_at == "after_parts":
-        def bomb_intent(payload):
-            if state["armed"]:
-                raise _Boom()
-            orig_intent(payload)
+    def bomb(*args):
+        if state["armed"]:
+            raise _Boom()
+        orig(*args)
 
-        w._write_intent = bomb_intent
-    elif crash_at == "after_intent":
-        def bomb_publish(renames):
-            if state["armed"]:
-                raise _Boom()
-            orig_publish(renames)
-
-        w._publish_renames = bomb_publish
-    elif crash_at == "after_publish":
-        def bomb_save():
-            if state["armed"] and os.path.isfile(w._intent_file()):
-                raise _Boom()
-            orig_save()
-
-        w._save_state = bomb_save
+    setattr(w, step, bomb)
     return w, state
 
 
 @pytest.mark.parametrize(
-    "crash_at", ["after_parts", "after_intent", "after_publish"]
+    "crash_at", ["after_parts", "after_record", "after_publish"]
 )
 def test_fetchloop_crash_recovery_exactly_once(spark, tmp_path, crash_at):
-    """Crash at every protocol step: before the intent (staged tmps
-    only — the dispatch never committed, so the records replay and the
-    frames re-assemble), after the intent (recovery publishes the
+    """Crash at every protocol step: before the commit record (staged
+    tmps only — the dispatch never committed, so the records replay and
+    the frames re-assemble), after the record (recovery publishes the
     renames), and after the publish (recovery's renames are no-ops) —
     the sink holds every frame exactly once in all three."""
     with MiniBroker() as broker:
@@ -306,16 +305,16 @@ def test_fetchloop_crash_recovery_exactly_once(spark, tmp_path, crash_at):
         with pytest.raises((_Boom, RuntimeError)):
             for _ in range(200):
                 w.poll_once()
-        # the commit point is the intent write: before it, no intent
-        # (and nothing visible in the sink); after it, the intent
-        # survives the crash
+        # the commit point is the record write: before it, no record
+        # (and nothing visible in the sink); after it, the record and
+        # its rename list survive the crash
         if crash_at == "after_parts":
-            assert not os.path.isfile(w._intent_file())
+            assert not _committed(w)
             assert not list(
                 (tmp_path / "s" / "run_name=run_a").glob("*.parquet")
             )
         else:
-            assert os.path.isfile(w._intent_file())
+            assert _committed(w)
         if w._consumer is not None:
             w._consumer.close()
 
@@ -358,7 +357,7 @@ def test_fetchloop_crash_mid_publish_two_runs(spark, tmp_path):
         with pytest.raises((_Boom, RuntimeError)):
             for _ in range(200):
                 w.poll_once()
-        assert os.path.isfile(w._intent_file())
+        assert len(_committed(w)) == 2
         if w._consumer is not None:
             w._consumer.close()
 
@@ -377,32 +376,31 @@ def test_fetchloop_crash_mid_publish_two_runs(spark, tmp_path):
     assert per == {"run_a": N_DIG * 2, "run_b": N_DIG * 2}
 
 
-def test_fetchloop_crash_after_intent_with_pending_frame(spark, tmp_path):
-    """The r12 advice repro: frame 0 PENDING (holding the persisted
-    cursor back at its floor) while frame 1 dispatches, crash after the
-    intent write.  Recovery adopts the intent's held-back offsets and
-    so replays frame 1's records — they must be rejected by the
-    re-armed tombstones carried in the intent, not re-assembled and
-    re-appended (exactly-once)."""
+def test_fetchloop_crash_after_record_with_pending_frame(spark, tmp_path):
+    """Frame 0 PENDING (holding the persisted cursor back at its floor)
+    while frame 1 dispatches, crash after the record write.  Recovery
+    adopts the record's held-back offsets and so replays frame 1's
+    records — they must be rejected by the re-armed tombstones carried
+    in the record, not re-assembled and re-appended (exactly-once)."""
     with MiniBroker() as broker:
         broker.create_topic("daq-events", partitions=1)
         w, _state = _crashing_writer(
-            broker, tmp_path / "s", "after_intent", frame_ttl_ms=60_000
+            broker, tmp_path / "s", "after_record", frame_ttl_ms=60_000
         )
         # frame 0 partially arrives (2 of 4 digitisers) -> stays pending
         _produce(broker, [_payload(d, 0, n_events=2) for d in range(2)])
         w.poll_once()
         assert w._totals.get("run_a", (0, 0))[0] == 0
-        # frame 1 arrives fully -> dispatches -> crash after intent
+        # frame 1 arrives fully -> dispatches -> crash after the record
         _produce(broker, [_payload(d, 1, n_events=2) for d in range(N_DIG)])
         with pytest.raises((_Boom, RuntimeError)):
             for _ in range(200):
                 w.poll_once()
-        assert os.path.isfile(w._intent_file())
+        assert _committed(w)
         if w._consumer is not None:
             w._consumer.close()
 
-        # recovery: finish the intent, replay from frame 0's floor
+        # recovery: finish the record, replay from frame 0's floor
         # (which re-delivers frame 1's records too), then complete
         # frame 0 from the late digitisers
         _produce(
@@ -428,7 +426,7 @@ def test_fetchloop_crash_mid_part_write_recovers(spark, tmp_path, monkeypatch):
     """A crash DURING the sink part staging (power cut mid-
     pq.write_table) must leave no truncated .parquet at a final name:
     the write goes to a dot-prefixed tmp (invisible to Spark's listing
-    and *.parquet globs).  The staging precedes the intent, so the
+    and *.parquet globs).  The staging precedes the record, so the
     dispatch never committed — recovery sweeps the orphaned tmp and the
     replayed records re-assemble the frame."""
     import supermusr_data_pipeline_spark.streaming.nexus_fetchloop as FL
@@ -454,8 +452,8 @@ def test_fetchloop_crash_mid_part_write_recovers(spark, tmp_path, monkeypatch):
         with pytest.raises((_Boom, RuntimeError)):
             for _ in range(200):
                 w.poll_once()
-        # staging precedes the intent: the dispatch never committed
-        assert not os.path.isfile(w._intent_file())
+        # staging precedes the record: the dispatch never committed
+        assert not _committed(w)
         if w._consumer is not None:
             w._consumer.close()
         run_dir = tmp_path / "s" / "run_name=run_a"
@@ -609,8 +607,8 @@ def test_miniconsumer_seek_ignores_unassigned_partitions(tmp_path):
 def test_fetchloop_crash_property_exactly_once(spark, tmp_path):
     """Property: over random tapes (incomplete frames, byte-identical
     duplicate messages, random poll chunking) and a crash at a RANDOM
-    protocol step (before the intent / before the publish / before the
-    state save) at a random dispatch, the recovered sink is
+    protocol step (before the record / before the publish / before the
+    older record's unlink) at a random dispatch, the recovered sink is
     row-identical to a no-crash run fed the same chunks.  Duplicates
     are byte-identical by construction so winner identity cannot mask a
     protocol divergence; frame TTL is set high so completeness is a
@@ -646,7 +644,7 @@ def test_fetchloop_crash_property_exactly_once(spark, tmp_path):
         bounds = sorted({0, len(msgs), *cuts})
         pairs = [(a, b) for a, b in zip(bounds, bounds[1:]) if b > a]
         step = data.draw(
-            st.sampled_from(["parts", "intent", "publish"]), label="step"
+            st.sampled_from(["parts", "record", "publish"]), label="step"
         )
         fuse = data.draw(st.integers(1, 2), label="fuse")
         case_idx[0] += 1
@@ -684,24 +682,23 @@ def test_fetchloop_crash_property_exactly_once(spark, tmp_path):
                     armed["step"] = "spent"
                     raise _Boom()
 
-        orig_intent = w._write_intent
-        orig_pub = w._publish_renames
         orig_save = w._save_state
+        orig_pub = w._publish_renames
+        orig_drop = w._drop_record
 
-        def wi(payload):
+        def sv(*args):
             maybe_boom("parts")
-            orig_intent(payload)
+            orig_save(*args)
 
         def pr(renames):
-            maybe_boom("intent")
+            maybe_boom("record")
             orig_pub(renames)
 
-        def sv():
-            if os.path.isfile(w._intent_file()):
-                maybe_boom("publish")
-            orig_save()
+        def dr(seq):
+            maybe_boom("publish")
+            orig_drop(seq)
 
-        w._write_intent, w._publish_renames, w._save_state = wi, pr, sv
+        w._save_state, w._publish_renames, w._drop_record = sv, pr, dr
         crashed = False
         for a, b in pairs:
             try:
@@ -1040,7 +1037,7 @@ def test_fetchloop_sink_compacts_like_any_nexus_run(spark, tmp_path):
 
 
 def test_fetchloop_commit_latency_under_budget(tmp_path):
-    """The door's reason to exist: per-commit wall time (decode + intent
+    """The door's reason to exist: per-commit wall time (decode + record
     + append) at the FULL 32x500 shape stays well under the reference's
     1 s budget — the micro-batch cycle's ~1.0-1.3 s fixed cost is gone.
     This is a smoke bound (CI machines vary); bench_streaming measures
@@ -1063,7 +1060,7 @@ def test_fetchloop_commit_latency_under_budget(tmp_path):
 
 
 def test_fetchloop_power_durability_mode(spark, tmp_path):
-    """durability='power' fsyncs staged parts / intent / state through
+    """durability='power' fsyncs staged parts and the commit record through
     the same protocol — identical sink rows, just stronger media
     guarantees (the mode is opt-in because fsync costs commit latency
     the default's process-crash scope doesn't need)."""
@@ -1092,7 +1089,7 @@ def test_fetchloop_staging_pool_error_unlinks_tmps(spark, tmp_path, monkeypatch)
     """A failed CONCURRENT staging (multi-part dispatch) must not leave
     its already-written sibling tmps on disk for the next restart's
     sweep: the error path unlinks every allocated tmp before re-raising,
-    and the dispatch never committed (no intent), so recovery replays
+    and the dispatch never committed (no record), so recovery replays
     and lands the frames exactly once."""
     import supermusr_data_pipeline_spark.streaming.nexus_fetchloop as FL
 
@@ -1120,7 +1117,7 @@ def test_fetchloop_staging_pool_error_unlinks_tmps(spark, tmp_path, monkeypatch)
             for _ in range(200):
                 w.poll_once()
         assert state["n"] >= 2  # the pooled path actually ran
-        assert not os.path.isfile(w._intent_file())
+        assert not _committed(w)
         if w._consumer is not None:
             w._consumer.close()
         monkeypatch.setattr(FL.pq, "write_table", orig)
@@ -1147,11 +1144,13 @@ def test_fetchloop_staging_pool_error_unlinks_tmps(spark, tmp_path, monkeypatch)
 
 
 def test_fetchloop_recovery_raises_on_vanished_committed_parts(tmp_path):
-    """An intent whose rename pair exists at NEITHER name means the
-    sink lost rows the commit promised (an un-fsynced directory entry
-    after a power cut, or an external job consuming the sink while an
-    intent was pending): recovery must fail loudly, not adopt totals
-    for vanished rows."""
+    """An in-doubt commit whose rename pair exists at NEITHER name means
+    the sink lost rows the commit promised (an un-fsynced directory
+    entry after a power cut, or an external job consuming the sink
+    mid-commit): recovery must fail loudly, not adopt totals for
+    vanished rows.  Here the commit is an ``intent.json`` of the earlier
+    two-file layout (a record's in-doubt case is in
+    tests/test_fetchloop_commit_path.py)."""
     import json as J
 
     state_dir = tmp_path / "s" / "_fetchloop_state"
